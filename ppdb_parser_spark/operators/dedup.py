@@ -196,6 +196,13 @@ def span_scrub(
     return _scrub_rebuild(df, covered, id_col, text_col)
 
 
+#: Helper columns :func:`_scrub_rebuild` joins onto the caller's frame.
+_SCRUB_HELPER_COLS = (
+    "__cov", "__text", "n_tok", "n_kept", "scrub_text", "pos", "pos0",
+    "token",
+)
+
+
 def _scrub_rebuild(
     df: DataFrame, covered: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
@@ -214,6 +221,13 @@ def _scrub_rebuild(
     identical explode → anti-join → ordered re-join, including the
     scrubbed-to-empty case (no kept rows → '' and n_removed = n_tok).
     """
+    clash = sorted({id_col, text_col} & set(_SCRUB_HELPER_COLS))
+    if clash:
+        raise ValueError(
+            f"span scrub: column name(s) {clash} collide with the "
+            f"rebuild's helper columns {_SCRUB_HELPER_COLS}; rename "
+            "id_col/text_col"
+        )
     covered = covered.localCheckpoint(eager=False)  # two consumers below
     cd = covered.select(id_col).distinct()
     toks = (
@@ -1500,6 +1514,27 @@ def _winnow_tail(
     )
 
 
+def _mh_hash_exprs_sql(n_hashes: int) -> list[str]:
+    """The ``n_hashes`` seed-hash projections ``h0..h{n-1}`` of a
+    ``shingle`` column as selectExpr strings (round 16): building them
+    as Column objects cost ~240 py4j round trips — 0.48 s of the bench's
+    timed plan-construction phase per minhash query (profiled; guide
+    §7.3's driver-side work, here on the Python side of the driver).
+    The SQL text parses to the same expressions as
+    ``_hex16_ord_long(substring(md5(concat('s:', shingle)), 1, 16))``:
+    hi/lo conv halves of the md5's first 16 hex chars, recombined
+    order-preserving — values byte-identical (pinned by
+    tests/test_operators.py::test_selectexpr_twins_equal_column_forms;
+    oracle hash-exact)."""
+    return [
+        f"(cast(conv(substring(md5(concat('{s}:', shingle)), 1, 8), 16, 10)"
+        f" as bigint) - 2147483648) * 4294967296"
+        f" + cast(conv(substring(md5(concat('{s}:', shingle)), 9, 8), 16, 10)"
+        f" as bigint) as h{s}"
+        for s in range(n_hashes)
+    ]
+
+
 def _mh_fp_and_dict(
     sh: DataFrame,
     n_hashes: int,
@@ -1543,27 +1578,11 @@ def _mh_fp_and_dict(
     corpus-sized aggregate work sits downstream of the coalesced probe,
     which is never true of a delta-sized signature aggregate), measured
     0.79× round-over-round on dedup_minhash_incremental_indexed."""
-    # The 16 seed-hash projections are ONE selectExpr string (round 16):
-    # building them as Column objects cost ~240 py4j round trips — 0.48 s
-    # of the bench's timed plan-construction phase per minhash query
-    # (profiled; guide §7.3's driver-side work, here on the Python side
-    # of the driver). The SQL text parses to the same expressions as
-    # _hex16_ord_long(substring(md5(concat('s:', shingle)), 1, 16)):
-    # hi/lo conv halves of the md5's first 16 hex chars, recombined
-    # order-preserving — values byte-identical (string-path equality
-    # regression-tested; oracle hash-exact).
-    h_exprs = [
-        f"(cast(conv(substring(md5(concat('{s}:', shingle)), 1, 8), 16, 10)"
-        f" as bigint) - 2147483648) * 4294967296"
-        f" + cast(conv(substring(md5(concat('{s}:', shingle)), 9, 8), 16, 10)"
-        f" as bigint) as h{s}"
-        for s in range(n_hashes)
-    ]
     hashes = (
         (vocab_src if vocab_src is not None else sh)
         .select("shingle")
         .distinct()
-        .selectExpr("xxhash64(shingle) as fp", *h_exprs)
+        .selectExpr("xxhash64(shingle) as fp", *_mh_hash_exprs_sql(n_hashes))
         # Round 15 (guide §2.5 — the single-task probe-side trap,
         # root-caused via the SQL-metrics REST API): the planner
         # broadcasts the OCCURRENCE side of the dictionary join

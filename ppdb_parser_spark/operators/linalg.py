@@ -171,14 +171,12 @@ def jl_project(
     dim_in: int = 64,
     dim_out: int = 16,
     out_col: str = "jl",
-    tier: str = "gemm",
 ) -> DataFrame:
     """Append ``out_col``: the exact int64 signed-JL projection of
     ``vec_col`` onto ``dim_out`` dimensions — out[j] = Σᵢ q(xᵢ)·sign[j][i]
     with q(x) = round(x·1e7) (quantize-once, so the reduction is
     order-independent integer arithmetic, bit-identical in any engine and
-    any partitioning). One narrow map over the scan: NO shuffle, no UDF —
-    dim_out in-plan integer folds per row inside whole-stage codegen.
+    any partitioning). One narrow map over the scan: NO shuffle.
 
     This is a 100 TB *blocking/sketching* primitive, not a fine ranker:
     a 64→16 projection cuts every downstream distance/dot evaluation
@@ -197,89 +195,54 @@ def jl_project(
     draft claimed ≥0.9 top-5 recall at C=20 — falsified by this
     measurement and recorded here per the repo's RECALL.md discipline.
 
-    Overflow bound (ENFORCED in both tiers, the pagerank-wdeg pattern):
+    Overflow bound (ENFORCED, the pagerank-wdeg pattern):
     |out[j]| ≤ dim_in·max|q| — with the same |x| ≤ 37 element bound as
     ``_sem_quant`` the sum stays ≤ 64·3.7e8 ≪ 2⁶³; an out-of-range
     element raises rather than silently wrapping the projection.
 
-    ``tier="gemm"`` (default, round 10): the projection — dim
-    quantizations + dim_out × dim interpreted integer folds per row —
-    runs as a shuffle-free Arrow map (the ``gemm_lsh_bits`` layout: the
-    sign matrix is a literal, so no broadcast context): ``q = exact
-    F.round(x·1e7) replay`` then an exact int64 ``q @ signsᵀ``.
-    Bit-identical output, oracle unchanged; ``"hof"`` keeps the in-plan
-    codegen fold."""
-    if tier == "gemm":
-        dtypes = dict(df.dtypes)
-        in_cols = list(dtypes)
-        out_schema = ", ".join(
-            [f"`{c}` {dtypes[c]}" for c in in_cols]
-            + [f"`{out_col}` array<long>"]
-        )
-        S_rows = jl_signs(dim_in, dim_out)
+    The projection runs as a shuffle-free Arrow map (the
+    ``gemm_lsh_bits`` layout: the sign matrix is a literal, so no
+    broadcast context): ``q = exact F.round(x·1e7) replay`` then an
+    exact int64 ``q @ signsᵀ``. Bit-identical to the DuckDB oracle's
+    :func:`jl_project_sql`."""
+    dtypes = dict(df.dtypes)
+    in_cols = list(dtypes)
+    out_schema = ", ".join(
+        [f"`{c}` {dtypes[c]}" for c in in_cols]
+        + [f"`{out_col}` array<long>"]
+    )
+    S_rows = jl_signs(dim_in, dim_out)
 
-        def project_batches(batches):
-            import numpy as np
-            import pyarrow as pa
+    def project_batches(batches):
+        import numpy as np
+        import pyarrow as pa
 
-            from .similarity import _np_round_half_away_consume
+        from .similarity import _np_round_half_away_consume
 
-            St = np.array(S_rows, dtype=np.int64).T  # dim_in × dim_out
-            d_out = St.shape[1]
-            for rb in batches:
-                n = rb.num_rows
-                if not n:
-                    continue
-                X = arrow_list_to_2d(rb.column(vec_col), np.float64)
-                if np.abs(X).max() > 37.0:
-                    raise ValueError(
-                        "jl_project: embedding element exceeds the "
-                        "int64-safe grid bound (|x| <= 37 at grid 1e7)"
-                    )
-                Qm = _np_round_half_away_consume(X * float(JL_QSCALE))
-                P = Qm @ St
-                out = pa.ListArray.from_arrays(
-                    uniform_list_offsets(n, d_out),
-                    pa.array(P.ravel()),
+        St = np.array(S_rows, dtype=np.int64).T  # dim_in × dim_out
+        d_out = St.shape[1]
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
+                continue
+            X = arrow_list_to_2d(rb.column(vec_col), np.float64)
+            if np.abs(X).max() > 37.0:
+                raise ValueError(
+                    "jl_project: embedding element exceeds the "
+                    "int64-safe grid bound (|x| <= 37 at grid 1e7)"
                 )
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(c) for c in in_cols] + [out],
-                    [*in_cols, out_col],
-                )
+            Qm = _np_round_half_away_consume(X * float(JL_QSCALE))
+            P = Qm @ St
+            out = pa.ListArray.from_arrays(
+                uniform_list_offsets(n, d_out),
+                pa.array(P.ravel()),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(c) for c in in_cols] + [out],
+                [*in_cols, out_col],
+            )
 
-        return df.mapInArrow(project_batches, out_schema)
-    if tier != "hof":
-        raise ValueError(f"tier must be 'gemm' or 'hof', got {tier!r}")
-    signs = F.array(
-        *[
-            F.array(*[F.lit(s) for s in row])
-            for row in jl_signs(dim_in, dim_out)
-        ]
-    )
-    v = F.col(vec_col)
-    q = F.transform(
-        v, lambda x: F.round(x.cast("double") * JL_QSCALE).cast("long")
-    )
-    max_abs = F.aggregate(
-        v,
-        F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
-    )
-    guard = F.assert_true(
-        max_abs <= F.lit(37.0),
-        "jl_project: embedding element exceeds the int64-safe grid "
-        "bound (|x| <= 37 at grid 1e7)",
-    )
-    qg = F.when(guard.isNull(), q)
-    proj = F.transform(
-        signs,
-        lambda srow: F.aggregate(
-            F.zip_with(qg, srow, lambda a, s: a * s),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    return df.withColumn(out_col, proj)
+    return df.mapInArrow(project_batches, out_schema)
 
 
 def jl_project_sql(

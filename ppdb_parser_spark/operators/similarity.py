@@ -74,75 +74,6 @@ def cosine_topk(
     )
 
 
-def fold_dot_cols(
-    df: DataFrame,
-    terms: tuple[tuple[str, str, str], ...],
-    keep_cols: tuple[str, ...],
-) -> DataFrame:
-    """LEFT-FOLD float inner products of array columns as a SHUFFLE-FREE
-    Arrow map — the float-flavor kernel for the single-probe exact scans
-    (VERDICT r10 item 3) and candidate-pair refines, completing the
-    round-10 kernel family for the O(n·dim) maps that have no k factor.
-
-    For each ``(a_col, b_col, out)`` term, emits
-    ``Σ_t a[t]·b[t]`` accumulated dimension-by-dimension — the exact
-    ``((0+t₀)+t₁)+…`` sequence of ``F.aggregate``'s fold in
-    :func:`_dot`, vectorized over rows instead of terms — so values are
-    bit-identical to the in-plan form and every oracle is unchanged.
-    ``a_col == b_col`` computes the sum of squares (:func:`_norm`'s fold;
-    its ``sqrt`` stays in-plan, correctly rounded in both engines).
-
-    Unlike :func:`gemm_assign_cells` there is NO seeds context and NO
-    block exchange: rows stream through the map in scan order, a pure
-    narrow map like the fold it replaces, minus the interpreter (the
-    nested ``aggregate``/``zip_with`` lambda is not whole-stage
-    codegen'd). ``keep_cols`` must carry everything downstream needs —
-    array columns not kept are pruned at the scan.
-
-    Round 15 (guide §4.2): raw Arrow batches — the operand list columns
-    reshape zero-copy (:func:`~..linalg.arrow_list_to_2d`) and the
-    ``keep_cols`` pass through as untouched Arrow arrays instead of a
-    pandas round-trip (which materialized every kept array column as
-    per-row ndarray objects on BOTH crossings)."""
-    dtypes = dict(df.dtypes)
-    in_cols = list(
-        dict.fromkeys(
-            [*keep_cols, *(c for t in terms for c in t[:2])]
-        )
-    )
-    out_schema = ", ".join(
-        [f"`{c}` {dtypes[c]}" for c in keep_cols]
-        + [f"`{out}` double" for _, _, out in terms]
-    )
-
-    def fold_batches(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from .linalg import arrow_list_to_2d
-
-        for rb in batches:
-            n = rb.num_rows
-            if not n:
-                continue
-            arrs = {}
-            for c in dict.fromkeys(c for t in terms for c in t[:2]):
-                arrs[c] = arrow_list_to_2d(rb.column(c), np.float64)
-            outs = []
-            for a_col, b_col, _name in terms:
-                A, B = arrs[a_col], arrs[b_col]
-                acc = np.zeros(n, dtype=np.float64)
-                for t in range(A.shape[1]):
-                    acc += A[:, t] * B[:, t]
-                outs.append(pa.array(acc))
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(c) for c in keep_cols] + outs,
-                [*keep_cols, *(t[2] for t in terms)],
-            )
-
-    return df.select(*in_cols).mapInArrow(fold_batches, out_schema)
-
-
 def cosine_topk_by_id(
     df: DataFrame,
     probe_id: int,
@@ -150,7 +81,6 @@ def cosine_topk_by_id(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    tier: str = "fold",
 ) -> DataFrame:
     """Exact cosine top-k against the row whose ``id_col`` equals
     ``probe_id`` — the probe stays IN-PLAN as a 1-row broadcast context
@@ -162,17 +92,13 @@ def cosine_topk_by_id(
     (one extra scan of a pruned single-row filter — at 100 TB this is a
     parquet min/max-pruned point lookup, not a full pass).
 
-    ``tier="fold"`` (default, MEASURED round 11 — VERDICT r10 item 3):
-    unlike the O(n·cells·dim) assignment maps the kernel family
-    converted, this scan's interpreted work is a single O(dim) fold per
-    row with no k factor, and the in-plan form BEATS the Arrow kernel at
+    The dot and norm are in-plan folds (MEASURED round 11 — VERDICT r10
+    item 3): this scan's interpreted work is a single O(dim) fold per
+    row with no k factor, and the in-plan form BEATS an Arrow kernel at
     every rung (256× ladder, 512k rows: fold 1.22 s vs kernel 3.42 s;
     128k: 0.59 vs 1.03 — the vector's Arrow boundary costs more than
     ~64 interpreted multiplies, and both sides scale O(n·dim) so the
-    ratio cannot invert at 100×). ``tier="kernel"`` routes the dot and
-    norm folds through :func:`fold_dot_cols` (bit-identical values,
-    equivalence-tested) — kept as the A/B tier and for callers stacking
-    MANY probe terms per row, where the boundary amortizes."""
+    ratio cannot invert at 100×)."""
     # limit(1): the id-filter is semantically 1-row (unique ids); the
     # explicit limit makes it PROVABLY 1-row (maxRows=1) so the broadcast
     # context registers as a bounded side in the cartesian plan sweep
@@ -181,32 +107,13 @@ def cosine_topk_by_id(
         _norm(F.col(vec_col)).alias("probe_nrm"),
     ).limit(1)
     j = df.filter(F.col(id_col) != probe_id).crossJoin(F.broadcast(probe_row))
-    if tier == "kernel":
-        folded = fold_dot_cols(
-            j,
-            terms=(
-                (vec_col, "probe_emb", "__dot"),
-                (vec_col, vec_col, "__ssq"),
-            ),
-            keep_cols=(id_col, *keep_cols, "probe_nrm"),
-        )
-        cosine = F.round(
-            F.col("__dot")
-            / (F.sqrt(F.col("__ssq")) * F.col("probe_nrm")),
-            6,
-        )
-        scored = folded
-    elif tier == "fold":
-        cosine = F.round(
-            _dot(F.col(vec_col), F.col("probe_emb"))
-            / (_norm(F.col(vec_col)) * F.col("probe_nrm")),
-            6,
-        )
-        scored = j
-    else:
-        raise ValueError(f"tier must be 'kernel' or 'fold', got {tier!r}")
+    cosine = F.round(
+        _dot(F.col(vec_col), F.col("probe_emb"))
+        / (_norm(F.col(vec_col)) * F.col("probe_nrm")),
+        6,
+    )
     return (
-        scored.select(id_col, *keep_cols, cosine.alias("cosine"))
+        j.select(id_col, *keep_cols, cosine.alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
     )
@@ -221,7 +128,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    assign: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """IVF-style ANN top-k, fully relational — zero driver-side jobs.
@@ -230,26 +136,14 @@ def ivf_topk(
     (deterministic, no k-means iteration). The whole index state — the
     seeds array (with precomputed norms), the probe embedding, and the
     probe's top-``n_probe`` cells — is computed IN-PLAN as one broadcast
-    context row (two 1-row aggregates cross-joined); the main scan then
-    cross-join-broadcasts that row and does per-row argmax cell assignment
-    with JVM higher-order functions over the seeds array.
+    context row (two 1-row aggregates cross-joined).
 
-    Scale shape: narrow map over the scan (O(n_cells) work per row, an
-    array ``transform``/``array_sort`` — linear in cells, unlike a
-    pairwise-comparison expression tree which is O(cells²) and caps at
-    tens of cells), then candidate filter, then TakeOrderedAndProject.
-    The only exchange in the plan is the broadcast of the 1-row context;
-    no shuffle until the final top-k reduce. At 1000 executors this is a
-    single pass over the data with a tiny broadcast — the same shape a
-    production IVF probe uses.
-
-    ``assign="gemm"`` (default) moves the corpus cell assignment onto
-    :func:`gemm_assign_cells` (``dot="float"`` flavor: the kernel
-    replays :func:`_dot`'s left-fold sum dimension-by-dimension, so the
-    cosines — and therefore the oracle — are bit-identical); ``"hof"``
-    keeps the interpreted in-plan argmax (VERDICT r9 weak #1: ~1 ms/row
-    at 512 cells). The probe's own cell ranking stays in-plan — it is
-    one row.
+    The corpus cell assignment runs on :func:`gemm_assign_cells`
+    (``dot="float"`` flavor: the kernel replays :func:`_dot`'s left-fold
+    sum dimension-by-dimension, so the cosines — and therefore the
+    oracle — are bit-identical). The probe's own cell ranking stays
+    in-plan — it is one row. Then candidate filter, then
+    TakeOrderedAndProject.
     """
     seeds = df.filter(F.col(id_col) < n_cells).select(
         F.col(id_col).cast("int").alias("cell_id"),
@@ -300,24 +194,16 @@ def ivf_topk(
     )
 
     base = df.withColumn("__nrm", _norm(F.col(vec_col)))
-    if assign == "gemm":
-        assigned = gemm_assign_cells(
-            base,
-            seeds_row,
-            id_col=id_col,
-            vec_col=vec_col,
-            nrm_col="__nrm",
-            dot="float",
-            extra_cols=tuple(keep_cols),
-            n_blocks=n_blocks,
-        ).crossJoin(F.broadcast(ctx.select("probe_emb", "probe_nrm", "probe_cells")))
-    else:
-        assigned = base.crossJoin(F.broadcast(ctx)).withColumn(
-            "cell_id",
-            F.element_at(_seed_cos(F.col(vec_col), F.col("__nrm")), 1)[
-                "cell_id"
-            ],
-        )
+    assigned = gemm_assign_cells(
+        base,
+        seeds_row,
+        id_col=id_col,
+        vec_col=vec_col,
+        nrm_col="__nrm",
+        dot="float",
+        extra_cols=tuple(keep_cols),
+        n_blocks=n_blocks,
+    ).crossJoin(F.broadcast(ctx.select("probe_emb", "probe_nrm", "probe_cells")))
     cand = assigned.filter(
         F.array_contains(F.col("probe_cells"), F.col("cell_id"))
         & (F.col(id_col) != probe_id)
@@ -342,7 +228,6 @@ def ivf_batch_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    assign: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """Batched IVF ANN: top-``k`` for EVERY probe selected by
@@ -369,13 +254,11 @@ def ivf_batch_topk(
     batch carries a full value-hash DuckDB oracle; assignment argmax and
     per-probe ranking tie-break on cell/vec id.
 
-    ``assign="gemm"`` (default) routes the corpus cell assignment — the
-    dominant O(n·cells) stage — through :func:`gemm_assign_cells`
-    (Arrow/numpy blocks, bit-identical values, oracle unchanged);
-    ``"hof"`` keeps the in-plan nested-HOF argmax, whose per-row
-    interpreter round 8 measured at ~1 ms/row at 512 cells (VERDICT r9
-    weak #1). The probe side stays on the HOF path either way: probes
-    are a ~1% selection, two orders of magnitude off the corpus map."""
+    The corpus cell assignment — the dominant O(n·cells) stage — runs on
+    :func:`gemm_assign_cells` (Arrow/numpy blocks, bit-identical values,
+    oracle unchanged). The probe side stays on the in-plan HOF path:
+    probes are a ~1% selection, two orders of magnitude off the corpus
+    map."""
     from pyspark.sql import Window
 
     seeds = df.filter(F.col(id_col) < n_cells).select(
@@ -410,25 +293,16 @@ def ivf_batch_topk(
         )
 
     base = df.withColumn("__nrm", _grid_norm6(F.col(vec_col)))
-    if assign == "gemm":
-        assigned = gemm_assign_cells(
-            base,
-            seeds_row,
-            id_col=id_col,
-            vec_col=vec_col,
-            nrm_col="__nrm",
-            dot="grid",
-            extra_cols=tuple(keep_cols),
-            n_blocks=n_blocks,
-        )
-    else:
-        j = base.crossJoin(F.broadcast(seeds_row))
-        assigned = j.withColumn(
-            "cell_id",
-            F.element_at(_seed_cos(F.col(vec_col), F.col("__nrm")), 1)[
-                "cell_id"
-            ],
-        ).drop("seeds")
+    assigned = gemm_assign_cells(
+        base,
+        seeds_row,
+        id_col=id_col,
+        vec_col=vec_col,
+        nrm_col="__nrm",
+        dot="grid",
+        extra_cols=tuple(keep_cols),
+        n_blocks=n_blocks,
+    )
 
     probes = (
         df.filter(probe_pred)
@@ -847,32 +721,11 @@ def embedding_dedup_pairs(
     )
 
 
-def _ivf_cell_argmax(emb, nrm):
-    """Nearest-cell id for one row against the broadcast ``seeds``
-    list column — the interpreted (``assign="hof"``) per-row argmax
-    shared by both IVF assignment passes."""
-    return F.element_at(
-        F.array_sort(
-            F.transform(
-                F.col("seeds"),
-                lambda s: F.struct(
-                    (
-                        -F.round(_dot(emb, s["semb"]) / (nrm * s["snorm"]), 6)
-                    ).alias("negcos"),
-                    s["cell_id"].alias("cell_id"),
-                ),
-            )
-        ),
-        1,
-    )["cell_id"]
-
-
 def ivf_build_centroids(
     df: DataFrame,
     n_cells: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """The TRAINING half of :func:`ivf_kmeans_topk`: one relational Lloyd
@@ -907,20 +760,15 @@ def ivf_build_centroids(
         ).alias("seeds")
     )
     base = df.withColumn("__nrm", _norm(F.col(vec_col)))
-    if assign == "gemm":
-        a1 = gemm_assign_cells(
-            base,
-            seeds_row,
-            id_col=id_col,
-            vec_col=vec_col,
-            nrm_col="__nrm",
-            dot="float",
-            n_blocks=n_blocks,
-        ).withColumnRenamed("cell_id", "cell1")
-    else:
-        a1 = base.crossJoin(F.broadcast(seeds_row)).withColumn(
-            "cell1", _ivf_cell_argmax(F.col(vec_col), F.col("__nrm"))
-        )
+    a1 = gemm_assign_cells(
+        base,
+        seeds_row,
+        id_col=id_col,
+        vec_col=vec_col,
+        nrm_col="__nrm",
+        dot="float",
+        n_blocks=n_blocks,
+    ).withColumnRenamed("cell_id", "cell1")
 
     exploded = a1.select(
         "cell1", F.posexplode(F.col(vec_col)).alias("pos", "x")
@@ -1014,7 +862,6 @@ def ivf_search_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    assign: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """The SEARCH half of :func:`ivf_kmeans_topk`: given a centroid
@@ -1031,25 +878,20 @@ def ivf_search_centroids(
     """
     base = df.withColumn("__nrm", _norm(F.col(vec_col)))
     ctx = _ivf_probe_ctx(df, centroids, probe_id, n_probe, id_col, vec_col)
-    if assign == "gemm":
-        a2 = gemm_assign_cells(
-            base,
-            _ivf_seeds_row(centroids),
-            id_col=id_col,
-            vec_col=vec_col,
-            nrm_col="__nrm",
-            dot="float",
-            extra_cols=tuple(keep_cols),
-            n_blocks=n_blocks,
-        ).withColumnRenamed("cell_id", "cell2").crossJoin(
-            F.broadcast(
-                ctx.select("probe_emb", "probe_nrm", "probe_cells")
-            )
+    a2 = gemm_assign_cells(
+        base,
+        _ivf_seeds_row(centroids),
+        id_col=id_col,
+        vec_col=vec_col,
+        nrm_col="__nrm",
+        dot="float",
+        extra_cols=tuple(keep_cols),
+        n_blocks=n_blocks,
+    ).withColumnRenamed("cell_id", "cell2").crossJoin(
+        F.broadcast(
+            ctx.select("probe_emb", "probe_nrm", "probe_cells")
         )
-    else:
-        a2 = base.crossJoin(F.broadcast(ctx)).withColumn(
-            "cell2", _ivf_cell_argmax(F.col(vec_col), F.col("__nrm"))
-        )
+    )
     cand = a2.filter(
         F.array_contains(F.col("probe_cells"), F.col("cell2"))
         & (F.col(id_col) != probe_id)
@@ -1159,7 +1001,6 @@ def ivf_kmeans_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    assign: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """IVF top-k with one relational Lloyd (k-means) refinement step —
@@ -1173,20 +1014,16 @@ def ivf_kmeans_topk(
     (explode → two hash aggregates → broadcast 1-row centroid context →
     narrow map; no driver-side jobs, no Python iteration loop).
 
-    ``assign="gemm"`` (default) routes BOTH corpus assignment passes
-    (seed assignment feeding the centroid recompute, and centroid
-    re-assignment) through :func:`gemm_assign_cells` (``dot="float"``,
-    bit-identical left-fold cosines — oracle unchanged); ``"hof"`` keeps
-    the interpreted per-row argmax. Training via k-means is exactly the
-    workload where the interpreter multiplies: every Lloyd step pays the
-    O(n·cells) map again.
+    BOTH corpus assignment passes (seed assignment feeding the centroid
+    recompute, and centroid re-assignment) run on
+    :func:`gemm_assign_cells` (``dot="float"``, bit-identical left-fold
+    cosines — oracle unchanged).
     """
     centroids = ivf_build_centroids(
         df,
         n_cells=n_cells,
         id_col=id_col,
         vec_col=vec_col,
-        assign=assign,
         n_blocks=n_blocks,
     )
     return ivf_search_centroids(
@@ -1198,7 +1035,6 @@ def ivf_kmeans_topk(
         id_col=id_col,
         vec_col=vec_col,
         keep_cols=keep_cols,
-        assign=assign,
         n_blocks=n_blocks,
     )
 
@@ -1416,9 +1252,9 @@ def gemm_assign_cells(
 ) -> DataFrame:
     """Coarse-cell ASSIGNMENT as an Arrow/numpy block kernel — the
     :func:`semantic_dedup_gemm` layout generalized to the IVF family's
-    two arithmetic flavors, producing values BIT-IDENTICAL to the
-    nested-HOF ``array_sort(transform(...))`` argmax it replaces (so the
-    DuckDB oracles of every ``sim_ivf_*`` query are unchanged).
+    two arithmetic flavors, producing values BIT-IDENTICAL to an in-plan
+    nested-HOF ``array_sort(transform(...))`` argmax (so the DuckDB
+    oracles of every ``sim_ivf_*`` query apply).
 
     Why: nested higher-order functions are not whole-stage-codegen'd;
     round 8 measured the interpreted per-row argmax at ~1 ms/row at 512
@@ -1466,12 +1302,12 @@ def gemm_assign_cells(
 
     Zero-norm mirror (ADVICE r10 medium): a zero-norm row or seed makes
     the cosine denominator 0. The engine session runs Spark 4's default
-    ``spark.sql.ansi.enabled=true``, under which the HOF tier's divide
-    RAISES ``DIVIDE_BY_ZERO`` (verified in
-    tests/test_operators.py::test_gemm_assign_nan_mirror) — it never
-    reaches NaN ordering. The kernel mirrors that contract loudly: any
-    zero denominator in a block raises ``ValueError`` before the argmax,
-    so an uninitialized or NaN-ordered assignment can never be emitted."""
+    ``spark.sql.ansi.enabled=true``, under which an in-plan cosine
+    divide RAISES ``DIVIDE_BY_ZERO`` — it never reaches NaN ordering.
+    The kernel mirrors that contract loudly (pinned in
+    tests/test_operators.py::test_gemm_assign_nan_mirror): any zero
+    denominator in a block raises ``ValueError`` before the argmax, so
+    an uninitialized or NaN-ordered assignment can never be emitted."""
     dtypes = dict(df.dtypes)
     cols = [id_col, vec_col, nrm_col, *extra_cols]
     out_schema = ", ".join(
@@ -1556,12 +1392,12 @@ def gemm_assign_cells(
                     num = acc
                 den = na[:, None] * sn[None, :]
                 if n and not den.all():
-                    # ANSI mirror: the in-plan HOF tier raises
+                    # ANSI mirror: an in-plan cosine divide raises
                     # DIVIDE_BY_ZERO on a zero cosine denominator
                     # (zero-norm row or seed) — never NaN-orders
                     raise ValueError(
                         "gemm_assign_cells: zero cosine denominator "
-                        "(zero-norm vector or seed); the HOF tier "
+                        "(zero-norm vector or seed); an in-plan divide "
                         "raises DIVIDE_BY_ZERO here under ANSI"
                     )
                 C = num / den
@@ -1601,12 +1437,12 @@ def gemm_lsh_bits(
 ) -> DataFrame:
     """Hyperplane sign bits as an Arrow/numpy map — the third member of
     the round-10 kernel family (:func:`gemm_assign_cells`,
-    :func:`pq_encode`'s gemm tier), and the CHEAPEST: the planes are
-    compile-time literals (``lsh_planes`` output), so unlike the cell/
-    code kernels no broadcast seeds context and NO SHUFFLE is needed —
-    rows stream through ``mapInArrow`` in scan order, a pure narrow map
-    like the HOF form it replaces, minus the interpreter (plane count ×
-    dim per-term ``F.round`` BigDecimals per row).
+    :func:`pq_encode`), and the CHEAPEST: the planes are compile-time
+    literals (``lsh_planes`` output), so unlike the cell/code kernels no
+    broadcast seeds context and NO SHUFFLE is needed — rows stream
+    through ``mapInArrow`` in scan order, a pure narrow map with no
+    interpreter (an in-plan form pays plane count × dim per-term
+    ``F.round`` BigDecimals per row).
 
     bit i = ``[Σ round(x·h_i·1e9) ≥ 0]`` — the exact int64 sign of
     :func:`_grid_dot`, replicated termwise by :func:`_np_round_half_away`,
@@ -1668,7 +1504,6 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    encode: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """Product-quantization encoder (Jégou, Douze & Schmid, TPAMI 2011
@@ -1685,22 +1520,15 @@ def pq_encode(
     cells when needed). Distances are argmin'd on the int64 PQ_GRID, ties
     broken on centroid id, so codes are bit-reproducible cross-engine.
 
-    Plan: 1-row broadcast of the codebook; encoding is a narrow in-row map
-    (m · n_centroids · dim/m grid-dot products per row), no shuffle.
-
-    ``encode="gemm"`` (default, round 10): the per-row code assignment —
-    O(n · centroids · dim) with a PER-TERM ``F.round`` BigDecimal, the
-    most expensive interpreter class in the repo (the grid flavor of
-    VERDICT r9 weak #1) — runs as Arrow/numpy blocks, the
-    :func:`gemm_assign_cells` layout applied to squared-distance argmin.
-    EASIER exactness story than the cosine kernels: the argmin compares
-    exact int64 grid distances (``Σ round((x−y)²·1e9)`` via
-    :func:`_np_round_half_away`, bit-identical to :func:`_grid_sum`), so
-    ties resolve by integer equality + first-index = smallest centroid
-    id — no float rounding anywhere near the decision. One corpus block
-    exchange buys the interpreter's removal; oracles unchanged.
-    ``encode="hof"`` keeps the in-plan narrow map (zero shuffle — the
-    A/B baseline).
+    Plan: the per-row code assignment — O(n · centroids · dim) grid
+    distances — runs as Arrow/numpy blocks against a 1-row broadcast
+    codebook, the :func:`gemm_assign_cells` layout applied to
+    squared-distance argmin. The argmin compares exact int64 grid
+    distances (``Σ round((x−y)²·1e9)`` via :func:`_np_round_half_away`,
+    bit-identical to :func:`_grid_sum`), so ties resolve by integer
+    equality + first-index = smallest centroid id — no float rounding
+    anywhere near the decision. The one shuffle is the corpus block
+    exchange.
 
     Returns (id_col, *keep_cols, codes array<int>, vnorm).
     """
@@ -1720,129 +1548,99 @@ def pq_encode(
         ).alias("seeds")
     )
 
-    if encode == "gemm":
-        dtypes = dict(df.dtypes)
-        cols = [id_col, *keep_cols, vec_col]
-        out_schema = ", ".join(
-            [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols)]
-            + ["codes array<int>", "vnorm double"]
-        )
-        proj = df.select(*cols).withColumn(
-            "__vnorm", _grid_norm6(F.col(vec_col))
-        )
-        n_blocks = kernel_block_count(proj, n_blocks)
-        blocks = (
-            proj
-            .withColumn(
-                "__blk",
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)),
-            )
-            .groupBy("__blk")
-            .agg(
-                F.collect_list(
-                    F.struct(*cols, "__vnorm")
-                ).alias("ablock")
-            )
-        )
-        ctx = blocks.crossJoin(F.broadcast(seeds_row))
-
-        # round 16 (guide §4.2, VERDICT r15 #3): raw Arrow batches —
-        # zero-copy block decomposition in, offsets-built codes column
-        # out; per-subspace int64 grid argmin unchanged.
-        def encode_batches(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            from .linalg import (
-                arrow_list_to_2d,
-                block_layout,
-                context_entries,
-                uniform_list_offsets,
-            )
-
-            for rb in batches:
-                if not rb.num_rows:
-                    continue
-                entries, offs = block_layout(rb.column("ablock"))
-                seeds = context_entries(rb.column("seeds"))
-                order = np.argsort(
-                    seeds.field("cell_id").to_numpy(), kind="stable"
-                )
-                S = arrow_list_to_2d(seeds.field("semb"), np.float64)[
-                    order
-                ]
-                Qall = arrow_list_to_2d(
-                    entries.field(vec_col), np.float64
-                )
-                base = int(offs[0])
-                total = int(offs[-1]) - base
-                codes_all = np.empty((total, m), dtype=np.int32)
-                nc = S.shape[0]
-                step = max(1, 4_000_000 // max(1, nc * sub))
-                for bi in range(len(offs) - 1):
-                    lo_g, hi_g = int(offs[bi]), int(offs[bi + 1])
-                    Q = Qall[lo_g:hi_g]
-                    n = hi_g - lo_g
-                    out = codes_all[lo_g - base : hi_g - base]
-                    for s in range(m):
-                        Qs = Q[:, s * sub : (s + 1) * sub]
-                        Ss = S[:, s * sub : (s + 1) * sub]
-                        for lo in range(0, n, step):
-                            diff = (
-                                Qs[lo : lo + step, None, :]
-                                - Ss[None, :, :]
-                            )
-                            t = _np_round_half_away((diff * diff) * 1e9)
-                            # exact int64 distances: argmin's first-min
-                            # = smallest centroid id (seeds sorted, ids
-                            # contiguous)
-                            out[lo : lo + step, s] = np.argmin(
-                                t.sum(axis=2), axis=1
-                            )
-                out_rows = entries.slice(base, total)
-                codes_col = pa.ListArray.from_arrays(
-                    uniform_list_offsets(total, m),
-                    pa.array(codes_all.ravel()),
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        out_rows.field(c)
-                        for c in (id_col, *keep_cols)
-                    ]
-                    + [codes_col, out_rows.field("__vnorm")],
-                    [id_col, *keep_cols, "codes", "vnorm"],
-                )
-
-        return ctx.mapInArrow(encode_batches, out_schema)
-    if encode != "hof":
-        raise ValueError(f"encode must be 'gemm' or 'hof', got {encode!r}")
-
-    def _code_at(vec: Column, s: Column) -> Column:
-        subv = F.slice(vec, s * sub + 1, sub)
-        ranked = F.array_sort(
-            F.transform(
-                F.col("seeds"),
-                lambda c: F.struct(
-                    _grid_sum(
-                        subv,
-                        F.slice(c["semb"], s * sub + 1, sub),
-                        lambda x, y: (x - y) * (x - y),
-                    ).alias("d2g"),
-                    c["cell_id"].alias("cell_id"),
-                ),
-            )
-        )
-        return F.element_at(ranked, 1)["cell_id"]
-
-    return df.crossJoin(F.broadcast(seeds_row)).select(
-        id_col,
-        *keep_cols,
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: _code_at(F.col(vec_col), s),
-        ).alias("codes"),
-        _grid_norm6(F.col(vec_col)).alias("vnorm"),
+    dtypes = dict(df.dtypes)
+    cols = [id_col, *keep_cols, vec_col]
+    out_schema = ", ".join(
+        [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols)]
+        + ["codes array<int>", "vnorm double"]
     )
+    proj = df.select(*cols).withColumn(
+        "__vnorm", _grid_norm6(F.col(vec_col))
+    )
+    n_blocks = kernel_block_count(proj, n_blocks)
+    blocks = (
+        proj
+        .withColumn(
+            "__blk",
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)),
+        )
+        .groupBy("__blk")
+        .agg(
+            F.collect_list(
+                F.struct(*cols, "__vnorm")
+            ).alias("ablock")
+        )
+    )
+    ctx = blocks.crossJoin(F.broadcast(seeds_row))
+
+    # round 16 (guide §4.2, VERDICT r15 #3): raw Arrow batches —
+    # zero-copy block decomposition in, offsets-built codes column
+    # out; per-subspace int64 grid argmin unchanged.
+    def encode_batches(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        from .linalg import (
+            arrow_list_to_2d,
+            block_layout,
+            context_entries,
+            uniform_list_offsets,
+        )
+
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            entries, offs = block_layout(rb.column("ablock"))
+            seeds = context_entries(rb.column("seeds"))
+            order = np.argsort(
+                seeds.field("cell_id").to_numpy(), kind="stable"
+            )
+            S = arrow_list_to_2d(seeds.field("semb"), np.float64)[
+                order
+            ]
+            Qall = arrow_list_to_2d(
+                entries.field(vec_col), np.float64
+            )
+            base = int(offs[0])
+            total = int(offs[-1]) - base
+            codes_all = np.empty((total, m), dtype=np.int32)
+            nc = S.shape[0]
+            step = max(1, 4_000_000 // max(1, nc * sub))
+            for bi in range(len(offs) - 1):
+                lo_g, hi_g = int(offs[bi]), int(offs[bi + 1])
+                Q = Qall[lo_g:hi_g]
+                n = hi_g - lo_g
+                out = codes_all[lo_g - base : hi_g - base]
+                for s in range(m):
+                    Qs = Q[:, s * sub : (s + 1) * sub]
+                    Ss = S[:, s * sub : (s + 1) * sub]
+                    for lo in range(0, n, step):
+                        diff = (
+                            Qs[lo : lo + step, None, :]
+                            - Ss[None, :, :]
+                        )
+                        t = _np_round_half_away((diff * diff) * 1e9)
+                        # exact int64 distances: argmin's first-min
+                        # = smallest centroid id (seeds sorted, ids
+                        # contiguous)
+                        out[lo : lo + step, s] = np.argmin(
+                            t.sum(axis=2), axis=1
+                        )
+            out_rows = entries.slice(base, total)
+            codes_col = pa.ListArray.from_arrays(
+                uniform_list_offsets(total, m),
+                pa.array(codes_all.ravel()),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    out_rows.field(c)
+                    for c in (id_col, *keep_cols)
+                ]
+                + [codes_col, out_rows.field("__vnorm")],
+                [id_col, *keep_cols, "codes", "vnorm"],
+            )
+
+    return ctx.mapInArrow(encode_batches, out_schema)
 
 
 def pq_topk(
@@ -2053,7 +1851,6 @@ def pq_search_codebook(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    encode_tier: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """The SEARCH half of :func:`pq_kmeans_topk`: given a codebook
@@ -2062,8 +1859,7 @@ def pq_search_codebook(
     the probe, and exact-rerank the top ``rerank`` candidates to the
     final top-k. The whole ≤ m·n_centroids-row codebook collapses to a
     1-row broadcast context; the corpus is never shuffled — the one wide
-    stage is the narrow encode/ADC map over the scan (Arrow kernel on
-    the default tier).
+    stage is the narrow encode/ADC map over the scan (an Arrow kernel).
     """
     sub = dim // m
     cents_row = codebook.agg(
@@ -2080,161 +1876,110 @@ def pq_search_codebook(
     ).limit(1)  # provably 1-row broadcast context (see cosine_topk_by_id)
     ctx = probe_row.crossJoin(cents_row)
 
-    def _sub_cents(s: Column) -> Column:
-        return F.filter(F.col("cents"), lambda c: c["cs"] == s)
+    base = df.withColumn("vnorm", _grid_norm6(F.col(vec_col)))
+    dtypes = dict(base.dtypes)
+    cols = [id_col, *keep_cols, vec_col, "vnorm"]
+    out_schema = ", ".join(
+        [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols, "vnorm")]
+        + ["adc_dot_grid long"]
+    )
+    proj = base.select(*cols)
+    n_blocks = kernel_block_count(proj, n_blocks)
+    blocks = (
+        proj
+        .withColumn(
+            "__blk",
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)),
+        )
+        .groupBy("__blk")
+        .agg(F.collect_list(F.struct(*cols)).alias("ablock"))
+    )
+    kctx = blocks.crossJoin(F.broadcast(ctx))
+    sub_l, m_l, vc = sub, m, vec_col
 
-    def _code_at(vec: Column, s: Column) -> Column:
-        subv = F.slice(vec, s * sub + 1, sub)
-        ranked = F.array_sort(
-            F.transform(
-                _sub_cents(s),
-                lambda c: F.struct(
-                    _grid_sum(
-                        subv, c["cvec"], lambda x, y: (x - y) * (x - y)
-                    ).alias("d2g"),
-                    c["cc"].alias("cc"),
-                ),
+    # round 16 (guide §4.2, VERDICT r15 #3): raw Arrow batches; the
+    # codebook context also parses ONCE per batch (the pandas form
+    # rebuilt the by-subspace dict per block row). Same int64 grid
+    # distances, same tdots, same adc sums.
+    def adc_batches(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        from .linalg import (
+            arrow_list_to_2d,
+            block_layout,
+            context_entries,
+        )
+
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            entries, offs = block_layout(rb.column("ablock"))
+            cents = context_entries(rb.column("cents"))
+            qv = np.asarray(
+                rb.column("q")[0].as_py(), dtype=np.float64
             )
-        )
-        return F.element_at(ranked, 1)["cc"]
-
-    def _adc_term(s: Column, code: Column) -> Column:
-        hit = F.filter(
-            F.col("cents"), lambda c: (c["cs"] == s) & (c["cc"] == code)
-        )
-        return _grid_dot(
-            F.slice(F.col("q"), s * sub + 1, sub),
-            F.element_at(hit, 1)["cvec"],
-        )
-
-    if encode_tier == "gemm":
-        base = df.withColumn("vnorm", _grid_norm6(F.col(vec_col)))
-        dtypes = dict(base.dtypes)
-        cols = [id_col, *keep_cols, vec_col, "vnorm"]
-        out_schema = ", ".join(
-            [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols, "vnorm")]
-            + ["adc_dot_grid long"]
-        )
-        proj = base.select(*cols)
-        n_blocks = kernel_block_count(proj, n_blocks)
-        blocks = (
-            proj
-            .withColumn(
-                "__blk",
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)),
+            cs = cents.field("cs").to_numpy()
+            cc = cents.field("cc").to_numpy()
+            Cfull = arrow_list_to_2d(
+                cents.field("cvec"), np.float64
             )
-            .groupBy("__blk")
-            .agg(F.collect_list(F.struct(*cols)).alias("ablock"))
-        )
-        kctx = blocks.crossJoin(F.broadcast(ctx))
-        sub_l, m_l, vc = sub, m, vec_col
-
-        # round 16 (guide §4.2, VERDICT r15 #3): raw Arrow batches; the
-        # codebook context also parses ONCE per batch (the pandas form
-        # rebuilt the by-subspace dict per block row). Same int64 grid
-        # distances, same tdots, same adc sums.
-        def adc_batches(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            from .linalg import (
-                arrow_list_to_2d,
-                block_layout,
-                context_entries,
-            )
-
-            for rb in batches:
-                if not rb.num_rows:
-                    continue
-                entries, offs = block_layout(rb.column("ablock"))
-                cents = context_entries(rb.column("cents"))
-                qv = np.asarray(
-                    rb.column("q")[0].as_py(), dtype=np.float64
-                )
-                cs = cents.field("cs").to_numpy()
-                cc = cents.field("cc").to_numpy()
-                Cfull = arrow_list_to_2d(
-                    cents.field("cvec"), np.float64
-                )
-                # per-subspace cc-sorted centroid matrices + the probe's
-                # per-(subspace, centroid) dot table — pure context,
-                # hoisted out of the block loop
-                C_by_s, tdots_by_s = [], []
-                for s in range(m_l):
-                    rows = np.nonzero(cs == s)[0]
-                    rows = rows[np.argsort(cc[rows], kind="stable")]
-                    C = Cfull[rows]
-                    qs = qv[s * sub_l : (s + 1) * sub_l]
-                    C_by_s.append(C)
-                    tdots_by_s.append(
-                        _np_round_half_away((qs[None, :] * C) * 1e9).sum(
-                            axis=1
-                        )
+            # per-subspace cc-sorted centroid matrices + the probe's
+            # per-(subspace, centroid) dot table — pure context,
+            # hoisted out of the block loop
+            C_by_s, tdots_by_s = [], []
+            for s in range(m_l):
+                rows = np.nonzero(cs == s)[0]
+                rows = rows[np.argsort(cc[rows], kind="stable")]
+                C = Cfull[rows]
+                qs = qv[s * sub_l : (s + 1) * sub_l]
+                C_by_s.append(C)
+                tdots_by_s.append(
+                    _np_round_half_away((qs[None, :] * C) * 1e9).sum(
+                        axis=1
                     )
-                Qall = arrow_list_to_2d(entries.field(vc), np.float64)
-                base_o = int(offs[0])
-                total = int(offs[-1]) - base_o
-                adc_all = np.zeros(total, dtype=np.int64)
-                for bi in range(len(offs) - 1):
-                    lo_g, hi_g = int(offs[bi]), int(offs[bi + 1])
-                    Q = Qall[lo_g:hi_g]
-                    out = adc_all[lo_g - base_o : hi_g - base_o]
-                    for s in range(m_l):
-                        C = C_by_s[s]
-                        Qs = Q[:, s * sub_l : (s + 1) * sub_l]
-                        diff = Qs[:, None, :] - C[None, :, :]
-                        D = _np_round_half_away(
-                            (diff * diff) * 1e9
-                        ).sum(axis=2)
-                        out += tdots_by_s[s][np.argmin(D, axis=1)]
-                out_rows = entries.slice(base_o, total)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        out_rows.field(c)
-                        for c in (id_col, *keep_cols, "vnorm")
-                    ]
-                    + [pa.array(adc_all)],
-                    [id_col, *keep_cols, "vnorm", "adc_dot_grid"],
                 )
+            Qall = arrow_list_to_2d(entries.field(vc), np.float64)
+            base_o = int(offs[0])
+            total = int(offs[-1]) - base_o
+            adc_all = np.zeros(total, dtype=np.int64)
+            for bi in range(len(offs) - 1):
+                lo_g, hi_g = int(offs[bi]), int(offs[bi + 1])
+                Q = Qall[lo_g:hi_g]
+                out = adc_all[lo_g - base_o : hi_g - base_o]
+                for s in range(m_l):
+                    C = C_by_s[s]
+                    Qs = Q[:, s * sub_l : (s + 1) * sub_l]
+                    diff = Qs[:, None, :] - C[None, :, :]
+                    D = _np_round_half_away(
+                        (diff * diff) * 1e9
+                    ).sum(axis=2)
+                    out += tdots_by_s[s][np.argmin(D, axis=1)]
+            out_rows = entries.slice(base_o, total)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    out_rows.field(c)
+                    for c in (id_col, *keep_cols, "vnorm")
+                ]
+                + [pa.array(adc_all)],
+                [id_col, *keep_cols, "vnorm", "adc_dot_grid"],
+            )
 
-        scored = (
-            kctx.mapInArrow(adc_batches, out_schema)
-            .crossJoin(
-                F.broadcast(ctx.select("q", "qnorm"))
-            )
-            .withColumn(
-                "adc_cosine",
-                F.round(
-                    (F.col("adc_dot_grid") / float(PQ_GRID))
-                    / (F.col("vnorm") * F.col("qnorm")),
-                    6,
-                ),
-            )
-            .filter(F.col(id_col) != probe_id)
+    scored = (
+        kctx.mapInArrow(adc_batches, out_schema)
+        .crossJoin(
+            F.broadcast(ctx.select("q", "qnorm"))
         )
-    else:
-        scored = (
-            df.withColumn("vnorm", _grid_norm6(F.col(vec_col)))
-            .crossJoin(F.broadcast(ctx))
-            .withColumn(
-                "adc_dot_grid",
-                F.aggregate(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    F.lit(0).cast("long"),
-                    lambda acc, s: acc
-                    + _adc_term(s, _code_at(F.col(vec_col), s)),
-                ),
-            )
-            .withColumn(
-                "adc_cosine",
-                F.round(
-                    (F.col("adc_dot_grid") / float(PQ_GRID))
-                    / (F.col("vnorm") * F.col("qnorm")),
-                    6,
-                ),
-            )
-            .filter(F.col(id_col) != probe_id)
+        .withColumn(
+            "adc_cosine",
+            F.round(
+                (F.col("adc_dot_grid") / float(PQ_GRID))
+                / (F.col("vnorm") * F.col("qnorm")),
+                6,
+            ),
         )
+        .filter(F.col(id_col) != probe_id)
+    )
     cands = scored.select(
         id_col, *keep_cols, "adc_cosine", "q", "qnorm", "vnorm"
     ).orderBy(F.desc("adc_cosine"), F.asc(id_col)).limit(rerank)
@@ -2530,7 +2275,6 @@ def pq_kmeans_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    encode_tier: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """:func:`pq_topk` with one relational Lloyd refinement of every
@@ -2549,17 +2293,14 @@ def pq_kmeans_topk(
     as a 1-row broadcast context. No driver loops — more Lloyd steps
     would unroll the same stage pattern.
 
-    ``encode_tier="gemm"`` (default, round 10): the corpus RE-ENCODE +
-    ADC scan against the trained codebook — per row, m × centroids
-    interpreted grid sums for the argmin PLUS an O(centroids) in-plan
-    array filter per ADC term — runs as one Arrow block kernel that
-    emits ``adc_dot_grid`` directly (exact int64 distances for the
-    argmin, first-min = smallest centroid id over the cc-sorted
-    codebook — trained codebooks may drop empty clusters, so ids are
-    sorted, not assumed contiguous; exact int64 q·centroid grid dots
-    for the ADC terms). The stage-1 seed encode already rides
-    :func:`pq_encode`'s kernel. ``"hof"`` keeps the in-plan map.
-    Values bit-identical — oracle unchanged.
+    The corpus RE-ENCODE + ADC scan against the trained codebook runs as
+    one Arrow block kernel that emits ``adc_dot_grid`` directly (exact
+    int64 distances for the argmin, first-min = smallest centroid id
+    over the cc-sorted codebook — trained codebooks may drop empty
+    clusters, so ids are sorted, not assumed contiguous; exact int64
+    q·centroid grid dots for the ADC terms). The stage-1 seed encode
+    rides :func:`pq_encode`'s kernel. Values bit-identical — oracle
+    unchanged.
     """
     codebook = pq_build_codebook(
         df,
@@ -2581,7 +2322,6 @@ def pq_kmeans_topk(
         id_col=id_col,
         vec_col=vec_col,
         keep_cols=keep_cols,
-        encode_tier=encode_tier,
         n_blocks=n_blocks,
     )
 
@@ -2604,7 +2344,6 @@ def _lsh_band_candidates(
     id_col: str,
     vec_col: str,
     dim: int,
-    sig_tier: str = "gemm",
     delta_min_id: int | None = None,
 ) -> DataFrame:
     """Grid-exact hyperplane-LSH candidate generation shared by the
@@ -2616,11 +2355,9 @@ def _lsh_band_candidates(
     100 TB the candidate exchange shrinks ~30×). Returns distinct
     (id_a, id_b) with id_a < id_b.
 
-    ``sig_tier="gemm"`` (default, round 10): the signature map —
-    n_planes × dim per-term ``F.round`` interpreter work per row — runs
-    via :func:`gemm_lsh_bits` (shuffle-free narrow Arrow map, exact
-    int64 signs, identical buckets → oracles unchanged); ``"hof"``
-    keeps the in-plan form.
+    The signature map — n_planes × dim grid products per row — runs via
+    :func:`gemm_lsh_bits` (shuffle-free narrow Arrow map, exact int64
+    signs).
 
     Pair dedup (round 12): a pair colliding in k bands used to be
     emitted k times and collapsed by ``.distinct()`` — a second
@@ -2644,7 +2381,7 @@ def _lsh_band_candidates(
     refine ran 2× SLOWER than the distinct form until this moved the
     exchange from the 4 M-row pair stream to the 16 k-row banded side)."""
     sig = _band_sig_relation(
-        df, n_planes, n_bands, seed, id_col, vec_col, dim, sig_tier
+        df, n_planes, n_bands, seed, id_col, vec_col, dim
     )
     return _first_match_pairs(
         sig, n_bands, n_planes // n_bands, id_col, delta_min_id=delta_min_id
@@ -2659,7 +2396,6 @@ def _band_sig_relation(
     id_col: str,
     vec_col: str,
     dim: int,
-    sig_tier: str = "gemm",
 ) -> DataFrame:
     """(id, vec, band0..band{n_bands-1}) signature relation — the
     grid-exact hyperplane bits grouped into band bit-strings, shared by
@@ -2667,47 +2403,22 @@ def _band_sig_relation(
     :func:`lsh_banded_sigs`."""
     planes = lsh_planes(n_planes, dim, seed)
     bits_per_band = n_planes // n_bands
-    if sig_tier == "gemm":
-        sigb = gemm_lsh_bits(
-            df, planes, id_col=id_col, vec_col=vec_col
-        )
-        band_cols = [
-            F.concat_ws(
-                "",
-                *[
-                    F.get(F.col("bits"), b * bits_per_band + j).cast(
-                        "string"
-                    )
-                    for j in range(bits_per_band)
-                ],
-            ).alias(f"band{b}")
-            for b in range(n_bands)
-        ]
-        sig = sigb.select(id_col, vec_col, *band_cols)
-    else:
-        bit_cols = [
-            F.when(
-                _grid_dot(F.col(vec_col), F.array(*[F.lit(x) for x in p]))
-                >= 0,
-                1,
-            )
-            .otherwise(0)
-            .alias(f"bit{i}")
-            for i, p in enumerate(planes)
-        ]
-        sig = df.select(F.col(id_col), F.col(vec_col), *bit_cols)
-        band_cols = [
-            F.concat_ws(
-                "",
-                *[
-                    F.col(f"bit{b * bits_per_band + j}")
-                    for j in range(bits_per_band)
-                ],
-            ).alias(f"band{b}")
-            for b in range(n_bands)
-        ]
-        sig = sig.select(id_col, vec_col, *band_cols)
-    return sig
+    sigb = gemm_lsh_bits(
+        df, planes, id_col=id_col, vec_col=vec_col
+    )
+    band_cols = [
+        F.concat_ws(
+            "",
+            *[
+                F.get(F.col("bits"), b * bits_per_band + j).cast(
+                    "string"
+                )
+                for j in range(bits_per_band)
+            ],
+        ).alias(f"band{b}")
+        for b in range(n_bands)
+    ]
+    return sigb.select(id_col, vec_col, *band_cols)
 
 
 def _first_match_pairs(
@@ -2846,7 +2557,6 @@ def lsh_banded_sigs(
     vec_col: str = "embedding",
     *,
     dim: int,
-    sig_tier: str = "gemm",
 ) -> DataFrame:
     """The PERSISTABLE LSH signature index: (id, psig, band, band_sig)
     rows — n·n_bands narrow rows per corpus, psig one int64 for ≤ 62-bit
@@ -2854,10 +2564,10 @@ def lsh_banded_sigs(
     this relation through the S5 sink means a delta-ingest batch never
     re-signs the corpus — it signs only the delta and joins against the
     loaded index (:func:`lsh_pairs_from_index`). Grid-exact projections
-    (`gemm_lsh_bits` tier by default), so the persisted signatures equal
-    the freshly-computed ones bit-for-bit."""
+    (:func:`gemm_lsh_bits`), so the persisted signatures equal the
+    freshly-computed ones bit-for-bit."""
     sig = _band_sig_relation(
-        df, n_planes, n_bands, seed, id_col, vec_col, dim, sig_tier
+        df, n_planes, n_bands, seed, id_col, vec_col, dim
     )
     return _banded_relation(sig, n_bands, n_planes // n_bands, id_col)
 
@@ -2918,8 +2628,7 @@ def gemm_pair_cosine_refine(
     sf0.1 (1.79 M candidate pairs × dim 64): `sim_lsh_pairs_checked`
     10.4 → ~3.5 s, `sim_lsh_jl_screened_pairs` 9.7 → ~3.5 s min-of-3.
 
-    Exactness contract (DuckDB oracles unchanged, hof tier kept as the
-    A/B twin):
+    Exactness contract (DuckDB oracles unchanged):
 
     - per-term ``round(va_i·vb_i·1e9)`` replicated by
       :func:`_np_round_half_away` with the in-plan parenthesization
@@ -2928,21 +2637,19 @@ def gemm_pair_cosine_refine(
       divides and the ``na·nb`` product are correctly rounded in both
       engines; round-6 via :func:`_np_round6` (bit-identical to
       ``F.round``, Decimal fallback at the midpoint guard band).
-    - zero-norm mirror (probed in this session's ANSI mode, pinned in
+    - zero-norm mirror (pinned in
       tests/test_operators.py::test_pair_refine_gemm_equals_hof): the
       engine runs Spark 4's default ``spark.sql.ansi.enabled=true``,
-      under which the in-plan tier's cosine divide RAISES
-      ``DIVIDE_BY_ZERO`` on a zero-norm pair — it never reaches a
-      NaN/Inf round. The kernel raises ``ValueError`` on the same
-      input class (the :func:`gemm_assign_cells` convention), so the
-      two tiers agree on EVERY input — both succeed bit-identically or
-      both fail loudly (the agreement ADVICE r11 #2 asks for).
+      under which an in-plan cosine divide RAISES ``DIVIDE_BY_ZERO`` on
+      a zero-norm pair — it never reaches a NaN/Inf round. The kernel
+      raises ``ValueError`` on the same input class (the
+      :func:`gemm_assign_cells` convention), so it fails as loudly
+      (ADVICE r11 #2).
 
     Row chunking caps the elementwise product tensor at ~32 MB per step
     regardless of Arrow batch size or dim; memory per task is bounded by
     the batch (``spark.sql.execution.arrow.maxRecordsPerBatch``), not
-    the corpus, so the operator's 100 TB shape is unchanged from the hof
-    form it replaces.
+    the corpus, so the operator keeps a narrow map's 100 TB shape.
 
     Round 15 (guide §4.2): the kernel consumes RAW ARROW BATCHES
     (``mapInArrow``) instead of pandas frames — a fixed-width Arrow
@@ -3000,11 +2707,11 @@ def gemm_pair_cosine_refine(
                     acc += A[:, t] * B[:, t]
                 num = acc
             if not den.all():
-                # ANSI mirror: the in-plan tier raises DIVIDE_BY_ZERO
+                # ANSI mirror: an in-plan divide raises DIVIDE_BY_ZERO
                 # on a zero cosine denominator (zero-norm vector)
                 raise ValueError(
                     "gemm_pair_cosine_refine: zero cosine denominator "
-                    "(zero-norm vector); the hof tier raises "
+                    "(zero-norm vector); an in-plan divide raises "
                     "DIVIDE_BY_ZERO here under ANSI"
                 )
             cos = num / den
@@ -3032,12 +2739,11 @@ def gemm_pair_cosine_refine(
 def gemm_jl_screen(
     pairs: DataFrame, bound: int, *, id_type: str
 ) -> DataFrame:
-    """The integer JL distance screen as an Arrow/numpy narrow map —
-    kernel twin of the in-plan ``Σ(jlaⱼ−jlbⱼ)² ≤ bound`` DECIMAL fold
-    (the screen needs 38-digit arithmetic because the ENFORCED |element|
-    ≤ 37 grid bound allows d² sums up to ~2.3e21 — past int64; the
-    decimal fold is therefore interpreted per pair, the exact class the
-    kernel family eliminates).
+    """The integer JL distance screen ``Σ(jlaⱼ−jlbⱼ)² ≤ bound`` as an
+    Arrow/numpy narrow map (exact integer decisions without 38-digit
+    arithmetic: the ENFORCED |element| ≤ 37 grid bound allows d² sums up
+    to ~2.3e21 — past int64, so an in-plan form needs a per-pair
+    interpreted DECIMAL fold).
 
     Exactness without decimals: ``d = jla − jlb`` is exact int64
     (|d| < 2³⁶ at the bound), its float64 square-sum carries absolute
@@ -3143,7 +2849,6 @@ def lsh_similarity_join_exact(
     vec_col: str = "embedding",
     *,
     dim: int,
-    refine_tier: str = "gemm",
     delta_min_id: int | None = None,
 ) -> DataFrame:
     """:func:`lsh_similarity_join` made bit-reproducible cross-engine:
@@ -3156,36 +2861,19 @@ def lsh_similarity_join_exact(
     hash-exact oracle. Same scale shape as the float variant: narrow
     signature map → band equi-join → exact refine.
 
-    ``refine_tier="gemm"`` (default, round 12): the exact refine — the
-    last O(pairs·dim) interpreted map in the engine; at sf0.1's τ=0.35
-    bulk-overlap regime the band screen passes 1.79 M of 2.00 M
-    possible pairs (89%), so the refine IS an all-pairs-scale scan —
-    runs via :func:`gemm_pair_cosine_refine` (narrow Arrow map,
-    bit-identical values, oracle unchanged); ``"hof"`` keeps the
-    in-plan fold as the A/B twin.
+    The exact refine — at sf0.1's τ=0.35 bulk-overlap regime the band
+    screen passes 1.79 M of 2.00 M possible pairs (89%), so the refine
+    IS an all-pairs-scale scan — runs via
+    :func:`gemm_pair_cosine_refine` (narrow Arrow map, bit-identical
+    values, oracle unchanged).
     """
     cand = _lsh_band_candidates(
         df, n_planes, n_bands, seed, id_col, vec_col, dim,
         delta_min_id=delta_min_id,
     )
     pairs = _pair_vectors_joined(cand, df, id_col, vec_col)
-    if refine_tier == "gemm":
-        return gemm_pair_cosine_refine(
-            pairs, threshold, id_type=dict(df.dtypes)[id_col]
-        )
-    if refine_tier != "hof":
-        raise ValueError(
-            f"refine_tier must be 'gemm' or 'hof', got {refine_tier!r}"
-        )
-    cos = F.round(
-        (_grid_dot(F.col("va"), F.col("vb")) / float(PQ_GRID))
-        / (F.col("na") * F.col("nb")),
-        6,
-    )
-    return (
-        pairs.withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    return gemm_pair_cosine_refine(
+        pairs, threshold, id_type=dict(df.dtypes)[id_col]
     )
 
 
@@ -3230,7 +2918,6 @@ def lsh_jl_screened_pairs(
     jl_dim: int = 16,
     slack_num: int = 2,
     slack_den: int = 1,
-    refine_tier: str = "gemm",
 ) -> DataFrame:
     """:func:`lsh_similarity_join_exact` with a 16-dim integer JL screen
     between banding and the exact refine — the three-tier ladder the JL
@@ -3246,10 +2933,8 @@ def lsh_jl_screened_pairs(
 
     Every stage is deterministic integer arithmetic (the screen compares
     an exact integer square-sum against an exact rational-derived
-    integer — a DECIMAL(38,0) fold in the ``"hof"`` tier, the
-    :func:`gemm_jl_screen` guarded-float kernel in the default
-    ``"gemm"`` tier, identical decisions), so the whole ladder carries
-    a full value-hash DuckDB oracle. The screen
+    integer in the :func:`gemm_jl_screen` guarded-float kernel), so the
+    whole ladder carries a full value-hash DuckDB oracle. The screen
     is APPROXIMATE BY CONTRACT — a true-positive pair whose projected
     distance lands beyond the slack·p95 tail is dropped. Measured
     (tests/test_operators.py::test_jl_screened_lsh_pairs), both regimes:
@@ -3283,46 +2968,16 @@ def lsh_jl_screened_pairs(
         jl.select(F.col(id_col).alias("id_b"), F.col("jl").alias("jlb")),
         "id_b",
     )
-    if refine_tier == "gemm":
-        # screen kernel BEFORE the dim-64 vector join, preserving the
-        # ladder's scale shape (only survivors ever carry full vectors)
-        screened = gemm_jl_screen(
-            withjl, bound, id_type=dict(df.dtypes)[id_col]
-        )
-    else:
-        d2 = F.aggregate(
-            F.zip_with(
-                F.col("jla"),
-                F.col("jlb"),
-                lambda x, y: (x - y).cast("decimal(19,0)")
-                * (x - y).cast("decimal(19,0)"),
-            ),
-            F.lit(0).cast("decimal(38,0)"),
-            lambda acc, v: acc + v,
-        )
-        screened = withjl.filter(
-            d2 <= F.lit(bound).cast("decimal(38,0)")
-        ).select("id_a", "id_b")
-    # per-vector norms precomputed (never folded per candidate pair) and
-    # the refine tier dispatch both shared with lsh_similarity_join_exact
-    pairs = _pair_vectors_joined(screened, df, id_col, vec_col)
-    if refine_tier == "gemm":
-        return gemm_pair_cosine_refine(
-            pairs, threshold, id_type=dict(df.dtypes)[id_col]
-        )
-    if refine_tier != "hof":
-        raise ValueError(
-            f"refine_tier must be 'gemm' or 'hof', got {refine_tier!r}"
-        )
-    cos = F.round(
-        (_grid_dot(F.col("va"), F.col("vb")) / float(PQ_GRID))
-        / (F.col("na") * F.col("nb")),
-        6,
+    # screen kernel BEFORE the dim-64 vector join, preserving the
+    # ladder's scale shape (only survivors ever carry full vectors)
+    screened = gemm_jl_screen(
+        withjl, bound, id_type=dict(df.dtypes)[id_col]
     )
-    return (
-        pairs.withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    # per-vector norms precomputed (never folded per candidate pair) and
+    # the refine kernel both shared with lsh_similarity_join_exact
+    pairs = _pair_vectors_joined(screened, df, id_col, vec_col)
+    return gemm_pair_cosine_refine(
+        pairs, threshold, id_type=dict(df.dtypes)[id_col]
     )
 
 
@@ -3340,7 +2995,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    assign: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """IVF-PQ serving composition (Jégou et al. TPAMI'11 §V: coarse
@@ -3361,13 +3015,11 @@ def ivfpq_topk(
     Zero driver jobs: coarse seeds, codebook, probe, and the probe's cell
     list are all in-plan 1-row broadcast contexts.
 
-    ``assign="gemm"`` (default) routes the corpus coarse-cell assignment
-    through :func:`gemm_assign_cells` with the seed norms hoisted into
-    the 1-row context (the HOF form recomputed ``_grid_norm6(semb)`` per
-    ROW per CELL — interpreter cost on top of interpreter cost);
-    ``"hof"`` keeps the in-plan argmax. Values bit-identical either way,
-    oracle unchanged. The post-route ADC/encode stages only touch the
-    probed n_probe/n_cells fraction, so they stay in-plan.
+    The corpus coarse-cell assignment runs on :func:`gemm_assign_cells`
+    with the seed norms hoisted into the 1-row context (values
+    bit-identical, oracle unchanged). The post-route ADC/encode stages
+    only touch the probed n_probe/n_cells fraction, so they stay
+    in-plan.
     """
     seeds_row = df.filter(F.col(id_col) < n_cells).agg(
         F.array_sort(
@@ -3451,53 +3103,38 @@ def ivfpq_topk(
         .select("q", "qnorm", "cells", "probe_cells", "ptab")
     )
     base = df.select(id_col, vec_col).join(codes.select(id_col, "codes", "vnorm"), id_col)
-    if assign == "gemm":
-        seedsn_row = (
-            df.filter(F.col(id_col) < n_cells)
-            .select(
-                F.col(id_col).cast("int").alias("cell_id"),
-                F.col(vec_col).alias("semb"),
-            )
-            .withColumn("snorm", _grid_norm6(F.col("semb")))
-            .agg(
-                F.collect_list(
-                    F.struct("cell_id", "semb", "snorm")
-                ).alias("seeds")
-            )
+    seedsn_row = (
+        df.filter(F.col(id_col) < n_cells)
+        .select(
+            F.col(id_col).cast("int").alias("cell_id"),
+            F.col(vec_col).alias("semb"),
         )
-        routed = (
-            gemm_assign_cells(
-                base,
-                seedsn_row,
-                id_col=id_col,
-                vec_col=vec_col,
-                nrm_col="vnorm",
-                dot="grid",
-                extra_cols=("codes",),
-                n_blocks=n_blocks,
-            )
-            .crossJoin(
-                F.broadcast(ctx.select("q", "qnorm", "probe_cells", "ptab"))
-            )
-            .filter(
-                F.array_contains(F.col("probe_cells"), F.col("cell_id"))
-                & (F.col(id_col) != probe_id)
-            )
+        .withColumn("snorm", _grid_norm6(F.col("semb")))
+        .agg(
+            F.collect_list(
+                F.struct("cell_id", "semb", "snorm")
+            ).alias("seeds")
         )
-    else:
-        routed = (
-            base.crossJoin(F.broadcast(ctx))
-            .withColumn(
-                "cell_id",
-                F.element_at(
-                    _cell_ranked(F.col(vec_col), F.col("vnorm")), 1
-                )["cell_id"],
-            )
-            .filter(
-                F.array_contains(F.col("probe_cells"), F.col("cell_id"))
-                & (F.col(id_col) != probe_id)
-            )
+    )
+    routed = (
+        gemm_assign_cells(
+            base,
+            seedsn_row,
+            id_col=id_col,
+            vec_col=vec_col,
+            nrm_col="vnorm",
+            dot="grid",
+            extra_cols=("codes",),
+            n_blocks=n_blocks,
         )
+        .crossJoin(
+            F.broadcast(ctx.select("q", "qnorm", "probe_cells", "ptab"))
+        )
+        .filter(
+            F.array_contains(F.col("probe_cells"), F.col("cell_id"))
+            & (F.col(id_col) != probe_id)
+        )
+    )
     scored = routed.withColumn(
         "adc_dot_grid",
         F.aggregate(
@@ -3542,7 +3179,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seeds_from: DataFrame | None = None,
-    dominance_tier: str = "gemm",
     delta_min_id: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas, Tirumala, Simig,
@@ -3567,8 +3203,8 @@ def semantic_dedup(
     connected_components_star`'s job when chain semantics are wanted).
 
     Plan shape: 1-row broadcast of the seed array → narrow per-row argmax
-    assignment (no shuffle) → cell-keyed self equi join (bounded fan-out)
-    → distinct dominated ids → left-anti keep mark. Returns
+    assignment (no shuffle) → one cell-keyed exchange into the
+    :func:`_sem_cell_dominance` grouped-map kernel. Returns
     ``(id_col, cell_id, kept)`` for every input vector.
 
     All cosines ride an int64 grid, quantize-once form (``_sem_quant`` /
@@ -3595,8 +3231,7 @@ def semantic_dedup(
         df, n_cells, id_col, vec_col, seeds_from=seeds_from
     )
     return _sem_cell_dominance(
-        assigned, threshold, id_col, tier=dominance_tier,
-        delta_min_id=delta_min_id,
+        assigned, threshold, id_col, delta_min_id=delta_min_id
     )
 
 
@@ -3665,7 +3300,6 @@ def semantic_dedup_from_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seeds_from: DataFrame | None = None,
-    dominance_tier: str = "gemm",
 ) -> DataFrame:
     """Delta-ingest SemDeDup against the persisted assignment index:
     only the delta is quantized and argmax-assigned (``seeds_from``
@@ -3681,8 +3315,7 @@ def semantic_dedup_from_index(
     )
     assigned = index_assigned.unionByName(delta_assigned)
     return _sem_cell_dominance(
-        assigned, threshold, id_col, tier=dominance_tier,
-        delta_min_id=delta_min_id,
+        assigned, threshold, id_col, delta_min_id=delta_min_id
     )
 
 
@@ -3690,7 +3323,6 @@ def _sem_cell_dominance(
     assigned: DataFrame,
     threshold: float,
     id_col: str,
-    tier: str = "gemm",
     delta_min_id: int | None = None,
 ) -> DataFrame:
     """Shared SemDeDup tail: within each cell, a row is DOMINATED iff
@@ -3698,172 +3330,122 @@ def _sem_cell_dominance(
     ``round(cos, 6) ≥ threshold``. ``assigned`` must carry
     ``(id_col, __qv, __nrm, cell_id)``; cosines reduce on the
     quantize-once int64 grid, so the threshold compare is bit-identical
-    cross-engine in BOTH tiers.
+    cross-engine.
 
-    ``tier="gemm"`` (default, round 12 — the last interpreted per-PAIR
-    fold in the SemDeDup family): one grouped-map kernel over the cell
-    key computes each cell's pairwise int64 GEMM (exact within
-    ``_sem_quant``'s enforced |x| ≤ 37 bound: 64·(3.7e8)² < 2⁶³),
-    divides with the in-plan parenthesization pinned, rounds via
-    :func:`_np_round6` (bit-identical to ``F.round``, so ANY threshold
-    is exact — no 1e-6-grid restriction here), and marks the
-    strict-lower-triangle dominance directly. That REPLACES the
-    cell-keyed self join + per-pair interpreted ``_sem_qdot`` fold +
-    distinct + left-join tail with ONE exchange and zero interpreted
-    per-pair work; tiles cap the kernel's working set (~32 MB per
-    tile) so a skewed cell bounds memory, not correctness. Zero-norm
-    rows raise ``ValueError`` (the family's ANSI mirror — the hof
-    tier's divide raises DIVIDE_BY_ZERO). Ids must be orderable the
-    same way in numpy and Spark (numeric ids — every current caller).
-    ``tier="hof"`` keeps the join form as the A/B twin; equivalence is
-    pinned by tests/test_operators.py::test_sem_dominance_gemm_equals_hof.
+    One grouped-map kernel over the cell key computes each cell's
+    pairwise int64 GEMM (exact within ``_sem_quant``'s enforced
+    |x| ≤ 37 bound: 64·(3.7e8)² < 2⁶³), divides with the in-plan
+    parenthesization pinned, rounds via :func:`_np_round6`
+    (bit-identical to ``F.round``, so ANY threshold is exact — no
+    1e-6-grid restriction here), and marks the strict-lower-triangle
+    dominance directly: ONE exchange and zero interpreted per-pair
+    work; tiles cap the kernel's working set (~32 MB per tile) so a
+    skewed cell bounds memory, not correctness. Preconditions: zero-norm
+    rows raise ``ValueError`` (an in-plan cosine divide raises
+    DIVIDE_BY_ZERO under ANSI, so the kernel fails as loudly); ids must
+    be orderable the same way in numpy and Spark (numeric ids — every
+    current caller).
     """
-    if tier == "gemm":
-        dtypes = dict(assigned.dtypes)
-        out_schema = (
-            f"`{id_col}` {dtypes[id_col]}, "
-            f"cell_id {dtypes['cell_id']}, kept boolean"
-        )
-        thr = float(threshold)
+    dtypes = dict(assigned.dtypes)
+    out_schema = (
+        f"`{id_col}` {dtypes[id_col]}, "
+        f"cell_id {dtypes['cell_id']}, kept boolean"
+    )
+    thr = float(threshold)
 
-        delta = delta_min_id
+    delta = delta_min_id
 
-        def dominate(tbl):
-            import numpy as np
-            import pyarrow as pa
+    def dominate(tbl):
+        import numpy as np
+        import pyarrow as pa
 
-            from .linalg import arrow_list_to_2d
+        from .linalg import arrow_list_to_2d
 
-            def emit(ids_v, cells_v, kept_v):
-                return pa.Table.from_arrays(
-                    [pa.array(ids_v), pa.array(cells_v),
-                     pa.array(np.asarray(kept_v, dtype=bool))],
-                    [id_col, "cell_id", "kept"],
+        def emit(ids_v, cells_v, kept_v):
+            return pa.Table.from_arrays(
+                [pa.array(ids_v), pa.array(cells_v),
+                 pa.array(np.asarray(kept_v, dtype=bool))],
+                [id_col, "cell_id", "kept"],
+            )
+
+        t = tbl.combine_chunks()
+        n = t.num_rows
+        ids = t.column(id_col).to_numpy()
+        cells = t.column("cell_id").to_numpy()
+        if delta is not None:
+            keep_rows = ids >= delta
+            if not keep_rows.any():
+                return emit(
+                    ids[:0], cells[:0], np.zeros(0, dtype=bool)
                 )
-
-            t = tbl.combine_chunks()
-            n = t.num_rows
-            ids = t.column(id_col).to_numpy()
-            cells = t.column("cell_id").to_numpy()
-            if delta is not None:
-                keep_rows = ids >= delta
-                if not keep_rows.any():
-                    return emit(
-                        ids[:0], cells[:0], np.zeros(0, dtype=bool)
-                    )
-            if n <= 1:
-                if delta is not None:
-                    return emit(
-                        ids[keep_rows],
-                        cells[keep_rows],
-                        np.ones(int(keep_rows.sum()), dtype=bool),
-                    )
-                return emit(ids, cells, np.ones(n, dtype=bool))
-            order = np.argsort(ids, kind="stable")
-            Q = arrow_list_to_2d(t.column("__qv").chunk(0), np.int64)[
-                order
-            ]
-            nrm = t.column("__nrm").to_numpy()[order]
-            if not nrm.all():
-                raise ValueError(
-                    "_sem_cell_dominance: zero norm in cell — the hof "
-                    "tier raises DIVIDE_BY_ZERO here under ANSI"
-                )
-            dom = np.zeros(n, dtype=bool)
-            step = max(1, 4_000_000 // n)
-            # incremental mode: delta ids are a SUFFIX of the sorted
-            # order, so the row-tile loop starts at the first delta row —
-            # per-cell work is |delta_cell| x |cell|, not the full lower
-            # triangle (the columns compared against stay ALL smaller
-            # ids, existing corpus and earlier delta alike)
-            start = 1
-            if delta is not None:
-                start = int(np.searchsorted(ids[order], delta, side="left"))
-                start = max(start, 1)
-            for i0 in range(start, n, step):
-                i1 = min(i0 + step, n)
-                G = (Q[i0:i1] @ Q[:i1].T).astype(np.float64)
-                C = (G / float(SEM_QSCALE) ** 2) / (
-                    nrm[i0:i1, None] * nrm[None, :i1]
-                )
-                r6 = _np_round6(C.ravel()).reshape(C.shape)
-                m = r6 >= thr
-                # only strictly-smaller GLOBAL index dominates: full
-                # columns below i0, strict lower triangle inside the
-                # tile-local square
-                m[:, i0:] = np.tril(m[:, i0:], k=-1)
-                dom[i0:i1] = m.any(axis=1)
-            kept = np.empty(n, dtype=bool)
-            kept[order] = ~dom
+        if n <= 1:
             if delta is not None:
                 return emit(
-                    ids[keep_rows], cells[keep_rows], kept[keep_rows]
+                    ids[keep_rows],
+                    cells[keep_rows],
+                    np.ones(int(keep_rows.sum()), dtype=bool),
                 )
-            return emit(ids, cells, kept)
+            return emit(ids, cells, np.ones(n, dtype=bool))
+        order = np.argsort(ids, kind="stable")
+        Q = arrow_list_to_2d(t.column("__qv").chunk(0), np.int64)[
+            order
+        ]
+        nrm = t.column("__nrm").to_numpy()[order]
+        if not nrm.all():
+            raise ValueError(
+                "_sem_cell_dominance: zero norm in cell — cosine is "
+                "undefined (DIVIDE_BY_ZERO under ANSI)"
+            )
+        dom = np.zeros(n, dtype=bool)
+        step = max(1, 4_000_000 // n)
+        # incremental mode: delta ids are a SUFFIX of the sorted
+        # order, so the row-tile loop starts at the first delta row —
+        # per-cell work is |delta_cell| x |cell|, not the full lower
+        # triangle (the columns compared against stay ALL smaller
+        # ids, existing corpus and earlier delta alike)
+        start = 1
+        if delta is not None:
+            start = int(np.searchsorted(ids[order], delta, side="left"))
+            start = max(start, 1)
+        for i0 in range(start, n, step):
+            i1 = min(i0 + step, n)
+            G = (Q[i0:i1] @ Q[:i1].T).astype(np.float64)
+            C = (G / float(SEM_QSCALE) ** 2) / (
+                nrm[i0:i1, None] * nrm[None, :i1]
+            )
+            r6 = _np_round6(C.ravel()).reshape(C.shape)
+            m = r6 >= thr
+            # only strictly-smaller GLOBAL index dominates: full
+            # columns below i0, strict lower triangle inside the
+            # tile-local square
+            m[:, i0:] = np.tril(m[:, i0:], k=-1)
+            dom[i0:i1] = m.any(axis=1)
+        kept = np.empty(n, dtype=bool)
+        kept[order] = ~dom
+        if delta is not None:
+            return emit(
+                ids[keep_rows], cells[keep_rows], kept[keep_rows]
+            )
+        return emit(ids, cells, kept)
 
-        return (
-            assigned.select(id_col, "__qv", "__nrm", "cell_id")
-            # explicit partition count: the exchange carries quantized
-            # vectors (~bytes-cheap, compute-heavy downstream), so AQE
-            # would coalesce it to a handful of tasks and serialize the
-            # per-cell GEMMs (measured 7 tasks on 16 cores at the 16×
-            # rung). A user-specified count is AQE-exempt, and a relation
-            # already hash-partitioned by cell_id satisfies the
-            # grouped-map clustering requirement — no second exchange.
-            .repartition(
-                shuffle_width(assigned.sparkSession),
-                F.col("cell_id"),
-            )
-            .groupBy("cell_id")
-            # round 15: applyInArrow — the cell's __qv list column
-            # reshapes zero-copy instead of materializing per-row
-            # ndarray objects (guide §4.2); values identical
-            .applyInArrow(dominate, out_schema)
-        )
-    if tier != "hof":
-        raise ValueError(f"tier must be 'gemm' or 'hof', got {tier!r}")
-    a = assigned.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__qv").alias("qa"),
-        F.col("__nrm").alias("na"),
-        "cell_id",
-    )
-    b = assigned.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__qv").alias("qb"),
-        F.col("__nrm").alias("nb"),
-        "cell_id",
-    )
-    pair_cond = F.col("id_a") < F.col("id_b")
-    if delta_min_id is not None:
-        pair_cond = pair_cond & (F.col("id_b") >= F.lit(delta_min_id))
-    dominated = (
-        a.join(b, "cell_id")
-        .filter(pair_cond)
-        .filter(
-            F.round(
-                (_sem_qdot(F.col("qa"), F.col("qb"))
-                 / float(SEM_QSCALE) ** 2)
-                / (F.col("na") * F.col("nb")),
-                6,
-            )
-            >= threshold
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    marked = assigned
-    if delta_min_id is not None:
-        marked = marked.filter(F.col(id_col) >= F.lit(delta_min_id))
     return (
-        marked.join(
-            dominated.withColumn("__dom", F.lit(1)), id_col, "left"
+        assigned.select(id_col, "__qv", "__nrm", "cell_id")
+        # explicit partition count: the exchange carries quantized
+        # vectors (~bytes-cheap, compute-heavy downstream), so AQE
+        # would coalesce it to a handful of tasks and serialize the
+        # per-cell GEMMs (measured 7 tasks on 16 cores at the 16×
+        # rung). A user-specified count is AQE-exempt, and a relation
+        # already hash-partitioned by cell_id satisfies the
+        # grouped-map clustering requirement — no second exchange.
+        .repartition(
+            shuffle_width(assigned.sparkSession),
+            F.col("cell_id"),
         )
-        .select(
-            id_col,
-            "cell_id",
-            F.col("__dom").isNull().alias("kept"),
-        )
+        .groupBy("cell_id")
+        # round 15: applyInArrow — the cell's __qv list column
+        # reshapes zero-copy instead of materializing per-row
+        # ndarray objects (guide §4.2); values identical
+        .applyInArrow(dominate, out_schema)
     )
 
 
@@ -3873,7 +3455,6 @@ def semantic_decontaminate(
     threshold: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    tier: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """Embedding-space decontamination: every TRAIN vector whose cosine
@@ -3894,16 +3475,14 @@ def semantic_decontaminate(
     Plan shape / scale: the eval side collects into ONE row (grouping-
     free aggregate → maxRows=1, the same bounded seeds-row idiom the
     registry-wide cartesian sweep proves for semantic_dedup) and
-    broadcasts; the train side is a narrow per-row EXISTS map — zero
-    shuffles beyond the broadcast. That is the right shape because an
+    broadcasts; the train side pays one block exchange and never
+    shuffles against the eval side. That is the right shape because an
     eval suite is small BY CONSTRUCTION (benchmarks, ~10⁵ vectors ≈
     tens of MB quantized) while train is the 100 TB side.
 
-    ``tier``: the compare is O(|eval|·dim) PER TRAIN ROW — the exact
-    map class the round-10 kernel family exists for, and the 256×
-    ladder measured the interpreted EXISTS at 91 s for 512k train ×
-    ~100 eval (~28 ns/term — pure interpreter). ``"gemm"`` (default)
-    therefore routes the train side through the
+    The compare is O(|eval|·dim) PER TRAIN ROW (the 256× ladder
+    measured an interpreted in-plan EXISTS at 91 s for 512k train ×
+    ~100 eval, ~28 ns/term), so the train side runs on the
     :func:`gemm_assign_cells` block layout: rows group into
     :func:`kernel_block_count`-sized blocks (one eval-matrix copy per
     BLOCK, not per row), numpy computes the exact int64 ``Q @ Eᵀ``
@@ -3912,19 +3491,15 @@ def semantic_decontaminate(
     bit-identical to the JVM's — and decides ``round(cos, 6) ≥ τ`` on
     the per-row MAX (rounding is monotone, so the max pair decides the
     EXISTS), with a Decimal(repr) half-up fallback only within 1e-9 of
-    the decision boundary. ``"hof"`` keeps the in-plan EXISTS as the
-    A/B tier. ``threshold`` must lie on the 1e-6 grid (raise otherwise):
-    the kernel's fast-path boundary τ − 5e-7 is only the true round-6
-    decision boundary for grid thresholds (ADVICE r11).
+    the decision boundary. ``threshold`` must lie on the 1e-6 grid
+    (raise otherwise): the kernel's fast-path boundary τ − 5e-7 is only
+    the true round-6 decision boundary for grid thresholds (ADVICE r11).
 
-    Zero-norm agreement (probed, pinned in tests/test_operators.py::
-    test_semantic_decontaminate_zero_norm_both_tiers_raise): under the
-    engine session's ANSI mode the hof tier's cosine divide raises
-    ``DIVIDE_BY_ZERO`` on any zero-norm train OR eval vector — it never
-    reaches a NaN compare — and the kernel raises ``ValueError`` on the
-    same input class, so the tiers agree on every input: both succeed
-    bit-identically or both fail loudly. Equivalence pinned by
-    tests/test_operators.py::test_semantic_decontaminate_tier_equivalence.
+    Zero-norm inputs (pinned in tests/test_operators.py::
+    test_semantic_decontaminate_zero_norm_both_tiers_raise): the kernel
+    raises ``ValueError`` on any zero-norm train OR eval vector, as an
+    in-plan cosine divide raises ``DIVIDE_BY_ZERO`` under the engine
+    session's ANSI mode — it never reaches a NaN compare.
     """
     q = df.select(
         F.col(id_col),
@@ -3943,23 +3518,6 @@ def semantic_decontaminate(
             )
         ).alias("evs")
     )
-    if tier == "hof":
-        hit = F.exists(
-            F.col("evs"),
-            lambda e: F.round(
-                (_sem_qdot(F.col("__qv"), e["qe"]) / float(SEM_QSCALE) ** 2)
-                / (F.col("__nrm") * e["ne"]),
-                6,
-            )
-            >= F.lit(threshold),
-        )
-        return (
-            q.filter(~F.col("__ev"))
-            .crossJoin(F.broadcast(ev_row))
-            .select(id_col, hit.alias("contaminated"))
-        )
-    if tier != "gemm":
-        raise ValueError(f"tier must be 'gemm' or 'hof', got {tier!r}")
 
     id_type = dict(df.dtypes)[id_col]
     proj = q.filter(~F.col("__ev")).select(id_col, "__qv", "__nrm")
@@ -3982,8 +3540,9 @@ def semantic_decontaminate(
 
     # the kernel's fast-path boundary tau - 5e-7 is the true decision
     # boundary of round(cos, 6) >= tau ONLY when tau lies on the 1e-6
-    # grid; a finer threshold would silently diverge from the hof tier
-    # near the boundary (ADVICE r11), so reject it loudly at plan time
+    # grid; a finer threshold would silently diverge from the in-plan
+    # round-6 compare near the boundary (ADVICE r11), so reject it
+    # loudly at plan time
     if _Dec(str(threshold)) != _Dec(str(threshold)).quantize(
         _Dec("0.000001")
     ):
@@ -4026,8 +3585,7 @@ def semantic_decontaminate(
             ids_col = out_rows.field(id_col)
             evs = context_entries(rb.column("evs"))
             if not len(evs):
-                # EXISTS over an empty eval suite is false — same as
-                # the HOF tier
+                # EXISTS over an empty eval suite is false
                 yield pa.RecordBatch.from_arrays(
                     [ids_col, pa.array(np.zeros(total, dtype=bool))],
                     [id_col, "contaminated"],
@@ -4101,7 +3659,6 @@ def semantic_dedup_two_level(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seeds_from: DataFrame | None = None,
-    dominance_tier: str = "gemm",
 ) -> DataFrame:
     """:func:`semantic_dedup` with a HIERARCHICAL (two-level) coarse
     assignment: routing each row through ``n_super ≈ √cells`` top-level
@@ -4208,9 +3765,7 @@ def semantic_dedup_two_level(
             ).alias("cell_id"),
         )
     )
-    return _sem_cell_dominance(
-        assigned, threshold, id_col, tier=dominance_tier
-    )
+    return _sem_cell_dominance(assigned, threshold, id_col)
 
 
 def semantic_dedup_gemm(
@@ -4224,7 +3779,6 @@ def semantic_dedup_gemm(
     checkpoint: bool = False,
     two_level: bool = False,
     n_super: int | None = None,
-    dominance_tier: str = "gemm",
 ) -> DataFrame:
     """:func:`semantic_dedup` with the cell ASSIGNMENT as a blocked int64
     GEMM (the :func:`brute_cosine_pairs_blocked` layout) instead of
@@ -4262,12 +3816,9 @@ def semantic_dedup_gemm(
       :func:`_sem_cell_dominance` (round-6 ≥ threshold), unchanged.
 
     ``checkpoint=True`` materializes the assignment once
-    (``localCheckpoint``) before the dominance tail — load-bearing for
-    ``dominance_tier="hof"``, whose join tail consumes the assignment
-    three times (a/b sides + the keep-mark join); the default gemm
-    dominance consumes it ONCE, so the checkpoint is then just an
-    optional lineage cut. Engine default stays lazy; large-scale
-    harnesses opt in.
+    (``localCheckpoint``) before the dominance tail — an optional
+    lineage cut (the dominance kernel consumes the assignment ONCE).
+    Engine default stays lazy; large-scale harnesses opt in.
 
     ``two_level=True`` (with ``n_super``) composes the hierarchy INTO
     the kernel — the answer to the measured 256× knee (BASELINE_HISTORY.md
@@ -4340,7 +3891,7 @@ def semantic_dedup_gemm(
             den = np.outer(nq, ns) * 1e14
             if den.size and not den.all():
                 # ANSI mirror (ADVICE r10): zero-norm input would make
-                # numpy emit NaN silently where the in-plan tiers raise
+                # numpy emit NaN silently where an in-plan divide raises
                 # DIVIDE_BY_ZERO — raise instead of diverging
                 raise ValueError(
                     "semantic_dedup_gemm: zero cosine denominator "
@@ -4417,9 +3968,7 @@ def semantic_dedup_gemm(
     ).withColumnRenamed("id", id_col)
     if checkpoint:
         assigned = assigned.localCheckpoint(eager=True)
-    return _sem_cell_dominance(
-        assigned, threshold, id_col, tier=dominance_tier
-    )
+    return _sem_cell_dominance(assigned, threshold, id_col)
 
 
 def ivfpq_residual_topk(
@@ -4437,7 +3986,6 @@ def ivfpq_residual_topk(
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
     train_codebook: bool = False,
-    assign: str = "gemm",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """Paper-faithful IVFADC (Jégou, Douze & Schmid TPAMI'11 §V): codes
@@ -4464,11 +4012,10 @@ def ivfpq_residual_topk(
     → narrow per-row assign/encode/ADC map over n_probe/n_cells of the
     data → top-``rerank`` → broadcast-join exact rerank → top-``k``.
 
-    ``assign="gemm"`` (default) moves the corpus coarse-cell assignment
-    to :func:`gemm_assign_cells` (grid flavor, seed norms hoisted into
-    the context, values bit-identical — oracle unchanged); ``"hof"``
-    keeps the in-plan argmax. Residual encode/ADC only run on the routed
-    n_probe/n_cells fraction either way. The optional ``train_codebook``
+    The corpus coarse-cell assignment runs on :func:`gemm_assign_cells`
+    (grid flavor, seed norms hoisted into the context, values
+    bit-identical — oracle unchanged); residual encode/ADC only run on
+    the routed n_probe/n_cells fraction. The optional ``train_codebook``
     Lloyd pass still assigns in-plan (training is not in the serving
     query's oracle surface).
     """
@@ -4698,53 +4245,36 @@ def ivfpq_residual_topk(
         )
         return F.element_at(ranked, 1)["cid"]
 
-    if assign == "gemm":
-        seedsn_row = (
-            df.filter(F.col(id_col) < n_cells)
-            .select(
-                F.col(id_col).cast("int").alias("cell_id"),
-                F.col(vec_col).alias("semb"),
-            )
-            .withColumn("snorm", _grid_norm6(F.col("semb")))
-            .agg(
-                F.collect_list(
-                    F.struct("cell_id", "semb", "snorm")
-                ).alias("seeds")
-            )
+    seedsn_row = (
+        df.filter(F.col(id_col) < n_cells)
+        .select(
+            F.col(id_col).cast("int").alias("cell_id"),
+            F.col(vec_col).alias("semb"),
         )
-        routed = (
-            gemm_assign_cells(
-                df.withColumn("vnorm", _grid_norm6(F.col(vec_col))),
-                seedsn_row,
-                id_col=id_col,
-                vec_col=vec_col,
-                nrm_col="vnorm",
-                dot="grid",
-                n_blocks=n_blocks,
-            )
-            .crossJoin(F.broadcast(ctx))
-            .filter(
-                F.array_contains(F.col("probe_cells"), F.col("cell_id"))
-                & (F.col(id_col) != probe_id)
-            )
-            .withColumn("rv", _residual(F.col(vec_col), F.col("cell_id")))
+        .withColumn("snorm", _grid_norm6(F.col("semb")))
+        .agg(
+            F.collect_list(
+                F.struct("cell_id", "semb", "snorm")
+            ).alias("seeds")
         )
-    else:
-        routed = (
-            df.withColumn("vnorm", _grid_norm6(F.col(vec_col)))
-            .crossJoin(F.broadcast(ctx))
-            .withColumn(
-                "cell_id",
-                F.element_at(
-                    _cell_ranked(F.col(vec_col), F.col("vnorm")), 1
-                )["cell_id"],
-            )
-            .filter(
-                F.array_contains(F.col("probe_cells"), F.col("cell_id"))
-                & (F.col(id_col) != probe_id)
-            )
-            .withColumn("rv", _residual(F.col(vec_col), F.col("cell_id")))
+    )
+    routed = (
+        gemm_assign_cells(
+            df.withColumn("vnorm", _grid_norm6(F.col(vec_col))),
+            seedsn_row,
+            id_col=id_col,
+            vec_col=vec_col,
+            nrm_col="vnorm",
+            dot="grid",
+            n_blocks=n_blocks,
         )
+        .crossJoin(F.broadcast(ctx))
+        .filter(
+            F.array_contains(F.col("probe_cells"), F.col("cell_id"))
+            & (F.col(id_col) != probe_id)
+        )
+        .withColumn("rv", _residual(F.col(vec_col), F.col("cell_id")))
+    )
     scored = routed.withColumn(
         "adc_dot_grid",
         F.element_at(
@@ -4798,7 +4328,6 @@ def lsh_multiprobe_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    sig_tier: str = "gemm",
 ) -> DataFrame:
     """Multi-probe LSH top-k (Lv, Josephson, Wang, Charikar & Li,
     "Multi-probe LSH: efficient indexing for high-dimensional similarity
@@ -4815,45 +4344,23 @@ def lsh_multiprobe_topk(
     cross-engine and the query carries a full hash oracle. Candidates pay
     one exact grid cosine each; ranking is exact over the candidate set.
 
-    Plan: narrow signature map over the scan (n_planes grid dots/row, no
-    shuffle), 1-row broadcast probe-set ctx, bucket membership filter,
-    exact cosine on the surviving fraction, TakeOrderedAndProject.
-
-    ``sig_tier="gemm"`` (default): the signature map runs via
-    :func:`gemm_lsh_bits` (still shuffle-free — planes are literals) and
-    the packed int is assembled in-plan from the bits array (O(planes)
-    per row); ``"hof"`` keeps the fully in-plan form. Signatures are
-    bit-identical either way — oracle unchanged.
+    Plan: narrow signature map over the scan via :func:`gemm_lsh_bits`
+    (shuffle-free — planes are literals; the packed int is assembled
+    in-plan from the bits array, O(planes) per row), 1-row broadcast
+    probe-set ctx, bucket membership filter, exact cosine on the
+    surviving fraction, TakeOrderedAndProject.
     """
     planes = lsh_planes(n_planes, dim, seed)
-    if sig_tier == "gemm":
-        packed = None
-        for i in range(n_planes):
-            term = (F.get(F.col("bits"), i) * F.lit(1 << i)).cast("long")
-            packed = term if packed is None else packed + term
-        sigs = gemm_lsh_bits(
-            df, planes, id_col=id_col, vec_col=vec_col,
-            extra_cols=tuple(keep_cols),
-        ).select(
-            F.col(id_col), *keep_cols, F.col(vec_col), packed.alias("sig")
-        )
-    else:
-        sig = None
-        for i, p in enumerate(planes):
-            bit = (
-                F.when(
-                    _grid_dot(
-                        F.col(vec_col), F.array(*[F.lit(x) for x in p])
-                    )
-                    >= 0,
-                    F.lit(1 << i).cast("long"),
-                )
-                .otherwise(F.lit(0).cast("long"))
-            )
-            sig = bit if sig is None else sig + bit
-        sigs = df.select(
-            F.col(id_col), *keep_cols, F.col(vec_col), sig.alias("sig")
-        )
+    packed = None
+    for i in range(n_planes):
+        term = (F.get(F.col("bits"), i) * F.lit(1 << i)).cast("long")
+        packed = term if packed is None else packed + term
+    sigs = gemm_lsh_bits(
+        df, planes, id_col=id_col, vec_col=vec_col,
+        extra_cols=tuple(keep_cols),
+    ).select(
+        F.col(id_col), *keep_cols, F.col(vec_col), packed.alias("sig")
+    )
     probe_row = (
         sigs.filter(F.col(id_col) == probe_id)
         .select(

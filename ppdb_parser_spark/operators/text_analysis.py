@@ -224,31 +224,10 @@ def tf_idf(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Dat
     )
 
 
-def _word_ngrams(toks: Column, n_col: Column, n: int) -> Column:
-    """Word n-gram array built IN-ROW from the token array (narrow map —
-    zero shuffle; the gram stream shuffles exactly once, in the counting
-    aggregate downstream). ``slice``+``zip_with`` instead of a
-    sequence/element_at walk: both slices have identical length so
-    ``zip_with`` never null-pads, and the whole expression stays inside
-    whole-stage codegen."""
-    if n == 1:
-        return toks
-    prev = _word_ngrams(toks, n_col, n - 1)
-    joined = F.zip_with(
-        F.slice(prev, 1, n_col - (n - 1)),
-        F.slice(toks, n, n_col - (n - 1)),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    return F.when(n_col >= n, joined).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def repetition_stats(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tier: str = "kernel",
 ) -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021, "Scaling Language
     Models: ... Gopher", appendix A1.1 repetition filters — public paper):
@@ -260,84 +239,25 @@ def repetition_stats(
     - ``dup_trigram_frac`` — occurrences belonging to word 3-grams that
       appear more than once / total 3-grams.
 
-    ``tier="agg"`` (the original form, kept as the A/B twin): uni/bi/
-    tri-grams are all built in-row (``_word_ngrams``), tagged with a
-    1-char kind, concatenated, and exploded ONCE — one gram-stream
-    explode → one (id, kind, gram)-keyed hash aggregate → one (id, kind)
-    partial → one (id) pivot aggregate; linear in corpus tokens but the
-    first exchange carries every gram STRING (~3× the text bytes).
-
-    ``tier="kernel"`` (default, round 15 — guide §2.4 "remove shuffles
-    outright" + §4.2 "hand whole batches to vectorized native code"):
-    the whole statistic is PER-DOCUMENT, so no cross-row exchange is
-    fundamentally needed — a ``mapInArrow`` narrow map computes it with
-    ZERO shuffles. Per batch: ``split_pattern`` tokenizes (byte-exact
-    with ``F.split(text, ' ')`` — literal-space pattern, empties kept,
-    pinned by test_repetition_kernel_equals_agg), tokens
-    dictionary-encode to int32 codes (vectorized C++ hashing — gram
-    strings never exist), bigrams/trigrams become packed int64 code
-    pairs (tokens cannot contain the separator, so code-pair equality
-    IS gram-string equality; trigrams pair-encode first — both factors
-    < 2³², the pack is collision-free, NOT a hash), and per-(doc, gram)
-    counts fall out of one lexsort + run-length pass with
+    Round 15 (guide §2.4 "remove shuffles outright" + §4.2 "hand whole
+    batches to vectorized native code"): the whole statistic is
+    PER-DOCUMENT, so no cross-row exchange is needed — a ``mapInArrow``
+    narrow map computes it with ZERO shuffles. Per batch:
+    ``split_pattern`` tokenizes (byte-exact with ``F.split(text, ' ')``
+    — literal-space pattern, empties kept), tokens dictionary-encode to
+    int32 codes (vectorized C++ hashing — gram strings never exist),
+    bigrams/trigrams become packed int64 code pairs (tokens cannot
+    contain the separator, so code-pair equality IS gram-string
+    equality; trigrams pair-encode first — both factors < 2³², the pack
+    is collision-free, NOT a hash), and per-(doc, gram) counts fall out
+    of one lexsort + run-length pass with
     ``maximum.reduceat``/``add.reduceat`` per-doc reductions. Counts are
-    exact integers and the output fractions divide the same int64
-    values the agg tier divides, so results are bit-identical and every
-    oracle is unchanged. Docs with NULL text vanish (the explode
-    semantics); kind-"2"/"3" fractions are NULL below 2/3 tokens (the
-    missing-kind semantics).
+    exact integers, so each fraction is the exact quotient of two gram
+    counts (pinned against a pure-Python count by
+    tests/test_operators.py::test_repetition_kernel_equals_agg). Docs
+    with NULL text vanish; bigram/trigram fractions are NULL below 2/3
+    tokens.
     """
-    if tier == "kernel":
-        return _repetition_stats_kernel(df, id_col, text_col)
-    if tier != "agg":
-        raise ValueError(f"tier must be 'kernel' or 'agg', got {tier!r}")
-    toks = tokens(text_col)
-    n = F.size(toks)
-    grams = F.concat(
-        F.transform(
-            _word_ngrams(toks, n, 1),
-            lambda g: F.struct(F.lit("1").alias("kind"), g.alias("gram")),
-        ),
-        F.transform(
-            _word_ngrams(toks, n, 2),
-            lambda g: F.struct(F.lit("2").alias("kind"), g.alias("gram")),
-        ),
-        F.transform(
-            _word_ngrams(toks, n, 3),
-            lambda g: F.struct(F.lit("3").alias("kind"), g.alias("gram")),
-        ),
-    )
-    stream = df.select(F.col(id_col), F.explode(grams).alias("g")).select(
-        id_col, F.col("g.kind").alias("kind"), F.col("g.gram").alias("gram")
-    )
-    counts = stream.groupBy(id_col, "kind", "gram").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    per_kind = counts.groupBy(id_col, "kind").agg(
-        F.sum("c").alias("total"),
-        F.max("c").alias("top"),
-        F.coalesce(F.sum(F.when(F.col("c") > 1, F.col("c"))), F.lit(0)).alias(
-            "dup"
-        ),
-    )
-
-    def _k(kind: str, col: str) -> Column:
-        return F.max(F.when(F.col("kind") == kind, F.col(col)))
-
-    return per_kind.groupBy(id_col).agg(
-        _k("1", "total").cast("long").alias("n_tokens"),
-        (_k("1", "top") / _k("1", "total")).alias("top_token_frac"),
-        (_k("2", "top") / _k("2", "total")).alias("top_bigram_frac"),
-        (_k("3", "dup") / _k("3", "total")).alias("dup_trigram_frac"),
-    )
-
-
-def _repetition_stats_kernel(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """The zero-shuffle Arrow tier of :func:`repetition_stats` — see its
-    docstring for the contract; values are bit-identical to the agg
-    cascade (parity pinned by test_repetition_kernel_equals_agg)."""
     id_type = dict(df.dtypes)[id_col]
     out_schema = (
         f"`{id_col}` {id_type}, n_tokens long, top_token_frac double, "
@@ -447,25 +367,41 @@ def _repetition_stats_kernel(
     return df.select(id_col, text_col).mapInArrow(rep_batches, out_schema)
 
 
-def _winnow_fp_kernel(
-    df: DataFrame, id_col: str, text_col: str, k: int, w: int
+def winnow_fingerprints(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 4,
+    w: int = 5,
 ) -> DataFrame:
-    """Zero-shuffle winnowing: the whole fingerprint selection is
-    per-document, so — exactly like :func:`repetition_stats`'s kernel
-    tier (round 15) — no cross-row exchange is fundamentally needed,
-    yet the window form pays one doc-keyed exchange + sort over the
-    k-gram stream per call (guide §2.1). One ``mapInArrow`` narrow map
-    computes it instead: per doc, md5 each k-gram (identical bytes to
-    the in-plan ``md5(gram)`` — hashlib over the UTF-8 string), compare
-    on the big-endian uint64 of the digest's first 8 bytes (numeric
-    order == lexicographic order of the 16-hex-char prefix, the same
-    equivalence `_hex16_ord_long` uses), take sliding-window minima via
-    a stride view, and emit the distinct winners as their exact
-    16-hex-char strings. Boundary rule mirrored: docs with fewer than
-    ``w`` k-grams keep their single whole-doc window; docs with no
-    k-gram (< k tokens, empty or NULL text) emit no rows — byte-for-byte
-    the window tier's output (parity pinned in
-    tests/test_operators.py::test_winnow_kernel_equals_window)."""
+    """Winnowed document fingerprints (Schleimer, Wilkerson & Aiken,
+    SIGMOD'03 "Winnowing: Local Algorithms for Document Fingerprinting" —
+    public paper; the MOSS scheme). Per document: hash every word k-gram,
+    slide a window of ``w`` consecutive hashes, record the minimum of each
+    window; the distinct selected hashes are the document's fingerprint
+    set. Winnowing guarantees any shared run of ``w + k - 1`` tokens
+    between two documents produces at least one shared fingerprint, at an
+    expected density of 2/(w+1) — position-robust, unlike head/tail or
+    mod-p sampling.
+
+    Cross-engine-exact hashing: the "hash" is the first 16 hex chars of
+    md5(k-gram) — fixed-width lowercase hex, so lexicographic MIN equals
+    numeric MIN and Spark/DuckDB agree byte-for-byte (no engine-specific
+    integer hash involved).
+
+    Plan shape (round 16): the selection is per-document, so ONE
+    zero-shuffle ``mapInArrow`` narrow map computes it: per doc, md5
+    each k-gram (identical bytes to the in-plan ``md5(gram)`` — hashlib
+    over the UTF-8 string), compare on the big-endian uint64 of the
+    digest's first 8 bytes (numeric order == lexicographic order of the
+    16-hex-char prefix), take sliding-window minima via a stride view,
+    and emit the distinct winners as their exact 16-hex-char strings.
+    Boundary rule: docs with fewer than ``w`` k-grams keep their single
+    whole-doc window (the paper's rule); docs with no k-gram (< k
+    tokens, empty or NULL text) emit no rows.
+
+    Returns (id_col, fingerprint).
+    """
     dtypes = dict(df.dtypes)
     out_schema = f"`{id_col}` {dtypes[id_col]}, fingerprint string"
 
@@ -519,101 +455,6 @@ def _winnow_fp_kernel(
             )
 
     return df.select(id_col, text_col).mapInArrow(fp_batches, out_schema)
-
-
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 4,
-    w: int = 5,
-    tier: str = "kernel",
-) -> DataFrame:
-    """Winnowed document fingerprints (Schleimer, Wilkerson & Aiken,
-    SIGMOD'03 "Winnowing: Local Algorithms for Document Fingerprinting" —
-    public paper; the MOSS scheme). Per document: hash every word k-gram,
-    slide a window of ``w`` consecutive hashes, record the minimum of each
-    window; the distinct selected hashes are the document's fingerprint
-    set. Winnowing guarantees any shared run of ``w + k - 1`` tokens
-    between two documents produces at least one shared fingerprint, at an
-    expected density of 2/(w+1) — position-robust, unlike head/tail or
-    mod-p sampling.
-
-    Cross-engine-exact hashing: the "hash" is the first 16 hex chars of
-    md5(k-gram) — fixed-width lowercase hex, so lexicographic MIN equals
-    numeric MIN and Spark/DuckDB agree byte-for-byte (no engine-specific
-    integer hash involved). Round 15 (guide §2.3 narrower types): inside
-    the plan the hex prefix rides as its order-preserving int64 image
-    (``_hex16_ord_long`` — exact bijection, so the window MIN selects
-    the identical fingerprint), which narrows the doc-keyed exchange +
-    window sort payload and turns the sliding-frame MIN and the distinct
-    into long comparisons; the string form is restored AFTER the
-    distinct (per selected fingerprint, not per gram), so the returned
-    relation — and every persisted posting built from it — is
-    byte-identical to before.
-
-    Plan shape: k-grams are built IN-ROW (``_word_ngrams``: slice+zip_with,
-    no shuffle), then one posexplode and ONE doc-keyed exchange feeds the
-    sliding-window MIN; the distinct collapses on the same (id, hash)
-    clustering. Short docs (< w k-grams) keep their single whole-doc
-    window, matching the paper's boundary rule.
-
-    ``tier="kernel"`` (default, round 16): the per-document selection
-    runs as ONE zero-shuffle Arrow map — see :func:`_winnow_fp_kernel`
-    (fingerprint relation byte-identical; the doc-keyed exchange +
-    window sort disappear from every winnow plan). ``tier="window"``
-    keeps this in-plan form as the A/B twin.
-
-    Returns (id_col, fingerprint).
-    """
-    if tier == "kernel":
-        return _winnow_fp_kernel(df, id_col, text_col, k, w)
-    if tier != "window":
-        raise ValueError(f"tier must be 'kernel' or 'window', got {tier!r}")
-    from .dedup import _hex16_ord_long, _ord_long_hex16
-
-    toks = tokens(text_col)
-    n = F.size(toks)
-    grams = _word_ngrams(toks, n, k)
-    stream = df.select(
-        F.col(id_col),
-        F.posexplode(grams).alias("pos", "gram"),
-    ).select(
-        id_col,
-        "pos",
-        _hex16_ord_long(
-            F.substring(F.md5(F.col("gram")), 1, 16)
-        ).alias("h"),
-    )
-    from pyspark.sql import Window
-
-    win = (
-        Window.partitionBy(id_col)
-        .orderBy("pos")
-        .rowsBetween(Window.currentRow, w - 1)
-    )
-    # A position starts a FULL window iff w rows exist in its forward
-    # frame; pos 0 additionally covers the short-doc (< w k-grams)
-    # boundary window. Deriving validity from count() over the SAME frame
-    # (one Window operator computes both aggregates) instead of an
-    # n_grams = size(grams) column is a measured 8× win at sf0.1: a
-    # per-row size() column is re-evaluated per EXPLODED row by
-    # CollapseProject, silently re-running the whole k-gram build
-    # ~w·n_tokens times per document.
-    starts = stream.select(
-        F.col(id_col),
-        "pos",
-        F.min("h").over(win).alias("wmin"),
-        F.count(F.lit(1)).over(win).alias("wcnt"),
-    ).where((F.col("wcnt") == w) | (F.col("pos") == 0))
-    return (
-        starts.select(F.col(id_col), "wmin")
-        .distinct()
-        .select(
-            F.col(id_col),
-            _ord_long_hex16(F.col("wmin")).alias("fingerprint"),
-        )
-    )
 
 
 def bigram_perplexity(

@@ -95,24 +95,19 @@ def test_index_path_wide_signature_fallback(spark):
 
 
 def test_semantic_incremental_tiers_equal_full_filtered(spark):
-    """Incremental SemDeDup (delta_min_id): both dominance tiers emit
-    exactly the FULL form's rows restricted to the delta — the kernel's
-    suffix-tile start and the hof twin's id_b conjunct are pruning-only."""
+    """Incremental SemDeDup (delta_min_id) emits exactly the FULL form's
+    rows restricted to the delta — the dominance kernel's suffix-tile
+    start is pruning-only."""
     from ppdb_parser_spark.operators.similarity import semantic_dedup
 
     e = load_table(spark, SF, "embeddings")
     full = semantic_dedup(e, n_cells=8, threshold=0.35)
     want = sorted(tuple(r) for r in full.collect() if r.vec_id >= CUT)
-    for tier in ("gemm", "hof"):
-        got = sorted(
-            tuple(r)
-            for r in semantic_dedup(
-                e,
-                n_cells=8,
-                threshold=0.35,
-                dominance_tier=tier,
-                delta_min_id=CUT,
-            ).collect()
-        )
-        assert got == want, tier
+    got = sorted(
+        tuple(r)
+        for r in semantic_dedup(
+            e, n_cells=8, threshold=0.35, delta_min_id=CUT
+        ).collect()
+    )
+    assert got == want
     assert len(want) > 0

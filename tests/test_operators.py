@@ -511,6 +511,7 @@ def test_selectexpr_twins_equal_column_forms(spark):
         _hex16_ord_long,
         _mh_band_exprs,
         _mh_band_posexplode_sql,
+        _mh_hash_exprs_sql,
     )
     from ppdb_parser_spark.queries.governance import (
         _B_SEEDS,
@@ -537,14 +538,9 @@ def test_selectexpr_twins_equal_column_forms(spark):
             for s in range(16)
         ],
     )
-    h_exprs = [
-        f"(cast(conv(substring(md5(concat('{s}:', shingle)), 1, 8), 16, 10)"
-        f" as bigint) - 2147483648) * 4294967296"
-        f" + cast(conv(substring(md5(concat('{s}:', shingle)), 9, 8), 16, 10)"
-        f" as bigint) as h{s}"
-        for s in range(16)
-    ]
-    assert key(sh.selectExpr("shingle", *h_exprs)) == key(col_form)
+    assert key(sh.selectExpr("shingle", *_mh_hash_exprs_sql(16))) == key(
+        col_form
+    )
 
     # band posexplode over known signatures
     sigs = col_form.selectExpr(
@@ -667,6 +663,54 @@ def test_span_scrub_minority_rebuild_identity(spark):
     new3 = key(span_scrub_intra(docs, n=3))
     assert new3 == key(old_form(docs, covered3))
     assert {r[0]: r for r in new3}[7][2] > 0  # intra repeats now scrubbed
+
+
+def test_span_scrub_rejects_helper_column_names(spark):
+    """The scrub rebuild joins its own helper columns onto the caller's
+    frame, so an id or text column with one of those names would
+    silently collide: both scrub operators reject it at plan time."""
+    from ppdb_parser_spark.operators.dedup import (
+        _SCRUB_HELPER_COLS,
+        span_scrub,
+        span_scrub_intra,
+    )
+
+    for id_col, text_col in (("doc_id", "__text"), ("n_tok", "text")):
+        df = spark.createDataFrame(
+            [(1, "a b c d"), (2, "a b c d")], [id_col, text_col]
+        )
+        for fn in (span_scrub, span_scrub_intra):
+            with pytest.raises(ValueError, match="collide"):
+                fn(df, n=2, id_col=id_col, text_col=text_col)
+    assert {"__cov", "__text", "n_tok", "n_kept", "scrub_text", "pos",
+            "token"} <= set(_SCRUB_HELPER_COLS)
+
+
+def test_no_tier_selector_parameters():
+    """One implementation per operator: no public operator takes an A/B
+    implementation selector (``tier``, ``*_tier``, ``assign``,
+    ``encode``). ``pair_tier`` is the one allowed name — dedup's
+    candidate stage picks it from the candidate volume, an observable
+    property of the input rather than a user-facing A/B knob."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import ppdb_parser_spark.operators as ops
+
+    allowed = {"pair_tier"}
+    bad = []
+    for info in pkgutil.iter_modules(ops.__path__):
+        mod = importlib.import_module(f"{ops.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            for p in inspect.signature(fn).parameters:
+                if p in allowed:
+                    continue
+                if p in ("tier", "assign", "encode") or p.endswith("_tier"):
+                    bad.append(f"{mod.__name__}.{name}({p})")
+    assert not bad, bad
 
 
 def test_media_headers_roundtrip():
@@ -874,85 +918,101 @@ def test_repetition_stats_known_values(spark):
 
 
 def test_repetition_kernel_equals_agg(spark):
-    """The round-15 zero-shuffle Arrow tier of repetition_stats must be
-    row- and bit-identical to the aggregation-cascade twin — including
-    split-semantics edges (empty text → [''], doubled/trailing spaces
-    keep empty tokens), short docs (NULL bigram/trigram fractions below
-    2/3 tokens), NULL text (doc vanishes), and the
-    no-duplicate-trigram 0.0 case."""
+    """repetition_stats (zero-shuffle Arrow kernel) equals a pure-Python
+    gram count per document — including split-semantics edges (empty
+    text → [''], doubled/trailing spaces keep empty tokens), short docs
+    (NULL bigram/trigram fractions below 2/3 tokens), NULL text (doc
+    vanishes), and the no-duplicate-trigram 0.0 case."""
+    from collections import Counter
+
     from ppdb_parser_spark.operators.text_analysis import repetition_stats
 
-    df = spark.createDataFrame(
-        [
-            (1, "a a a b"),
-            (2, "x y x y x y"),
-            (3, ""),                    # split('') = [''] -> 1 token
-            (4, "a  b "),               # empties kept: ['a','','b','']
-            (5, "solo"),                # 1 token: bigram/trigram NULL
-            (6, "two toks"),            # 2 tokens: trigram NULL
-            (7, None),                  # NULL text: absent from output
-            (8, "p q r"),               # 3 tokens, no dup trigram -> 0.0
-        ],
-        ["doc_id", "text"],
-    )
-    kern = {
-        r["doc_id"]: r
-        for r in repetition_stats(df, tier="kernel").collect()
+    docs = [
+        (1, "a a a b"),
+        (2, "x y x y x y"),
+        (3, ""),                    # split('') = [''] -> 1 token
+        (4, "a  b "),               # empties kept: ['a','','b','']
+        (5, "solo"),                # 1 token: bigram/trigram NULL
+        (6, "two toks"),            # 2 tokens: trigram NULL
+        (7, None),                  # NULL text: absent from output
+        (8, "p q r"),               # 3 tokens, no dup trigram -> 0.0
+    ]
+
+    def reference(text):
+        t = text.split(" ")
+        n = len(t)
+        c1 = Counter(t)
+        c2 = Counter(zip(t, t[1:]))
+        c3 = Counter(zip(t, t[1:], t[2:]))
+        return {
+            "n_tokens": n,
+            "top_token_frac": max(c1.values()) / n,
+            "top_bigram_frac": max(c2.values()) / (n - 1) if n >= 2 else None,
+            "dup_trigram_frac": (
+                sum(c for c in c3.values() if c > 1) / (n - 2)
+                if n >= 3
+                else None
+            ),
+        }
+
+    want = {d: reference(t) for d, t in docs if t is not None}
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    got = {
+        r["doc_id"]: {c: r[c] for c in want[1]}
+        for r in repetition_stats(df).collect()
     }
-    agg = {
-        r["doc_id"]: r for r in repetition_stats(df, tier="agg").collect()
-    }
-    assert set(kern) == set(agg) == {1, 2, 3, 4, 5, 6, 8}
-    for d in kern:
-        for c in (
-            "n_tokens",
-            "top_token_frac",
-            "top_bigram_frac",
-            "dup_trigram_frac",
-        ):
-            assert kern[d][c] == agg[d][c], (d, c, kern[d], agg[d])
+    assert got == want
 
 
 def test_winnow_kernel_equals_window(spark):
-    """The round-16 zero-shuffle Arrow tier of winnow_fingerprints must
-    be row-identical (as a set) to the window-form twin — including
-    split-semantics edges (empty text, kept empty tokens from doubled
-    spaces), docs shorter than k (no rows), docs with fewer than w
-    k-grams (single whole-doc window), exact-w docs, and NULL text
-    (doc vanishes)."""
+    """winnow_fingerprints (zero-shuffle Arrow kernel) equals a
+    pure-Python winnowing replay (md5 16-hex-char prefix per word
+    k-gram, MIN of every full w-window, one whole-doc window for docs
+    with fewer than w k-grams) — including split-semantics edges (empty
+    text, kept empty tokens from doubled spaces), docs shorter than k
+    (no rows), exact-w docs, and NULL text (doc vanishes)."""
+    import hashlib
+
     from ppdb_parser_spark.operators.text_analysis import (
         winnow_fingerprints,
     )
 
     long_a = " ".join(f"t{i % 7}" for i in range(40))
-    df = spark.createDataFrame(
-        [
-            (1, long_a),                   # many windows, repeats
-            (2, long_a + " tail words x"), # shared run with doc 1
-            (3, "a b c"),                  # < k tokens: no k-gram
-            (4, "a b c d"),                # exactly one k-gram (g < w)
-            (5, "a b c d e f g h"),        # g = 5 = w: one full window
-            (6, ""),                       # split('') = [''] -> no gram
-            (7, "p  q r  s t u"),          # doubled spaces keep empties
-            (8, None),                     # NULL text: absent
-        ],
-        ["doc_id", "text"],
-    )
+    docs = [
+        (1, long_a),                   # many windows, repeats
+        (2, long_a + " tail words x"), # shared run with doc 1
+        (3, "a b c"),                  # < k tokens: no k-gram
+        (4, "a b c d"),                # exactly one k-gram (g < w)
+        (5, "a b c d e f g h"),        # g = 5 = w: one full window
+        (6, ""),                       # split('') = [''] -> no gram
+        (7, "p  q r  s t u"),          # doubled spaces keep empties
+        (8, None),                     # NULL text: absent
+    ]
+
+    def reference(kk, ww):
+        out = set()
+        for d, text in docs:
+            if text is None:
+                continue
+            t = text.split(" ")
+            h = [
+                hashlib.md5(" ".join(t[i : i + kk]).encode()).hexdigest()[:16]
+                for i in range(len(t) - kk + 1)
+            ]
+            if not h:
+                continue
+            starts = range(max(1, len(h) - ww + 1))
+            out |= {(d, min(h[i : i + ww])) for i in starts}
+        return out
+
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
     for kk, ww in ((4, 5), (2, 3)):
-        kern = {
+        got = {
             (r["doc_id"], r["fingerprint"])
-            for r in winnow_fingerprints(
-                df, k=kk, w=ww, tier="kernel"
-            ).collect()
+            for r in winnow_fingerprints(df, k=kk, w=ww).collect()
         }
-        win = {
-            (r["doc_id"], r["fingerprint"])
-            for r in winnow_fingerprints(
-                df, k=kk, w=ww, tier="window"
-            ).collect()
-        }
-        assert kern == win, (kk, ww, kern ^ win)
-        assert kern, "edge fixture produced no fingerprints at all"
+        assert got == reference(kk, ww), (kk, ww)
+        assert got, "edge fixture produced no fingerprints at all"
 
 
 def test_winnowing_guarantee_and_match(spark):
@@ -2315,200 +2375,255 @@ def test_gemm_assign_round_fastpath_matches_f_round(spark):
     assert [int(x) for x in fast] == [r["r"] for r in jvm]
 
 
-def test_ivf_family_gemm_equals_hof(spark):
-    """Every sim_ivf_* operator produces IDENTICAL rows on the Arrow/GEMM
-    assignment path and the interpreted HOF path — including on a corpus
-    salted with duplicated seed vectors, which forces exact round-6
-    cosine TIES across cells and exercises the kernel's Decimal
-    fallback + smaller-cell-id tiebreak."""
+def _oracle_check_salted(spark, sf_dir, tmp_dir, salted, names):
+    """Run the registered queries ``names`` on a copy of the ``sf_dir``
+    fixture whose ``embeddings`` table is replaced by ``salted``, and
+    check each against its DuckDB oracle on the same copy — the oracle
+    parity sweep, pointed at edge inputs the fixture does not contain."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from ppdb_parser_spark.plans.oracle import compare_frames, duck_connect
+    from ppdb_parser_spark.sources.tables import TABLE_NAMES, table_path
+
+    out = str(tmp_dir)
+    for t in TABLE_NAMES:
+        if t != "embeddings":
+            os.symlink(table_path(sf_dir, t), table_path(out, t))
+    pq.write_table(
+        salted.select("vec_id", "embedding", "label").toArrow(),
+        table_path(out, "embeddings"),
+    )
+    con = duck_connect(out)
+    for name in names:
+        spec = REGISTRY[name]
+        got = spec.fn(spark, out).toPandas()
+        assert len(got) > 0, name
+        r = compare_frames(name, got, con.execute(spec.oracle).df())
+        assert r.ok, (name, r.detail)
+
+
+def _round_half_away(v):
+    """Independent numpy replay of ``F.round(v, 0)`` (half away from
+    zero on the double's exact value): the fractional part of a double
+    is exact, so the half-compare never rounds."""
+    import numpy as np
+
+    t = np.trunc(v)
+    return (t + np.where(np.abs(v - t) >= 0.5, np.sign(v), 0.0)).astype(
+        np.int64
+    )
+
+
+def test_ivf_family_gemm_equals_hof(spark, sf_dir, tmp_path):
+    """The IVF family's GEMM cell assignment matches the DuckDB oracles
+    of every ``sim_ivf*`` query on a corpus salted with (a) duplicated
+    seed vectors, which tie each other in every top-k (vec_id
+    tiebreak), and (b) normalized midpoints of seed pairs, whose
+    cosines to the two seeds agree to float32 precision — round-6 ties
+    across cells that take the kernel's Decimal fallback and its
+    smaller-cell-id tiebreak."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from ppdb_parser_spark.operators import similarity as SIM
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    # duplicate seed 3's embedding onto fresh ids: those rows tie
-    # round-6 cosine 1.0 against cell 3 and (via any duplicate-seed
-    # pairs) across cells when seeds themselves collide
+    emb = load_table(spark, sf_dir, "embeddings")
     dupes = (
         emb.filter(F.col("vec_id") == 3)
         .crossJoin(spark.range(5).select((F.col("id") + 90000).alias("nid")))
-        .select(
-            F.col("nid").alias("vec_id"),
-            F.col("label"),
-            F.col("embedding"),
-        )
+        .select(F.col("nid").alias("vec_id"), "label", "embedding")
     )
-    salted = emb.select("vec_id", "label", "embedding").unionByName(dupes)
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    for build in (
-        lambda a: SIM.ivf_topk(salted, n_cells=8, probe_id=1, n_probe=2, k=7, assign=a),
-        lambda a: SIM.ivf_batch_topk(
-            salted, probe_pred=F.col("vec_id") % 100 == 1, n_cells=8,
-            n_probe=2, k=5, assign=a,
+    seeds = {
+        r.vec_id: np.asarray(r.embedding, dtype=np.float64)
+        for r in emb.filter(F.col("vec_id") < 8).collect()
+    }
+    mids = spark.createDataFrame(
+        [
+            (
+                91000 + i,
+                0,
+                [
+                    float(x)
+                    for x in (
+                        seeds[a] / np.linalg.norm(seeds[a])
+                        + seeds[b] / np.linalg.norm(seeds[b])
+                    ).astype(np.float32)
+                ],
+            )
+            for i, (a, b) in enumerate(
+                ((3, 5), (1, 2), (0, 7), (4, 6), (1, 6), (2, 5))
+            )
+        ],
+        "vec_id long, label int, embedding array<float>",
+    )
+    salted = (
+        emb.select("vec_id", "label", "embedding")
+        .unionByName(dupes)
+        .unionByName(mids)
+    )
+    _oracle_check_salted(
+        spark,
+        sf_dir,
+        tmp_path,
+        salted,
+        (
+            "sim_ivf_topk",
+            "sim_ivf_batch_topk",
+            "sim_ivf_kmeans_topk",
+            "sim_ivfpq_topk",
+            "sim_ivfpq_residual_topk",
         ),
-        lambda a: SIM.ivf_kmeans_topk(
-            salted, n_cells=8, probe_id=1, n_probe=2, k=7, assign=a
-        ),
-        lambda a: SIM.ivfpq_topk(
-            salted, probe_id=1, n_cells=8, n_probe=2, n_centroids=16,
-            m=8, k=10, rerank=50, dim=64, assign=a,
-        ),
-        lambda a: SIM.ivfpq_residual_topk(
-            salted, probe_id=1, n_cells=8, n_probe=2, n_centroids=16,
-            m=8, k=10, rerank=50, dim=64, assign=a,
-        ),
-    ):
-        assert rows(build("gemm")) == rows(build("hof"))
+    )
 
 
-def test_pq_encode_gemm_equals_hof(spark):
-    """pq_encode's Arrow/GEMM code assignment produces IDENTICAL
-    (codes, vnorm) to the in-plan HOF argmin — including on a corpus
-    salted with exact copies of centroid 5 (every subspace distance 0 →
-    the argmin must still pick centroid 5 by integer-tie first-index) and
-    with midpoint vectors equidistant between centroids."""
+def test_pq_encode_gemm_equals_hof(spark, sf_dir, tmp_path):
+    """pq_encode's Arrow/GEMM code assignment matches the ``sim_pq_encode``
+    DuckDB oracle on a corpus salted with exact copies of centroid 5:
+    every subspace distance is 0, so the argmin must still pick
+    centroid 5 by integer-tie first-index."""
     from pyspark.sql import functions as F
 
-    from ppdb_parser_spark.operators.similarity import pq_encode
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     dupes = (
         emb.filter(F.col("vec_id") == 5)
         .crossJoin(spark.range(4).select((F.col("id") + 80000).alias("nid")))
         .select(F.col("nid").alias("vec_id"), "label", "embedding")
     )
     salted = emb.select("vec_id", "label", "embedding").unionByName(dupes)
-
-    def rows(enc):
-        return sorted(
-            (r["vec_id"], tuple(r["codes"]), r["vnorm"])
-            for r in pq_encode(
-                salted, 16, 8, dim=64, encode=enc
-            ).collect()
-        )
-
-    assert rows("gemm") == rows("hof")
+    _oracle_check_salted(spark, sf_dir, tmp_path, salted, ("sim_pq_encode",))
 
 
-def test_lsh_sig_gemm_equals_hof(spark):
-    """The Arrow signature map (gemm_lsh_bits) produces IDENTICAL
-    candidate pairs and multiprobe results to the in-plan grid-dot sign
-    bits — including on vectors lying exactly on a hyperplane (projection
-    0 counts as sign 1 in both forms: >= 0)."""
+def test_lsh_sig_gemm_equals_hof(spark, sf_dir, tmp_path):
+    """The Arrow signature map (gemm_lsh_bits) yields exactly the band
+    candidates of an independent numpy replay of the grid-exact sign
+    bits (bit = Σ round(x·h·1e9) ≥ 0), and multiprobe top-k matches its
+    DuckDB oracle — including a zero vector lying on every hyperplane
+    (projection 0 counts as sign 1: >= 0)."""
+    from collections import defaultdict
+
+    import numpy as np
     from pyspark.sql import functions as F
 
     from ppdb_parser_spark.operators.similarity import (
         _lsh_band_candidates,
-        lsh_multiprobe_topk,
+        lsh_planes,
     )
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    # a zero vector projects to exactly 0 against every plane —
-    # the >= 0 boundary in both engines
+    emb = load_table(spark, sf_dir, "embeddings")
     zero = spark.createDataFrame(
         [(70001, 0, [0.0] * 64)], "vec_id long, label int, embedding array<double>"
-    ).select("vec_id", "label", F.col("embedding").cast("array<float>"))
-    salted = emb.select("vec_id", "label", "embedding").unionByName(
-        zero.withColumnRenamed("CAST(embedding AS ARRAY<FLOAT>)", "embedding")
+    ).select(
+        "vec_id", "label", F.col("embedding").cast("array<float>").alias("embedding")
+    )
+    salted = emb.select("vec_id", "label", "embedding").unionByName(zero)
+
+    rows = salted.select("vec_id", "embedding").collect()
+    ids = [r.vec_id for r in rows]
+    X = np.array(
+        [np.asarray(r.embedding, dtype=np.float32) for r in rows], np.float64
+    )
+    H = np.array(lsh_planes(16, 64, 42), dtype=np.float64)
+    grid = _round_half_away((X[:, None, :] * H[None, :, :]) * 1e9).sum(axis=2)
+    bits = grid >= 0
+    assert bits[ids.index(70001)].all()
+    buckets = defaultdict(list)
+    for i, b in zip(ids, bits):
+        for band in range(8):
+            buckets[(band, tuple(b[2 * band : 2 * band + 2]))].append(i)
+    want = set()
+    for members in buckets.values():
+        members = sorted(members)
+        for a in range(len(members)):
+            for c in range(a + 1, len(members)):
+                want.add((members[a], members[c]))
+    got = [
+        tuple(r)
+        for r in _lsh_band_candidates(
+            salted, 16, 8, 42, "vec_id", "embedding", 64
+        ).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    _oracle_check_salted(
+        spark, sf_dir, tmp_path, salted, ("sim_lsh_multiprobe_topk",)
     )
 
-    def pairs(tier):
-        return sorted(
-            map(
-                tuple,
-                _lsh_band_candidates(
-                    salted, 16, 8, 42, "vec_id", "embedding", 64,
-                    sig_tier=tier,
-                ).collect(),
-            )
-        )
 
-    assert pairs("gemm") == pairs("hof")
+def test_pq_kmeans_adc_gemm_equals_hof(spark, sf_dir, tmp_path):
+    """pq_kmeans_topk's trained-codebook re-encode + ADC kernel matches
+    the ``sim_pq_kmeans_topk`` DuckDB oracle when training DROPS a
+    cluster: vec 3 is salted to equal vec 2, so every subspace's
+    centroid 3 ties centroid 2 and loses every member — the kernel must
+    key centroids by their actual (non-contiguous) ids, not positions."""
+    from pyspark.sql import functions as F
 
-    def probe(tier):
-        return sorted(
-            map(
-                tuple,
-                lsh_multiprobe_topk(
-                    salted, probe_id=1, n_planes=8, k=10, max_flips=2,
-                    dim=64, sig_tier=tier,
-                ).collect(),
-            )
-        )
-
-    assert probe("gemm") == probe("hof")
-
-
-def test_pq_kmeans_adc_gemm_equals_hof(spark):
-    """pq_kmeans_topk's trained-codebook re-encode + ADC kernel produces
-    IDENTICAL results to the in-plan form — trained codebooks can drop
-    empty clusters, so the kernel must key centroids by their actual
-    (possibly non-contiguous) ids, not positions."""
-    from ppdb_parser_spark.operators.similarity import pq_kmeans_topk
+    from ppdb_parser_spark.operators.similarity import pq_build_codebook
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-
-    def rows(tier):
-        return sorted(
-            map(
-                tuple,
-                pq_kmeans_topk(
-                    emb, probe_id=1, n_centroids=16, m=8, k=10,
-                    rerank=50, dim=64, encode_tier=tier,
-                ).collect(),
-            )
+    emb = load_table(spark, sf_dir, "embeddings")
+    v2 = emb.filter(F.col("vec_id") == 2).select(
+        F.col("embedding").alias("e2")
+    )
+    salted = (
+        emb.crossJoin(F.broadcast(v2))
+        .select(
+            "vec_id",
+            "label",
+            F.when(F.col("vec_id") == 3, F.col("e2"))
+            .otherwise(F.col("embedding"))
+            .alias("embedding"),
         )
+        .localCheckpoint()
+    )
+    cb = pq_build_codebook(salted, 16, 8, dim=64)
+    assert not cb.filter(F.col("c") == 3).count(), "cluster 3 not dropped"
+    _oracle_check_salted(
+        spark, sf_dir, tmp_path, salted, ("sim_pq_kmeans_topk",)
+    )
 
-    assert rows("gemm") == rows("hof")
 
+def test_jl_project_gemm_equals_hof(spark, sf_dir):
+    """jl_project's Arrow map equals an independent numpy replay of the
+    exact projection (q = round(x·1e7) half away from zero, then the
+    int64 q @ signsᵀ) element for element, and enforces the |x| <= 37
+    overflow guard."""
+    import numpy as np
 
-def test_jl_project_gemm_equals_hof(spark):
-    """jl_project's Arrow tier (exact F.round replay + int64 q@signs^T)
-    matches the in-plan integer-fold tier element for element, and both
-    enforce the |x| <= 37 overflow guard."""
-    import pytest as _pytest
-
-    from ppdb_parser_spark.operators.linalg import jl_project
+    from ppdb_parser_spark.operators.linalg import JL_QSCALE, jl_project, jl_signs
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-
-    def rows(tier):
-        return sorted(
-            (r["vec_id"], tuple(r["jl"]))
-            for r in jl_project(emb, "embedding", tier=tier)
-            .select("vec_id", "jl")
-            .collect()
-        )
-
-    assert rows("gemm") == rows("hof")
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = jl_project(emb, "embedding").select("vec_id", "embedding", "jl").collect()
+    X = np.array(
+        [np.asarray(r.embedding, dtype=np.float32) for r in rows], np.float64
+    )
+    S = np.array(jl_signs(64, 16), dtype=np.int64)
+    want = _round_half_away(X * float(JL_QSCALE)) @ S.T
+    got = np.array([r.jl for r in rows], dtype=np.int64)
+    assert got.shape == want.shape == (len(rows), 16)
+    assert (got == want).all()
 
     bad = spark.createDataFrame(
         [(1, [100.0] * 64)], "vec_id long, embedding array<double>"
     )
-    for tier in ("gemm", "hof"):
-        with _pytest.raises(Exception, match="int64-safe grid bound"):
-            jl_project(bad, "embedding", tier=tier).collect()
+    with pytest.raises(Exception, match="int64-safe grid bound"):
+        jl_project(bad, "embedding").collect()
 
 
-def test_gemm_assign_nan_mirror(spark):
-    """Zero-norm input (a cosine denominator of 0) must FAIL LOUDLY on
-    both assignment tiers, identically in spirit (ADVICE r10 medium: the
-    kernel's candidate mask treated such rows as ncand==0 and emitted
-    uninitialized cell ids). The engine session runs Spark 4's default
-    ANSI mode, so the in-plan HOF divide raises DIVIDE_BY_ZERO — NaN
-    ordering is unreachable in-plan; the kernel mirrors the contract
-    with a pre-argmax ValueError on any zero denominator, on BOTH
-    arithmetic flavors and for both a zero-norm ROW and a zero-norm
-    SEED."""
-    import pytest
+def test_gemm_assign_nan_mirror(spark, sf_dir):
+    """Zero-norm input (a cosine denominator of 0) must FAIL LOUDLY
+    (ADVICE r10 medium: the kernel's candidate mask once treated such
+    rows as ncand==0 and emitted uninitialized cell ids). The engine
+    session runs Spark 4's default ANSI mode, so an in-plan cosine
+    divide raises DIVIDE_BY_ZERO — NaN ordering is unreachable in-plan;
+    the kernel mirrors the contract with a pre-argmax ValueError on any
+    zero denominator, on BOTH arithmetic flavors and for both a
+    zero-norm ROW and a zero-norm SEED."""
     from pyspark.sql import functions as F
 
     from ppdb_parser_spark.operators import similarity as SIM
@@ -2518,7 +2633,7 @@ def test_gemm_assign_nan_mirror(spark):
     )
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     zero = F.array_repeat(F.lit(0.0), 64)
     base_cols = emb.select("vec_id", "label", "embedding")
     zero_row = spark.range(1).select(
@@ -2534,19 +2649,14 @@ def test_gemm_assign_nan_mirror(spark):
     )
 
     for salted in (salted_row, salted_seed):
-        # HOF tier: ANSI DIVIDE_BY_ZERO
-        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            SIM.ivf_topk(
-                salted, n_cells=8, probe_id=1, n_probe=2, k=7, assign="hof"
-            ).collect()
-        # kernel tier: loud too — the pre-argmax guard, or (zero-ROW
-        # case) the downstream in-plan cosine's own ANSI divide, whose
-        # stage can evaluate first
+        # the pre-argmax guard, or (zero-ROW case) the downstream
+        # in-plan cosine's own ANSI divide, whose stage can evaluate
+        # first
         with pytest.raises(
             Exception, match="zero cosine denominator|DIVIDE_BY_ZERO"
         ):
             SIM.ivf_topk(
-                salted, n_cells=8, probe_id=1, n_probe=2, k=7, assign="gemm"
+                salted, n_cells=8, probe_id=1, n_probe=2, k=7
             ).collect()
 
     # direct kernel calls (no downstream division) pin the kernel's own
@@ -2583,20 +2693,6 @@ def test_gemm_assign_nan_mirror(spark):
     # and the semantic kernel's _ucos guard
     with pytest.raises(Exception, match="zero cosine denominator"):
         SIM.semantic_dedup_gemm(salted_seed, n_cells=8).collect()
-
-    # clean data: tiers still identical (the guard is zero-cost no-op)
-    def rows(a):
-        return sorted(
-            map(
-                tuple,
-                SIM.ivf_topk(
-                    base_cols, n_cells=8, probe_id=1, n_probe=2, k=7,
-                    assign=a,
-                ).collect(),
-            )
-        )
-
-    assert rows("gemm") == rows("hof")
 
 
 def test_kernel_block_count_bytes_aware(spark):
@@ -2638,29 +2734,56 @@ def test_kernel_block_count_bytes_aware(spark):
     assert KERNEL_BLOCK_BYTES == 128 << 20
 
 
-def test_cosine_topk_fold_kernel_equivalence(spark):
-    """cosine_topk_by_id's two tiers — the in-plan F.aggregate fold
-    (default: measured faster, the single-probe O(n·dim) scan is
-    boundary-dominated, see the operator docstring) and the
-    fold_dot_cols Arrow kernel — return IDENTICAL rows: the kernel
-    replays the left-fold sum dimension-by-dimension and leaves sqrt,
-    divide and round in-plan (VERDICT r10 item 3)."""
+def test_cosine_topk_fold_kernel_equivalence(spark, sf_dir):
+    """cosine_topk_by_id's in-plan F.aggregate fold equals an independent
+    numpy replay of the same arithmetic — left-fold float sums
+    accumulated dimension by dimension, sqrt, divide, F.round-exact
+    round-6 — on the fixture salted with two exact copies of the probe:
+    they tie at cosine 1.0 and must order by id."""
+    import math
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
     from ppdb_parser_spark.operators import similarity as SIM
+    from ppdb_parser_spark.operators.similarity import _round6_half_up
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-
-    def rows(t):
-        return sorted(
-            map(
-                tuple,
-                SIM.cosine_topk_by_id(
-                    emb, probe_id=0, k=25, tier=t
-                ).collect(),
-            )
-        )
-
-    assert rows("fold") == rows("kernel")
+    emb = load_table(spark, sf_dir, "embeddings")
+    dupes = (
+        emb.filter(F.col("vec_id") == 0)
+        .crossJoin(spark.range(2).select((F.col("id") + 95000).alias("nid")))
+        .select(F.col("nid").alias("vec_id"), "label", "embedding")
+    )
+    salted = emb.select("vec_id", "label", "embedding").unionByName(dupes)
+    rows = salted.collect()
+    X = np.array(
+        [np.asarray(r.embedding, dtype=np.float32) for r in rows], np.float64
+    )
+    p = X[[r.vec_id for r in rows].index(0)]
+    dot = np.zeros(len(rows))
+    ssq = np.zeros(len(rows))
+    for t in range(X.shape[1]):
+        dot += X[:, t] * p[t]
+        ssq += X[:, t] * X[:, t]
+    pn = 0.0
+    for t in range(X.shape[1]):
+        pn += p[t] * p[t]
+    pn = math.sqrt(pn)
+    want = sorted(
+        (
+            (r.vec_id, r.label, _round6_half_up(d / (math.sqrt(s) * pn)))
+            for r, d, s in zip(rows, dot, ssq)
+            if r.vec_id != 0
+        ),
+        key=lambda t: (-t[2], t[0]),
+    )[:25]
+    got = [
+        tuple(r)
+        for r in SIM.cosine_topk_by_id(salted, probe_id=0, k=25).collect()
+    ]
+    assert got == want
+    assert [g[0] for g in got[:2]] == [95000, 95001]
 
 
 def test_span_scrub_semantics(spark):
@@ -2767,17 +2890,20 @@ def test_span_scrub_intra_semantics(spark):
     assert out[4] == (2, 0, "p q")
 
 
-def test_semantic_decontaminate_tier_equivalence(spark):
-    """The gemm (Arrow int64 GEMM + max-decides-EXISTS) and hof
-    (in-plan per-pair EXISTS) tiers of semantic_decontaminate return
-    IDENTICAL flags — on the fixture embeddings at several thresholds
-    including ones near the observed cosine mass."""
+def test_semantic_decontaminate_tier_equivalence(spark, sf_dir):
+    """semantic_decontaminate (Arrow int64 GEMM + max-decides-EXISTS)
+    flags exactly the train rows an independent pure-Python replay
+    flags — some eval vector with round6(cos) >= threshold on the
+    quantize-once grid — at several thresholds including ones near the
+    observed cosine mass."""
+    import hashlib
+
     from pyspark.sql import functions as F
 
     from ppdb_parser_spark.operators.similarity import semantic_decontaminate
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     is_eval = (
         F.substring(
             F.md5(F.concat(F.lit("eval:"), F.col("vec_id").cast("string"))),
@@ -2786,17 +2912,27 @@ def test_semantic_decontaminate_tier_equivalence(spark):
         )
         < "0ccc"
     )
-
-    def rows(t, thr):
-        return sorted(
-            (r["vec_id"], r["contaminated"])
-            for r in semantic_decontaminate(
-                emb, is_eval, threshold=thr, tier=t
-            ).collect()
-        )
-
+    qv = _sem_reference_quant(emb)
+    ev = {
+        i
+        for i in qv
+        if hashlib.md5(f"eval:{i}".encode()).hexdigest()[:4] < "0ccc"
+    }
+    assert ev and len(ev) < len(qv)
+    best = {
+        t: max(_sem_reference_cos(qv[t], qv[e]) for e in ev)
+        for t in qv
+        if t not in ev
+    }
     for thr in (0.2, 0.35, 0.5, 0.9):
-        assert rows("gemm", thr) == rows("hof", thr), thr
+        got = {
+            r["vec_id"]: r["contaminated"]
+            for r in semantic_decontaminate(
+                emb, is_eval, threshold=thr
+            ).collect()
+        }
+        assert got == {t: b >= thr for t, b in best.items()}, thr
+    assert len({b >= 0.2 for b in best.values()}) == 2
 
 
 def test_np_round6_matches_f_round(spark):
@@ -2834,53 +2970,80 @@ def test_np_round6_matches_f_round(spark):
     assert all(math.copysign(1.0, g) > 0 for g in got if g == 0.0)
 
 
-def test_pair_refine_gemm_equals_hof(spark):
-    """The Arrow pair-refine kernel (gemm_pair_cosine_refine) and the
-    in-plan grid-dot fold produce IDENTICAL (id_a, id_b, cosine) rows
-    for both LSH pair queries, and both tiers fail loudly (ANSI
-    DIVIDE_BY_ZERO / ValueError) on a zero-norm vector instead of
-    diverging."""
+def test_pair_refine_gemm_equals_hof(spark, sf_dir):
+    """The Arrow pair-refine kernel (gemm_pair_cosine_refine) behind the
+    checked LSH join keeps exactly the band candidates an independent
+    numpy replay keeps — grid cosine round6((Σ round(va·vb·1e9) / 1e9)
+    / (na·nb)) >= τ, grid norms round6(√(Σ round(x²·1e9) / 1e9)) — with
+    identical cosines; the JL-screened join emits a non-empty subset of
+    those pairs with the same cosines; and the kernel fails loudly on a
+    zero-norm vector instead of emitting a NaN decision."""
+    import math
+
+    import numpy as np
     from pyspark.errors import PythonException
 
     from ppdb_parser_spark.operators.similarity import (
+        _lsh_band_candidates,
+        _round6_half_up,
         lsh_jl_screened_pairs,
         lsh_similarity_join_exact,
     )
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    for fn in (lsh_similarity_join_exact, lsh_jl_screened_pairs):
-        by_tier = {
-            t: sorted(
-                map(
-                    tuple,
-                    fn(
-                        emb,
-                        threshold=0.35,
-                        n_planes=16,
-                        n_bands=8,
-                        seed=42,
-                        dim=64,
-                        refine_tier=t,
-                    ).collect(),
-                )
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = emb.select("vec_id", "embedding").collect()
+    pos = {r.vec_id: i for i, r in enumerate(rows)}
+    X = np.array(
+        [np.asarray(r.embedding, dtype=np.float32) for r in rows], np.float64
+    )
+    nrm = np.array(
+        [
+            _round6_half_up(
+                math.sqrt(float(int(_round_half_away((x * x) * 1e9).sum())) / 1e9)
             )
-            for t in ("gemm", "hof")
-        }
-        assert by_tier["gemm"] == by_tier["hof"], fn.__name__
-        assert len(by_tier["gemm"]) > 0, fn.__name__
+            for x in X
+        ]
+    )
+    cand = np.array(
+        [
+            (pos[r.id_a], pos[r.id_b], r.id_a, r.id_b)
+            for r in _lsh_band_candidates(
+                emb, 16, 8, 42, "vec_id", "embedding", 64
+            ).collect()
+        ],
+        dtype=np.int64,
+    )
+    want = {}
+    for lo in range(0, len(cand), 20_000):
+        c = cand[lo : lo + 20_000]
+        dg = _round_half_away((X[c[:, 0]] * X[c[:, 1]]) * 1e9).sum(axis=1)
+        cos = (dg.astype(np.float64) / 1e9) / (nrm[c[:, 0]] * nrm[c[:, 1]])
+        # round-6 is monotone: only pairs within 1e-6 below τ can round up
+        for i in np.nonzero(cos >= 0.35 - 1e-6)[0]:
+            r6 = _round6_half_up(cos[i])
+            if r6 >= 0.35:
+                want[(int(c[i, 2]), int(c[i, 3]))] = r6
+    assert want
+    kw = dict(threshold=0.35, n_planes=16, n_bands=8, seed=42, dim=64)
+    got = {
+        (r.id_a, r.id_b): r.cosine
+        for r in lsh_similarity_join_exact(emb, **kw).collect()
+    }
+    assert got == want
+    screened = {
+        (r.id_a, r.id_b): r.cosine
+        for r in lsh_jl_screened_pairs(emb, **kw).collect()
+    }
+    assert screened and all(want[p] == c for p, c in screened.items())
 
-    # zero-norm mirror: both tiers raise (never a silent NaN decision)
+    # zero-norm mirror: the kernel raises (never a silent NaN decision)
     zero = spark.createDataFrame(
         [(70001, [0.0] * 64)], "vec_id long, embedding array<double>"
     ).select("vec_id", F.col("embedding").cast("array<float>").alias("embedding"))
     salted = emb.select("vec_id", "embedding").unionByName(zero)
-    for tier, exc in (("gemm", PythonException), ("hof", Exception)):
-        with pytest.raises(exc):
-            lsh_similarity_join_exact(
-                salted, threshold=0.35, n_planes=16, n_bands=8,
-                seed=42, dim=64, refine_tier=tier,
-            ).collect()
+    with pytest.raises(PythonException, match="zero cosine denominator"):
+        lsh_similarity_join_exact(salted, **kw).collect()
 
 
 def test_lsh_first_match_candidates_match_reference(spark):
@@ -2973,11 +3136,10 @@ def test_jl_screen_gemm_matches_decimal_at_bound(spark):
 
 
 def test_semantic_decontaminate_zero_norm_both_tiers_raise(spark):
-    """ADVICE r11 claimed the hof tier silently passes zero-norm rows
-    the gemm tier rejects; probed under the engine session's ANSI mode
-    the hof tier's divide RAISES DIVIDE_BY_ZERO — the tiers already
-    agree (both fail loudly). Pin that, for zero-norm TRAIN and EVAL
-    vectors, plus the round-12 1e-6-grid threshold guard."""
+    """semantic_decontaminate fails loudly on zero-norm TRAIN and EVAL
+    vectors (the kernel's ValueError mirrors the DIVIDE_BY_ZERO an
+    in-plan cosine divide raises under ANSI — never a NaN decision),
+    and rejects a threshold off the 1e-6 grid at plan time."""
     from pyspark.sql import functions as F
 
     from ppdb_parser_spark.operators.similarity import semantic_decontaminate
@@ -2991,19 +3153,15 @@ def test_semantic_decontaminate_zero_norm_both_tiers_raise(spark):
         "vec_id long, embedding array<double>, ev boolean",
     )
     for df in (zero_train, zero_eval):
-        for tier in ("gemm", "hof"):
-            with pytest.raises(Exception):
-                semantic_decontaminate(
-                    df, F.col("ev"), threshold=0.35, tier=tier
-                ).collect()
-    # non-grid threshold rejected at plan time (gemm fast path cannot
-    # represent its decision boundary)
+        with pytest.raises(Exception, match="zero"):
+            semantic_decontaminate(df, F.col("ev"), threshold=0.35).collect()
+    # non-grid threshold rejected at plan time (the kernel's fast path
+    # cannot represent its decision boundary)
     with pytest.raises(ValueError, match="1e-6 grid"):
         semantic_decontaminate(
             zero_train.filter(F.col("vec_id") < 3),
             F.col("ev"),
             threshold=0.1234567,
-            tier="gemm",
         )
 
 
@@ -3055,13 +3213,57 @@ def test_lsh_first_match_wide_signature_fallback(spark):
     assert set(got) == ref
 
 
-def test_sem_dominance_gemm_equals_hof(spark):
-    """The per-cell dominance KERNEL (applyInPandas int64 GEMM +
-    _np_round6) and the cell-keyed self-join + interpreted per-pair fold
-    produce IDENTICAL (id, cell_id, kept) rows for every SemDeDup family
-    member — flat, two-level, gemm-assigned, and gemm two-level — and
+def _sem_reference_quant(emb):
+    """id -> (quantized int64 vector, round-6 norm): an independent numpy
+    replay of ``_sem_quant`` / ``_sem_qnorm6``."""
+    import math
+
+    import numpy as np
+
+    from ppdb_parser_spark.operators.similarity import (
+        SEM_QSCALE,
+        _round6_half_up,
+    )
+
+    out = {}
+    for r in emb.select("vec_id", "embedding").collect():
+        q = _round_half_away(
+            np.asarray(r.embedding, dtype=np.float32).astype(np.float64)
+            * float(SEM_QSCALE)
+        )
+        out[r.vec_id] = (
+            q,
+            _round6_half_up(math.sqrt(float(int(q @ q))) / SEM_QSCALE),
+        )
+    return out
+
+
+def _sem_reference_cos(qa, qb):
+    """round(cos, 6) on the quantize-once grid, with the in-plan
+    parenthesization ``(dot / 1e14) / (na · nb)``."""
+    from ppdb_parser_spark.operators.similarity import (
+        SEM_QSCALE,
+        _round6_half_up,
+    )
+
+    (a, na), (b, nb) = qa, qb
+    return _round6_half_up(
+        (float(int(a @ b)) / float(SEM_QSCALE) ** 2) / (na * nb)
+    )
+
+
+def test_sem_dominance_gemm_equals_hof(spark, sf_dir):
+    """The per-cell dominance kernel (_sem_cell_dominance) keeps exactly
+    the rows an independent pure-Python replay keeps — a row is dropped
+    iff a strictly-smaller id in the SAME cell has round6(cos) >=
+    threshold on the quantize-once int64 grid — for every SemDeDup
+    family member (flat, two-level, gemm-assigned, gemm two-level) and
     for an OFF-GRID threshold (the kernel rounds every pair exactly, so
-    no 1e-6-grid restriction applies to dominance)."""
+    no 1e-6-grid restriction applies to dominance). The cell assignment
+    is taken from the operator's output; the registered dedup_semantic*
+    queries pin it against their DuckDB oracles."""
+    from collections import defaultdict
+
     from ppdb_parser_spark.operators.similarity import (
         semantic_dedup,
         semantic_dedup_gemm,
@@ -3069,48 +3271,33 @@ def test_sem_dominance_gemm_equals_hof(spark):
     )
     from ppdb_parser_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cases = [
+    emb = load_table(spark, sf_dir, "embeddings")
+    qv = _sem_reference_quant(emb)
+
+    def check(df, thr):
+        rows = [tuple(r) for r in df.collect()]
+        cells = defaultdict(list)
+        for vid, cell, _ in rows:
+            cells[cell].append(vid)
+        want = {}
+        for members in cells.values():
+            members.sort()
+            for k, b in enumerate(members):
+                want[b] = not any(
+                    _sem_reference_cos(qv[a], qv[b]) >= thr
+                    for a in members[:k]
+                )
+        assert {vid: kept for vid, _, kept in rows} == want
+        assert not all(want.values()), "fixture dropped nothing"
+
+    for fn, kw in (
         (semantic_dedup, {}),
         (semantic_dedup_two_level, {"n_super": 4}),
         (semantic_dedup_gemm, {}),
         (semantic_dedup_gemm, {"two_level": True, "n_super": 4}),
-    ]
-    for fn, kw in cases:
-        by_tier = {
-            t: sorted(
-                map(
-                    tuple,
-                    fn(
-                        emb,
-                        n_cells=16,
-                        threshold=0.35,
-                        dominance_tier=t,
-                        **kw,
-                    ).collect(),
-                )
-            )
-            for t in ("gemm", "hof")
-        }
-        assert by_tier["gemm"] == by_tier["hof"], (fn.__name__, kw)
-    # off-grid threshold: exact in both tiers
-    g = sorted(
-        map(
-            tuple,
-            semantic_dedup(
-                emb, n_cells=8, threshold=0.1234567, dominance_tier="gemm"
-            ).collect(),
-        )
-    )
-    h = sorted(
-        map(
-            tuple,
-            semantic_dedup(
-                emb, n_cells=8, threshold=0.1234567, dominance_tier="hof"
-            ).collect(),
-        )
-    )
-    assert g == h and any(not r[2] for r in g)
+    ):
+        check(fn(emb, n_cells=16, threshold=0.35, **kw), 0.35)
+    check(semantic_dedup(emb, n_cells=8, threshold=0.1234567), 0.1234567)
 
 
 def test_jaccard_prefix_cross_corpus_mode(spark, sf_dir):

@@ -65,8 +65,7 @@ def test_ivf_topk_single_pass_no_driver_jobs(spark, sf_dir):
     Round 10: the GEMM assignment tier (VERDICT r9 item 1) pays exactly
     ONE corpus exchange — the ``groupBy(pmod(xxhash64(id), blocks))``
     that forms Arrow blocks for the numpy kernel — so the plan carries
-    exactly one hashpartitioning on __blk and no other shuffle; the HOF
-    tier's zero-shuffle shape is pinned separately below."""
+    exactly one hashpartitioning on __blk and no other shuffle."""
     sc = spark.sparkContext
     before = len(sc.statusTracker().getJobIdsForGroup() or [])
     df = _df(spark, sf_dir, "sim_ivf_topk")
@@ -80,24 +79,6 @@ def test_ivf_topk_single_pass_no_driver_jobs(spark, sf_dir):
     )
     assert plan.count("hashpartitioning") == 1, (
         f"sim_ivf_topk: unexpected extra hash-partition shuffle\n{plan}"
-    )
-
-
-def test_ivf_topk_hof_tier_stays_shuffle_free(spark, sf_dir):
-    """The interpreted-HOF assignment tier (assign='hof') keeps the
-    round-1..9 plan shape: a pure narrow map over the scan, zero
-    hash-partition exchanges — the A/B baseline the GEMM smoke measures
-    against."""
-    from pyspark.sql import functions as F
-
-    from ppdb_parser_spark.operators import similarity as SIM
-    from ppdb_parser_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    df = SIM.ivf_topk(e, n_cells=8, probe_id=1, n_probe=2, k=5, assign="hof")
-    plan = C.assert_take_ordered(df, "sim_ivf_topk[hof]")
-    assert "hashpartitioning" not in plan, (
-        f"sim_ivf_topk[hof]: unexpected hash-partition shuffle\n{plan}"
     )
 
 

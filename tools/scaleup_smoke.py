@@ -310,11 +310,8 @@ def main() -> None:
             _sh.rmtree(path, ignore_errors=True)
 
     if "pqgemm" in only or "pqgemm256" in only:
-        # PQ encode: Arrow/GEMM code assignment vs the in-plan HOF argmin
-        # (round 10 — the grid flavor of the interpreter weak: per-term
-        # F.round BigDecimal inside m × centroids grid sums per row).
-        # Forced methodology, fresh lineage per measurement; outputs
-        # asserted identical at the largest rung.
+        # PQ encode (Arrow/GEMM code assignment) growth law at 64
+        # centroids. Forced methodology, fresh lineage per measurement.
         from ppdb_parser_spark.operators.similarity import pq_encode
 
         emb = load_table(spark, sf, "embeddings")
@@ -326,117 +323,42 @@ def main() -> None:
             _block_bytes_check(
                 ek.select("vec_id", "label", "embedding"), f"pqgemm {k}x"
             )
-            walls = {}
-            for enc in ("hof", "gemm"):
-                walls[enc] = forced(
-                    lambda ek=ek, enc=enc: pq_encode(
-                        ek, 64, 8, dim=64, encode=enc
-                    )
-                )
-                print(
-                    f"pq_encode {k}x ({n} rows) centroids=64 "
-                    f"encode={enc}: {walls[enc]:.2f} s"
-                )
-            print(
-                f"  -> {k}x: hof/gemm wall ratio "
-                f"{walls['hof'] / walls['gemm']:.1f}x"
-            )
-            if k == 64:
-                rows_h = sorted(
-                    (r["vec_id"], tuple(r["codes"]))
-                    for r in pq_encode(ek, 64, 8, dim=64, encode="hof")
-                    .select("vec_id", "codes")
-                    .collect()
-                )
-                rows_g = sorted(
-                    (r["vec_id"], tuple(r["codes"]))
-                    for r in pq_encode(ek, 64, 8, dim=64, encode="gemm")
-                    .select("vec_id", "codes")
-                    .collect()
-                )
-                assert rows_h == rows_g, "pq encode tiers disagree"
-                print(f"  -> codes identical at 64x ({len(rows_g)} rows)")
+            wall = forced(lambda ek=ek: pq_encode(ek, 64, 8, dim=64))
+            print(f"pq_encode {k}x ({n} rows) centroids=64: {wall:.2f} s")
 
     if "lshgemm" in only:
-        # LSH SIGNATURE map: shuffle-free Arrow tier vs in-plan grid-dot
-        # sign bits (round 10). Times the signature relation ONLY — the
-        # band join downstream is identical between tiers, and on
-        # shifted-union copies (identical vectors → identical
-        # signatures) its candidate volume grows quadratically, which
-        # would swamp the map being measured (first attempt at 64×
-        # timed out on exactly that).
+        # LSH SIGNATURE map (shuffle-free Arrow map) growth law. Times
+        # the signature relation ONLY: on shifted-union copies
+        # (identical vectors → identical signatures) the band join's
+        # candidate volume grows quadratically, which would swamp the
+        # map being measured (a first attempt at 64× timed out on
+        # exactly that).
         from ppdb_parser_spark.operators.similarity import (
-            _grid_dot,
             gemm_lsh_bits,
             lsh_planes,
         )
 
         emb = load_table(spark, sf, "embeddings")
         planes = lsh_planes(16, 64, 42)
-
-        def sig_hof(ek):
-            bit_cols = [
-                F.when(
-                    _grid_dot(
-                        F.col("embedding"),
-                        F.array(*[F.lit(x) for x in p]),
-                    )
-                    >= 0,
-                    1,
-                )
-                .otherwise(0)
-                .alias(f"bit{i}")
-                for i, p in enumerate(planes)
-            ]
-            return ek.select(F.col("vec_id"), *bit_cols)
-
-        def sig_gemm(ek):
-            return gemm_lsh_bits(
-                ek, planes, id_col="vec_id", vec_col="embedding"
-            ).select(
-                "vec_id",
-                *[
-                    F.get(F.col("bits"), i).alias(f"bit{i}")
-                    for i in range(16)
-                ],
-            )
-
         for k in (1, 16, 64):
             ek = emb if k == 1 else _shifted_union(emb, "vec_id", k)
             ek = ek.localCheckpoint(eager=True)
             n = ek.count()
-            walls = {}
-            for tier, build in (("hof", sig_hof), ("gemm", sig_gemm)):
-                walls[tier] = forced(lambda b=build, ek=ek: b(ek))
-                print(
-                    f"lsh_signatures {k}x ({n} rows) planes=16 "
-                    f"sig={tier}: {walls[tier]:.2f} s"
-                )
-            print(
-                f"  -> {k}x: hof/gemm wall ratio "
-                f"{walls['hof'] / walls['gemm']:.1f}x"
+            wall = forced(
+                lambda ek=ek: gemm_lsh_bits(
+                    ek, planes, id_col="vec_id", vec_col="embedding"
+                ).select("vec_id", "bits")
             )
-            if k == 64:
-                h = sorted(map(tuple, sig_hof(ek).collect()))
-                g = sorted(map(tuple, sig_gemm(ek).collect()))
-                assert h == g, "signature tiers disagree"
-                print(f"  -> signatures identical at 64x ({len(g)} rows)")
+            print(f"lsh_signatures {k}x ({n} rows) planes=16: {wall:.2f} s")
 
     if "ivfgemm" in only or "ivfgemm256" in only:
-        # GEMM vs interpreted-HOF cell assignment (VERDICT r9 item 1):
         # single-probe ivf_topk at a realistic 256-cell count so the
-        # O(n·cells·dim) ASSIGNMENT map dominates the wall (one probe →
-        # the candidate/top-k tail stays tiny at every rung, unlike the
-        # batch query where candidates grow with the probe count).
+        # O(n·cells·dim) GEMM ASSIGNMENT map dominates the wall (one
+        # probe → the candidate/top-k tail stays tiny at every rung).
         # Forced-methodology timing (fresh lineage per measurement — the
-        # gemm tier's block-shuffle files must not be reused). Expect the
-        # HOF wall to grow with the interpreter's ~per-row-ms law and the
-        # gemm wall to stay ~flat relative to it (the ~100x interpreter
-        # delta round 8 measured for SemDeDup assignment); outputs must
-        # be IDENTICAL at the largest rung.
+        # block-shuffle files must not be reused).
         emb = load_table(spark, sf, "embeddings")
         cells = 256
-        rows = {}
         ks = (1, 16, 64, 256) if "ivfgemm256" in only else (1, 16, 64)
         for k in ks:
             ek = emb if k == 1 else _shifted_union(emb, "vec_id", k)
@@ -445,40 +367,10 @@ def main() -> None:
             _block_bytes_check(
                 ek.select("vec_id", "label", "embedding"), f"ivfgemm {k}x"
             )
-            for a in ("hof", "gemm"):
-                rows[(k, a)] = forced(
-                    lambda ek=ek, a=a: ivf_topk(
-                        ek, n_cells=cells, n_probe=2, k=5, assign=a
-                    )
-                )
-                print(
-                    f"ivf_topk {k}x ({n} rows) cells={cells} "
-                    f"assign={a}: {rows[(k, a)]:.2f} s"
-                )
-            print(
-                f"  -> {k}x: hof/gemm wall ratio "
-                f"{rows[(k, 'hof')] / rows[(k, 'gemm')]:.1f}x"
+            wall = forced(
+                lambda ek=ek: ivf_topk(ek, n_cells=cells, n_probe=2, k=5)
             )
-            if k == 64:
-                got_h = sorted(
-                    map(
-                        tuple,
-                        ivf_topk(
-                            ek, n_cells=cells, n_probe=2, k=5, assign="hof"
-                        ).collect(),
-                    )
-                )
-                got_g = sorted(
-                    map(
-                        tuple,
-                        ivf_topk(
-                            ek, n_cells=cells, n_probe=2, k=5, assign="gemm"
-                        ).collect(),
-                    )
-                )
-                assert got_h == got_g, "gemm and hof tiers disagree"
-                print(f"  -> outputs identical at 64x ({len(got_g)} rows)")
-
+            print(f"ivf_topk {k}x ({n} rows) cells={cells}: {wall:.2f} s")
 
     if not only or "winnow" in only or "winnow256" in only:
         # winnowing + fingerprint match at growing corpus size: fresh-vocab
@@ -1575,8 +1467,9 @@ def main() -> None:
         # FIXED (collected once, broadcast once) while the train side
         # grows k-fold via id-shifted copies — the realistic shape (the
         # benchmark suite does not grow with the corpus). The per-row
-        # EXISTS map is shuffle-free, so wall should scale ~linearly in
-        # train rows with a constant broadcast term.
+        # train side runs as block GEMMs against the broadcast eval
+        # matrix, so wall should scale ~linearly in train rows with a
+        # constant broadcast term.
         from ppdb_parser_spark.operators.similarity import (
             semantic_decontaminate,
         )
@@ -1596,25 +1489,21 @@ def main() -> None:
             < "0ccc"
         ) & (F.col("vec_id") < 10_000_000)
 
-        def decon_report(frame, t):
+        def decon_report(frame):
             return (
-                semantic_decontaminate(frame, is_eval, threshold=0.35, tier=t)
+                semantic_decontaminate(frame, is_eval, threshold=0.35)
                 .groupBy("contaminated")
                 .count()
             )
 
-        # A/B both tiers per rung: the interpreted EXISTS is the map
-        # the kernel default exists to replace (round 11: 256x rung
-        # measured hof 91.1 s vs gemm 19.1 s, 4.8x)
-        for t in ("gemm", "hof"):
-            m1 = timed(f"semantic_decontaminate[{t}] 1x", decon_report(emb, t))
-            for k in (16, 64, 256):
-                mk = timed(
-                    f"semantic_decontaminate[{t}] {k}x",
-                    decon_report(_shifted_union(emb, "vec_id", k), t),
-                )
-                print(f"  -> {mk / m1:.1f}x time for {k}x train side "
-                      "(eval side fixed)")
+        m1 = timed("semantic_decontaminate 1x", decon_report(emb))
+        for k in (16, 64, 256):
+            mk = timed(
+                f"semantic_decontaminate {k}x",
+                decon_report(_shifted_union(emb, "vec_id", k)),
+            )
+            print(f"  -> {mk / m1:.1f}x time for {k}x train side "
+                  "(eval side fixed)")
 
     if "dsirscale" in only:
         # DSIR importance reweighting under corpus growth: the 4096-row
