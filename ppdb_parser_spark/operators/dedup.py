@@ -630,9 +630,10 @@ def jaccard_pairs_prefix(
     # the executed plan shows ZERO exchange reuse and SIX file scans:
     # Catalyst re-inlines the scan + shingling into every consumer. The
     # non-eager localCheckpoint makes the sharing real (materialized
-    # once per action; the operator stays a pure plan builder), which
-    # also collapses the upstream lineage — in pipeline_corpus_curation
-    # that is a quality join + dedup window, not just a scan.
+    # once), which also collapses the upstream lineage — in
+    # pipeline_corpus_curation that is a quality join + dedup window,
+    # not just a scan. With AQE on, the call runs the repartition's
+    # shuffle-map stage as a job at build time.
     base = (
         jaccard_packed_base(
             df, n, id_col, text_col, min_partitions=min_partitions
@@ -1416,16 +1417,18 @@ def winnow_match(
     """
     from .text_analysis import winnow_fingerprints
 
-    # LAZY localCheckpoints (no job at plan-construction time — the
-    # operator stays a pure plan builder): the fingerprint relation
+    # Non-eager localCheckpoint cut points: the fingerprint relation
     # feeds its own df aggregate AND the join probe, and the df-capped
     # ``kept`` relation feeds three consumers (both pair-join sides +
     # sizes). Without cut points Catalyst inlines the whole
     # window-backed fingerprint subtree into every consumer — measured
     # round 12: EIGHT Window replays and zero exchange reuse in the
     # executed plan (AQE reuses no exchange here), ~2.6 s of the 2.66 s
-    # query wall. With the cuts, the first action materializes each
-    # relation once and every consumer reads the shared RDD.
+    # query wall. With the cuts, each relation is computed once and
+    # every consumer reads the shared RDD. Not free at build time: with
+    # AQE on (session.py) the call itself runs every upstream
+    # shuffle-map stage as a job; only the final stage waits for the
+    # first action.
     fp = winnow_fingerprints(df, id_col, text_col, k=k, w=w).localCheckpoint(
         eager=False
     )

@@ -3776,7 +3776,6 @@ def semantic_dedup_gemm(
     vec_col: str = "embedding",
     seeds_from: DataFrame | None = None,
     n_blocks: int | None = None,
-    checkpoint: bool = False,
     two_level: bool = False,
     n_super: int | None = None,
 ) -> DataFrame:
@@ -3814,11 +3813,6 @@ def semantic_dedup_gemm(
       from the hot loop.)
     - the within-cell dominance tail is the shared
       :func:`_sem_cell_dominance` (round-6 ≥ threshold), unchanged.
-
-    ``checkpoint=True`` materializes the assignment once
-    (``localCheckpoint``) before the dominance tail — an optional
-    lineage cut (the dominance kernel consumes the assignment ONCE).
-    Engine default stays lazy; large-scale harnesses opt in.
 
     ``two_level=True`` (with ``n_super``) composes the hierarchy INTO
     the kernel — the answer to the measured 256× knee (BASELINE_HISTORY.md
@@ -3966,8 +3960,6 @@ def semantic_dedup_gemm(
         assign_batches,
         f"id {id_type}, __qv array<long>, __nrm double, cell_id int",
     ).withColumnRenamed("id", id_col)
-    if checkpoint:
-        assigned = assigned.localCheckpoint(eager=True)
     return _sem_cell_dominance(assigned, threshold, id_col)
 
 
@@ -4542,14 +4534,14 @@ def recommend_semantic_dedup_tier(
     if hierarchical_hint:
         rec.update(
             tier="semantic_dedup_gemm",
-            params={"two_level": True, "checkpoint": True},
+            params={"two_level": True},
             why="2-level structure: measured 256x step efficiency 0.75 "
             "vs flat 1.82 (BASELINE_HISTORY.md semdedupcluster ladder)",
         )
         return rec
     rec.update(
         tier="semantic_dedup_gemm",
-        params={"two_level": False, "checkpoint": True},
+        params={"two_level": False},
         why="kernel removes the ~1ms/row interpreter (measured 150s -> "
         "in-kernel at 64x); hierarchy without real 2-level structure "
         "collapses occupancy (measured max 7,169/128k vs 580)",

@@ -2083,8 +2083,7 @@ _SEMANTIC_GEMM_ORACLE = f"""
 def dedup_semantic_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import semantic_dedup_gemm
 
-    # at-scale tier: params (two_level off, checkpoint on — the Python
-    # stage has three dominance-tail consumers) come FROM the recommender
+    # at-scale tier: params (two_level off) come FROM the recommender
     # at the 64x-ladder regime its BASELINE_HISTORY.md rows measure
     params = _sem_tier_params(
         _SEM_LADDER_ROWS, _SEM_LADDER_CELLS, "semantic_dedup_gemm"
@@ -2205,8 +2204,8 @@ def dedup_semantic_gemm_h2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import semantic_dedup_gemm
 
     # hierarchical GEMM tier: the recommender only names it under a REAL
-    # 2-level hint (flat data collapses occupancy — measured); two_level/
-    # checkpoint come from its params, n_super is the fixture's structure
+    # 2-level hint (flat data collapses occupancy — measured); two_level
+    # comes from its params, n_super is the fixture's structure
     params = _sem_tier_params(
         _SEM_LADDER_ROWS,
         _SEM_LADDER_CELLS,

@@ -215,13 +215,17 @@ def test_connected_components_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_warns_on_non_convergence(spark):
+def test_connected_components_warns_on_non_convergence(spark, monkeypatch):
     """If the iteration budget is below the graph diameter the labels are
-    not final — the operator must say so instead of silently returning."""
+    not final — the operator must say so instead of silently returning.
+    The budget belongs to the distributed rounds (the driver tier always
+    converges), so the size bound is lowered to pin that tier."""
     import warnings
 
+    from ppdb_parser_spark.operators import graph
     from ppdb_parser_spark.operators.graph import connected_components
 
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "id_a long, id_b long"
     )
@@ -232,6 +236,80 @@ def test_connected_components_warns_on_non_convergence(spark):
         issubclass(w.category, RuntimeWarning) and "did not converge" in str(w.message)
         for w in caught
     )
+
+
+def test_connected_components_driver_tier_one_collect(spark):
+    """A 64-node chain (diameter 63, past the distributed loop's default
+    20 rounds) is solved on the driver: exact labels, no convergence
+    warning, and at most 3 Spark jobs, collecting the labels included
+    (the decision scan and the Arrow collect; the distributed loop pays
+    ~3 jobs per round)."""
+    import warnings
+
+    from ppdb_parser_spark.operators.graph import connected_components
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
+    )
+    group = "test-cc-driver-tier"
+    sc.setJobGroup(group, group)
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components(edges).collect()
+            }
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == dict.fromkeys(range(64), 0)
+    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
+    assert n_jobs <= 3, f"driver tier ran {n_jobs} Spark jobs"
+
+
+@pytest.mark.parametrize(
+    "schema, rows, bound, want",
+    [
+        (
+            "id_a string, id_b string",
+            [("c", "b"), ("x", "y")],
+            None,
+            {"b": "b", "c": "b", "x": "x", "y": "x"},
+        ),
+        (
+            "id_a long, id_b long",
+            [(2, 1), (2, None), (3, 4)],
+            None,
+            {1: 1, 2: 1, 3: 3, 4: 3},
+        ),
+        ("id_a long, id_b long", [(2, 1), (7, 8)], 1, {1: 1, 2: 1, 7: 7, 8: 7}),
+    ],
+    ids=["string_ids", "null_id", "over_bound"],
+)
+def test_connected_components_fallback_to_distributed(
+    spark, monkeypatch, schema, rows, bound, want
+):
+    """Non-integral ids, a null id and an edge count over the driver
+    bound each take the distributed rounds, never the driver collect."""
+    from ppdb_parser_spark.operators import graph
+
+    def no_driver(pairs):
+        raise AssertionError("driver tier taken")
+
+    monkeypatch.setattr(graph, "_driver_components", no_driver)
+    if bound is not None:
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", bound)
+    edges = spark.createDataFrame(rows, schema)
+    got = {
+        r["node"]: r["component"]
+        for r in graph.connected_components(edges).collect()
+        if r["node"] is not None
+    }
+    assert got == want
 
 
 def test_jaccard_variants_identical_pairs(spark, sf_dir):
@@ -3540,12 +3618,13 @@ def test_containment_index_path_equals_delta_self_join(spark):
     assert want, "delta fixture must be non-degenerate"
 
 
-def test_incremental_components_equals_from_scratch(spark):
+def test_incremental_components_equals_from_scratch(spark, monkeypatch):
     """Star-edge contraction (incremental_components): merging delta
     edges into a persisted base labeling must reach the identical
     min-label fixpoint as running CC from scratch over base ∪ delta
     edges — including a delta edge that MERGES two existing base
     components and a brand-new node chained through the delta."""
+    from ppdb_parser_spark.operators import graph
     from ppdb_parser_spark.operators.graph import (
         connected_components,
         incremental_components,
@@ -3558,20 +3637,23 @@ def test_incremental_components_equals_from_scratch(spark):
     delta_edges = spark.createDataFrame(
         [(3, 5), (6, 9)], "id_a int, id_b int"
     )
-    want = {
-        (r.node, r.component)
-        for r in connected_components(
-            base_edges.unionByName(delta_edges)
-        ).collect()
-    }
-    base_labels = connected_components(base_edges)
-    got = {
-        (r.node, r.component)
-        for r in incremental_components(base_labels, delta_edges).collect()
-    }
-    assert got == want
-    # everything merged into one component rooted at 1
-    assert {c for _, c in got} == {1}
+    # the driver tier (default bound), then the distributed rounds
+    for bound in (graph.DRIVER_MAX_EDGES, -1):
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", bound)
+        want = {
+            (r.node, r.component)
+            for r in connected_components(
+                base_edges.unionByName(delta_edges)
+            ).collect()
+        }
+        base_labels = connected_components(base_edges)
+        got = {
+            (r.node, r.component)
+            for r in incremental_components(base_labels, delta_edges).collect()
+        }
+        assert got == want
+        # everything merged into one component rooted at 1
+        assert {c for _, c in got} == {1}
 
 
 def test_semantic_index_path_equals_delta_self_contained(spark):

@@ -143,6 +143,73 @@ def test_star_components_equal_min_label_random_graphs(spark, edges):
 
 
 @st.composite
+def _typed_graphs(draw):
+    """Edge lists under 40 edges with self loops, duplicate and reversed
+    edges, typed ``int`` (negative ids included) or ``long`` (ids past
+    the int32 range)."""
+    id_type = draw(st.sampled_from(["int", "long"]))
+    scale, offset = (1, -10) if id_type == "int" else (2**33, -(2**40))
+    raw = draw(
+        st.lists(
+            st.tuples(st.integers(0, 15), st.integers(0, 15)),
+            min_size=1,
+            max_size=30,
+        )
+    )
+    x, y = raw[0]
+    raw = raw + [(y, x), (x, y), (x, x)]
+    edges = [(a * scale + offset, b * scale + offset) for a, b in raw]
+    return id_type, edges
+
+
+def _bfs_components(edges):
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out: dict[int, int] = {}
+    for start in adj:
+        if start in out:
+            continue
+        seen, frontier = {start}, [start]
+        for u in frontier:
+            for v in adj[u] - seen:
+                seen.add(v)
+                frontier.append(v)
+        out.update(dict.fromkeys(seen, min(seen)))
+    return out
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(graph=_typed_graphs())
+def test_connected_components_tiers_equal_bfs(spark, graph):
+    """The driver tier (numpy) and the distributed min-label rounds of
+    connected_components both reach a pure-Python BFS's labels (component
+    = min reachable id), with equal result schemas."""
+    from unittest import mock
+
+    from ppdb_parser_spark.operators import graph as G
+
+    id_type, edges = graph
+    df = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    with mock.patch.object(
+        G, "_driver_components", wraps=G._driver_components
+    ) as driver:
+        on_driver = G.connected_components(df)
+    assert driver.call_count == 1
+    with mock.patch.object(G, "DRIVER_MAX_EDGES", -1):
+        distributed = G.connected_components(df)
+    want = _bfs_components(edges)
+    assert {r["node"]: r["component"] for r in on_driver.collect()} == want
+    assert {r["node"]: r["component"] for r in distributed.collect()} == want
+    assert on_driver.schema == distributed.schema
+
+
+@st.composite
 def _vectors(draw):
     n = draw(st.integers(6, 20))
     dim = 4

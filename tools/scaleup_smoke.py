@@ -597,8 +597,8 @@ def main() -> None:
         # interpreted nested-HOF argmax costs ~1 ms/row at 512 cells
         # (150 s assignment-only at 64x), so flat and h2 stop at 16x —
         # their 16x rows already show the trend (flat superlinear, h2
-        # ~2x better). The GEMM tier (Arrow int64 Q@S.T, checkpoint=True
-        # so the kernel runs once) is the one that ladders to 256x.
+        # ~2x better). The GEMM tier (Arrow int64 Q@S.T; the dominance
+        # tail reads its assignment once) is the one that ladders to 256x.
         all_tiers = (
             (
                 "gemm_h2",
@@ -607,7 +607,6 @@ def main() -> None:
                     e,
                     n_cells=c,
                     seeds_from=sd,
-                    checkpoint=True,
                     two_level=True,
                     n_super=s,
                 ),
@@ -616,7 +615,7 @@ def main() -> None:
                 "gemm",
                 (16, 64, 256),
                 lambda e, c, s, sd: semantic_dedup_gemm(
-                    e, n_cells=c, seeds_from=sd, checkpoint=True
+                    e, n_cells=c, seeds_from=sd
                 ),
             ),
             (
@@ -833,14 +832,14 @@ def main() -> None:
             (
                 "gemm_h2",
                 lambda e, c, s, sd: semantic_dedup_gemm(
-                    e, n_cells=c, seeds_from=sd, checkpoint=True,
+                    e, n_cells=c, seeds_from=sd,
                     two_level=True, n_super=s,
                 ),
             ),
             (
                 "gemm_flat",
                 lambda e, c, s, sd: semantic_dedup_gemm(
-                    e, n_cells=c, seeds_from=sd, checkpoint=True
+                    e, n_cells=c, seeds_from=sd
                 ),
             ),
         ):
