@@ -506,8 +506,7 @@ def jaccard_pairs_from_index(
     )
     return _jaccard_prefix_tail(
         base, threshold, id_col,
-        delta_min_id=delta_min_id, cross_min_id=None, stage_probe=None,
-        nparts=nparts,
+        delta_min_id=delta_min_id, cross_min_id=None, nparts=nparts,
     )
 
 
@@ -532,8 +531,7 @@ def jaccard_pairs_full_from_index(
     )
     return _jaccard_prefix_tail(
         base, threshold, id_col,
-        delta_min_id=None, cross_min_id=None, stage_probe=None,
-        nparts=nparts,
+        delta_min_id=None, cross_min_id=None, nparts=nparts,
     )
 
 
@@ -546,8 +544,6 @@ def jaccard_pairs_prefix(
     min_partitions: int | None = None,
     delta_min_id: int | None = None,
     cross_min_id: int | None = None,
-    stage_probe: dict | None = None,
-    pair_tier: str | None = None,
 ) -> DataFrame:
     """Exact Jaccard-join via prefix filtering (AllPairs / PPJoin family —
     Bayardo, Ma & Srikant, "Scaling Up All Pairs Similarity Search",
@@ -644,7 +640,7 @@ def jaccard_pairs_prefix(
     return _jaccard_prefix_tail(
         base, threshold, id_col,
         delta_min_id=delta_min_id, cross_min_id=cross_min_id,
-        stage_probe=stage_probe, nparts=nparts, pair_tier=pair_tier,
+        nparts=nparts,
     )
 
 
@@ -652,8 +648,6 @@ def _prefix_pair_partials_kernel(
     pref: DataFrame,
     threshold: float,
     id_col: str,
-    delta_min_id: int | None,
-    cross_min_id: int | None,
     nparts: int,
 ) -> DataFrame:
     """Per-partition candidate-pair PARTIALS for the PPJoin tail — the
@@ -678,9 +672,7 @@ def _prefix_pair_partials_kernel(
     (fp, id) so within-group pair generation yields id_a < id_b for
     free (ids are distinct within an fp group — a document's prefix is
     a set); the PPJoin length filter ``t·n_a ≤ n_b ∧ t·n_b ≤ n_a`` is
-    the same float64 comparison the JVM evaluates; the
-    delta/cross-corpus id conjuncts are plain integer compares. The
-    caller's final groupBy merges partials (SUM(c), MAX(ia/ib)) —
+    the same float64 comparison the JVM evaluates. The caller's final groupBy merges partials (SUM(c), MAX(ia/ib)) —
     identical to what the join tier's partial+final hash aggregate
     computes, so the candidate SET is bit-identical (parity pinned in
     tests; the exchanged row volume is also identical — the join tier's
@@ -691,8 +683,8 @@ def _prefix_pair_partials_kernel(
     aggregate hash map; the prefix filter's df-ordering bounds
     per-fingerprint fan-out on Zipfian corpora. One residual trade: AQE
     skew-join splitting applied to the join tier but cannot split a
-    kernel partition — under extreme single-fingerprint skew prefer
-    ``pair_tier='join'`` (the A/B twin, kept verbatim)."""
+    kernel partition — one hot fingerprint holds all its pairs in one
+    task (the hot-key bound is ROADMAP direction 5)."""
     dtypes = dict(pref.dtypes)
     out_schema = (
         f"id_a {dtypes[id_col]}, id_b {dtypes[id_col]}, c bigint, "
@@ -700,8 +692,6 @@ def _prefix_pair_partials_kernel(
         f"na {dtypes['n']}, nb {dtypes['n']}"
     )
     t = float(threshold)
-    dmin = delta_min_id
-    cmin = cross_min_id
 
     def pair_batches(batches):
         import numpy as np
@@ -743,23 +733,6 @@ def _prefix_pair_partials_kernel(
         np.not_equal(fp_s[1:], fp_s[:-1], out=new[1:])
         gstart = np.flatnonzero(new)[np.cumsum(new) - 1]
         rank = np.arange(N, dtype=np.int64) - gstart
-        # delta/cross conjuncts prune BEFORE generation (the join tier's
-        # condition prunes as the join emits — generating Σ df² pairs to
-        # mask Σ df·df_delta would forfeit the incremental contract's
-        # cost shape). Ids ascend within a run, so a row's valid a-side
-        # partners are always a PREFIX of its run: delta mode zeroes the
-        # rank of non-delta b rows; cross mode additionally caps it at
-        # the run's count of sub-cutoff rows (= the earlier-rows-below-
-        # cmin count, a prefix because of the ascending order).
-        if dmin is not None:
-            rank = np.where(ids_s >= dmin, rank, 0)
-        if cmin is not None:
-            lt = ids_s < cmin
-            cum_excl = np.cumsum(lt) - lt
-            earlier_lt = cum_excl - cum_excl[gstart]
-            rank = np.where(
-                ids_s >= cmin, np.minimum(rank, earlier_lt), 0
-            )
         P = int(rank.sum())
         if P == 0:
             return
@@ -837,47 +810,27 @@ def _jaccard_prefix_tail(
     *,
     delta_min_id: int | None,
     cross_min_id: int | None,
-    stage_probe: dict | None,
     nparts: int | None = None,
-    pair_tier: str | None = None,
 ) -> DataFrame:
     """df count → canonical prefix slice → PPJoin candidate join with
     the positional c-bound → packed-set verification, shared by the
     self-join and persisted-index prefix-Jaccard forms. ``base`` arrives
     doc-keyed behind a lazy cut point (four consumers read it).
 
-    ``pair_tier='kernel'`` computes the candidate pair stream + its
-    partial aggregate in :func:`_prefix_pair_partials_kernel`;
-    ``'join'`` keeps the original fp-keyed self-join + hash aggregate
-    as the A/B twin (parity pinned in
-    tests/test_operators.py::test_jaccard_prefix_kernel_equals_join).
-    Both tiers feed the identical positional c-bound filter and
-    verification joins, so emitted pairs are bit-identical.
-
-    Default (``None``) resolves by candidate VOLUME, the quantity that
-    decides which tier wins (round-16 A/B, isolate_bench min-of-4):
-    full self-joins (Σ df_pref² pairs — 12.76 M at sf0.1) take the
-    kernel (dedup_jaccard_prefix 4.99 → 3.47 s, index-append full serve
-    4.59 → 3.23 s); delta/cross-restricted calls emit only
-    Σ df·df_delta pairs, where the kernel's fixed Python-boundary cost
-    exceeds the per-pair win (dedup_jaccard_incremental_indexed
-    1.58 → 2.04 s under the kernel — the same delta-sized lesson as
-    round 16's ``dict_width=0``), so they keep the join tier."""
-    if pair_tier is None:
-        pair_tier = (
-            "join"
-            if (delta_min_id is not None or cross_min_id is not None)
-            else "kernel"
-        )
-    if pair_tier not in ("kernel", "join"):
-        raise ValueError(
-            f"pair_tier must be 'kernel' or 'join', got {pair_tier!r}"
-        )
-    if stage_probe is not None:
-        # diagnostic hook (tools/stage_walls.py): expose the plan's stage
-        # boundaries for forced per-stage walls — pure plan objects, zero
-        # cost when unused. Keys follow the plan-shape comment above.
-        stage_probe["base"] = base
+    The candidate stage depends on the candidate VOLUME (round-16 A/B,
+    isolate_bench min-of-4). Full self-joins (Σ df_pref² pairs —
+    12.76 M at sf0.1) compute the pair stream + its partial aggregate in
+    :func:`_prefix_pair_partials_kernel` (dedup_jaccard_prefix
+    4.99 → 3.47 s, index-append full serve 4.59 → 3.23 s).
+    Delta/cross-restricted calls emit only Σ df·df_delta pairs, where
+    the kernel's fixed Python-boundary cost exceeds the per-pair win
+    (dedup_jaccard_incremental_indexed 1.58 → 2.04 s under the kernel —
+    the same delta-sized lesson as round 16's ``dict_width=0``), so they
+    run the fp-keyed self-join + hash aggregate, whose join condition
+    carries the id restriction. Both feed the identical positional
+    c-bound filter and verification joins, so emitted pairs are
+    bit-identical (parity pinned in
+    tests/test_operators.py::test_jaccard_prefix_kernel_equals_join)."""
     occ = base.select(id_col, "n", F.explode("fps").alias("fp"))
     freq = occ.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     keyed = occ.join(freq, "fp").select(
@@ -946,10 +899,7 @@ def _jaccard_prefix_tail(
     # (tests/test_operators.py::test_jaccard_prefix_positional_bound_sound
     # regression-pins the fix; the fixture corpora never exercised the
     # gap, which is why rounds 1-4 stayed oracle-green).
-    if stage_probe is not None:
-        stage_probe["freq"] = freq
-        stage_probe["pref"] = pref
-    if pair_tier == "kernel":
+    if delta_min_id is None and cross_min_id is None:
         # Arrow tier (round 16): pair generation + per-partition partial
         # aggregation inside _prefix_pair_partials_kernel; this final
         # aggregate merges the partials with the SAME operators the join
@@ -957,12 +907,7 @@ def _jaccard_prefix_tail(
         # join rows; MAX of partial maxes = MAX; na/nb are functionally
         # dependent on the pair), then the identical positional c-bound.
         partials = _prefix_pair_partials_kernel(
-            pref,
-            t,
-            id_col,
-            delta_min_id,
-            cross_min_id,
-            nparts or shuffle_width(base.sparkSession),
+            pref, t, id_col, nparts or shuffle_width(base.sparkSession)
         )
         cand = (
             partials.groupBy("id_a", "id_b")
@@ -982,9 +927,7 @@ def _jaccard_prefix_tail(
             )
             .select("id_a", "id_b")
         )
-        return _prefix_verify_tail(
-            cand, base, threshold, id_col, stage_probe
-        )
+        return _prefix_verify_tail(cand, base, threshold, id_col)
     a, b = pref.alias("a"), pref.alias("b")
     tc = F.lit(t)
 
@@ -1035,7 +978,7 @@ def _jaccard_prefix_tail(
         )
         .select("id_a", "id_b")
     )
-    return _prefix_verify_tail(cand, base, threshold, id_col, stage_probe)
+    return _prefix_verify_tail(cand, base, threshold, id_col)
 
 
 def _prefix_verify_tail(
@@ -1043,12 +986,9 @@ def _prefix_verify_tail(
     base: DataFrame,
     threshold: float,
     id_col: str,
-    stage_probe: dict | None,
 ) -> DataFrame:
     """Exact packed-set verification of the c-bound survivors — shared
-    verbatim by both candidate tiers of :func:`_jaccard_prefix_tail`."""
-    if stage_probe is not None:
-        stage_probe["cand"] = cand
+    verbatim by both candidate stages of :func:`_jaccard_prefix_tail`."""
     # verification sets come straight off the scan (base is a narrow map —
     # no shuffle to build them; the attach joins are tiny post-c-bound)
     sa = base.select(F.col(id_col).alias("id_a"), F.col("fps").alias("fps_a"))
@@ -1883,7 +1823,6 @@ def minhash_match(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_partitions: int | None = None,
-    stage_probe: dict | None = None,
     delta_min_id: int | None = None,
 ) -> DataFrame:
     """Deterministic relational MinHash-LSH near-dup join (Broder 1997
@@ -1933,9 +1872,6 @@ def minhash_match(
         .localCheckpoint(eager=False)
     )
     sigs = per_doc.drop("fps")
-    if stage_probe is not None:
-        # diagnostic hook (tools/stage_walls.py) — see jaccard_pairs_prefix
-        stage_probe["sigs"] = sigs
     bands = sigs.selectExpr(
         f"`{id_col}`", _mh_band_posexplode_sql(n_hashes, n_bands)
     )
@@ -1953,8 +1889,6 @@ def minhash_match(
         # dedup_minhash_incremental).
         cand = cand.filter(F.col("id_b") >= F.lit(delta_min_id))
     cand = cand.select("id_a", "id_b").distinct()
-    if stage_probe is not None:
-        stage_probe["cand"] = cand
     # Exact-Jaccard verification on PACKED per-doc fingerprint sets (the
     # `jaccard_pairs_prefix` layout, round 12): attach each side's sorted
     # int64 set to the candidate pair and count the intersection with one

@@ -1,33 +1,25 @@
 """Graph operators for dedup clustering (north-star pipeline need: collapse
 near-duplicate *pairs* into duplicate *groups* and elect a canonical doc).
 
-Two component algorithms, same unique fixpoint (component = min reachable
-id):
+Components have one distributed algorithm and one driver tier, both
+reaching the unique fixpoint component = min reachable id:
 
 - :func:`connected_components_star` — alternating large-star/small-star
   rounds (Kiveris et al. SoCC'14), O(log n) rounds independent of graph
-  diameter. THE SCALE PATH: a deep chain that would take min-label a
-  million propagation rounds converges in ~20 star rounds.
-- :func:`connected_components` — min-label propagation, for known-shallow
-  graphs (near-dup clusters). It has two tiers, picked by a checked
-  precondition on the input, not by a parameter:
-
-  - **driver tier** — both id columns integral, no null id and at most
-    :data:`DRIVER_MAX_EDGES` edges: the edges are collected once through
-    Arrow and solved in numpy (min-label hooking with pointer jumping,
-    any diameter). A real near-dup graph is tens to thousands of edges,
-    where every distributed round is pure job-scheduling overhead.
-  - **distributed tier** — anything else: a bounded driver-side
-    convergence loop, one join+agg per round (star pays two).
-
-The distributed loops run every iteration fully distributed and truncate
-lineage per round (localCheckpoint / checkpoint hook) so Catalyst analysis
-cost stays flat.
+  diameter: a chain that would take min-label propagation a million
+  rounds converges in ~20 star rounds. Every round runs fully
+  distributed and truncates lineage with a localCheckpoint, so Catalyst
+  analysis cost stays flat.
+- :func:`connected_components` — picks by a checked precondition on the
+  input, not by a parameter. With both id columns integral, no null id
+  and at most :data:`DRIVER_MAX_EDGES` edges, the edges are collected
+  once through Arrow and solved in numpy (min-label hooking with pointer
+  jumping, any diameter): a real near-dup graph is tens to thousands of
+  edges, where every distributed round is pure job-scheduling overhead.
+  Anything else runs the star rounds from the same cut.
 """
 
 from __future__ import annotations
-
-import warnings
 
 import numpy as np
 import pyarrow as pa
@@ -74,45 +66,24 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iterations: int = 20,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Label every vertex of the undirected edge set with the minimum
     vertex id reachable from it (its component id).
 
-    Returns (node, component). Deterministic: min-label propagation has a
-    unique fixpoint.
+    Returns (node, component). Deterministic: the labeling is the unique
+    fixpoint component = min reachable id.
 
-    Tier choice (module docstring): when both id columns are integral,
-    the edges are cut once (non-eager ``localCheckpoint``; with AQE on
-    the call runs the upstream shuffle-map stages) and one scan
-    materializes the cut while counting the edges and their null ids.
-    A null-free relation of at most :data:`DRIVER_MAX_EDGES` edges is
-    collected through Arrow and solved by :func:`_min_labels` — any
-    diameter, so ``max_iterations`` and ``checkpoint_every`` do not
-    apply and it never warns. Otherwise the distributed rounds below
-    start from the same cut, so the upstream pair generation is
-    computed once on either tier. Both tiers return the same schema
-    (names, types, nullability).
-
-    Distributed tier: ``checkpoint_every`` > 0 swaps the per-round
-    lineage truncation to a RELIABLE ``checkpoint`` every k rounds
-    (cluster-scale durability across executor loss; local runs keep the
-    cheaper ``localCheckpoint``).
-
-    Lineage discipline (same as :func:`connected_components_star`): the
-    adjacency is checkpointed ONCE and every round's label frame ends in
-    an EAGER checkpoint. Each round's plan embeds the previous round's
-    plan TWICE (the neighbor-min join and the label join), so plain
-    ``persist`` leaves the LOGICAL plan compounding exponentially even
-    though the data is cached — round ~30 of a slow-converging chain
-    spent 45+ minutes inside ``withNewExecutionId`` just BUILDING the
-    plan-description string for the convergence count (measured round 8,
-    hypothesis long-chain graph at max_iterations=50; the star variant
-    measured the same failure class at 2.8s→27.5s by round 2)."""
-    pairs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    The edges are cut once (non-eager ``localCheckpoint``; with AQE on
+    the call runs the upstream shuffle-map stages), and both paths read
+    that cut, so the upstream pair generation is computed once. When
+    both id columns are integral, one scan materializes the cut while
+    counting the edges and their null ids; a null-free relation of at
+    most :data:`DRIVER_MAX_EDGES` edges is collected through Arrow and
+    solved by :func:`_min_labels` (any diameter). Any other input runs
+    the star rounds of :func:`connected_components_star`. Both paths
+    return the same schema (names, types, nullability)."""
+    pairs = _cut_pairs(edges, src, dst)
     if all(isinstance(f.dataType, IntegralType) for f in pairs.schema):
-        pairs = pairs.localCheckpoint(eager=False)
         # the decision scan: one job (a no-op write materializes the cut
         # while the observation counts it — an aggregate would pay a
         # second, AQE shuffle-stage job)
@@ -127,85 +98,24 @@ def connected_components(
         stats = seen.get
         if stats["n_null"] == 0 and stats["n"] <= DRIVER_MAX_EDGES:
             return _driver_components(pairs)
-        edges, src, dst = pairs, "a", "b"
-    bidir = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        # non-eager (round 16): skips the eager checkpoint's count job.
-        # Not free: with AQE on, the call still runs the distinct's
-        # shuffle-map stage as a job. Round 1's convergence count then
-        # computes the adjacency once, shared by every reference in it
-        .localCheckpoint(eager=False)
-    )
-    labels = (
-        bidir.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-    prev_cached: DataFrame | None = None
-    n_changed = 0
-    for i in range(max_iterations):
-        neighbor_min = (
-            bidir.join(labels, bidir.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
-                (
-                    F.col("component")
-                    != F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("nbr_component"), F.col("component")),
-                    )
-                ).alias("changed"),
-            )
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.checkpoint(eager=True)
-        else:
-            # round 16: non-eager — the convergence count below
-            # materializes the checkpoint, one job fewer per round than
-            # an eager cut. With AQE on, the call itself still runs the
-            # round's join and aggregate shuffle-map stages as jobs (the
-            # plan truncates at call time either way; the reliable-
-            # checkpoint branch stays eager, its durability is the point
-            # there)
-            new_labels = new_labels.localCheckpoint(eager=False)
-        n_changed = new_labels.filter(F.col("changed")).count()
-        # the checkpoint above materialized new_labels; the previous
-        # iteration's blocks are no longer referenced — release them so
-        # long runs don't accumulate checkpointed partitions
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = new_labels
-        labels = new_labels.select("node", "component")
-        if n_changed == 0:
-            break
-    if n_changed != 0:
-        warnings.warn(
-            f"connected_components did not converge in {max_iterations} "
-            f"iterations ({n_changed} labels still changing) — component ids "
-            "are NOT final; raise max_iterations (graph diameter exceeds it)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+    labels, _rounds = _star_rounds(pairs)
     return labels
+
+
+def _cut_pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The (a, b) edge relation behind a non-eager cut: every consumer
+    of the component operators reads it, so the upstream runs once."""
+    return edges.select(
+        F.col(src).alias("a"), F.col(dst).alias("b")
+    ).localCheckpoint(eager=False)
 
 
 def _driver_components(pairs: DataFrame) -> DataFrame:
     """The driver tier of :func:`connected_components`: one Arrow collect
     of the null-free integral (a, b) relation, :func:`_min_labels`, and
     the labels back as a local DataFrame. The id type and nullability
-    are the distributed tier's ``bidir.a`` column (the union-widened
-    type of both id columns), which its labels carry unchanged."""
+    are the union-widened type of both id columns, which the star
+    rounds' labels carry unchanged."""
     tbl = pairs.toArrow()
     nodes, comp = _min_labels(
         tbl.column("a").to_numpy().astype(np.int64),
@@ -230,7 +140,6 @@ def incremental_components(
     delta_edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Merge a delta batch's edges into an EXISTING component labeling —
     the incremental-ingest form of :func:`connected_components`
@@ -248,40 +157,38 @@ def incremental_components(
 
     Cost shape: the star relation is one row per PREVIOUSLY LABELED node
     (≤ one per base edge endpoint), so star ∪ delta edges within the
-    driver bound merge in one collect; on the distributed tier the
-    propagation starts from an already-flat forest — merges chase only
-    the delta's new connections, so rounds track the delta's merge
-    depth, not the base graph's diameter. Either way the base EDGE
-    computation (the expensive near-dup join) never re-runs.
+    driver bound merge in one collect; past it the star rounds start
+    from an already-flat forest. Either way the base EDGE computation
+    (the expensive near-dup join) never re-runs.
     """
     star = base_labels.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(src), F.col("component").alias(dst)
     )
     return connected_components(
-        star.unionByName(delta_edges.select(src, dst)),
-        src=src,
-        dst=dst,
-        max_iterations=max_iterations,
+        star.unionByName(delta_edges.select(src, dst)), src=src, dst=dst
     )
+
+
+#: Round budget of :func:`connected_components_star`: star rounds grow
+#: ~log2(n_nodes), so 50 rounds cover any graph that fits a cluster.
+STAR_MAX_ROUNDS = 50
 
 
 def connected_components_star(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_rounds: int = 50,
 ) -> tuple[DataFrame, int]:
     """Connected components via alternating large-star / small-star rounds
     (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii, "Connected
     Components in MapReduce and Beyond", ACM SoCC 2014 — public paper).
 
-    Converges in O(log n) rounds regardless of graph DIAMETER — the
-    crucial difference from :func:`connected_components`' min-label
-    propagation, whose round count is the diameter (a 1M-node chain needs
-    1M propagation rounds but only ~20 star rounds). Each round is two
-    groupBy-min + join passes over the edge relation; this is the scale
-    path for component-collapsing at 100 TB, with min-label kept as the
-    fallback for known-shallow graphs (near-dup clusters).
+    Converges in O(log n) rounds regardless of graph DIAMETER (a 1M-node
+    chain needs 1M min-label propagation rounds but only ~20 star
+    rounds). Each round is two groupBy-min + join passes over the edge
+    relation; this is the scale path for component-collapsing at 100 TB,
+    and what :func:`connected_components` runs for any input its driver
+    tier does not take.
 
     large-star: every node u points its LARGER neighbors at
     m = min(Γ(u) ∪ {u}); small-star: u and its smaller neighbors all
@@ -293,19 +200,27 @@ def connected_components_star(
     component = min node id reachable; n_rounds the rounds executed (the
     O(log n) certificate asserted by tests). Fixpoint detection compares
     successive edge sets (a limit-1 subtract probe per round, the one
-    driver-side action — bounded by O(log n) executions).
+    driver-side action — bounded by O(log n) executions). A graph still
+    changing after :data:`STAR_MAX_ROUNDS` rounds raises ``RuntimeError``.
 
-    Lineage discipline: every round ends in an EAGER ``localCheckpoint``.
+    Lineage discipline: every round ends in a ``localCheckpoint``.
     Without it each round's logical plan embeds the previous round's
     whole plan and Catalyst analysis time grows exponentially (measured:
     2.8s, 2.6s, 27.5s for rounds 0-2 on a 16-node path with plain
     persist). At cluster scale swap localCheckpoint for a reliable
     ``checkpoint`` dir — same truncation, executor-loss-safe.
     """
+    return _star_rounds(_cut_pairs(edges, src, dst))
+
+
+def _star_rounds(pairs: DataFrame) -> tuple[DataFrame, int]:
+    """The rounds of :func:`connected_components_star` over the cut
+    (a, b) relation of :func:`_cut_pairs`, which the edge set and the
+    node universe both read."""
     e = (
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("a"),
-            F.least(F.col(src), F.col(dst)).alias("b"),
+        pairs.select(
+            F.greatest("a", "b").alias("a"),
+            F.least("a", "b").alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -314,17 +229,16 @@ def connected_components_star(
     # |e| for the count-gated convergence probe below — a plain scan of
     # the just-materialized checkpoint, no exchange
     n_e = e.count()
-    # node universe from the RAW edges, not the self-loop-filtered set: a
-    # node whose only edge is a self loop is still a (singleton)
+    # node universe from the unfiltered pairs, not the self-loop-filtered
+    # set: a node whose only edge is a self loop is still a (singleton)
     # component and must receive a label (property-test regression)
     all_nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
+        pairs.select(F.col("a").alias("node"))
+        .unionByName(pairs.select(F.col("b").alias("node")))
         .distinct()
-        .persist()
     )
     rounds = 0
-    for _ in range(max_rounds):
+    for _ in range(STAR_MAX_ROUNDS):
         # large-star: bidirectional adjacency; larger neighbors -> min
         bidir = e.unionByName(
             e.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -380,16 +294,16 @@ def connected_components_star(
         if changed == 0:
             break
     else:
-        # max_rounds exhausted with the edge set still moving: the relation
-        # is not yet a star forest, so emitting it as labels would yield
-        # duplicate node rows / non-minimal components and silently corrupt
-        # any downstream group-size aggregate (ADVICE r6). Fail loudly —
-        # star rounds scale ~log2(n), so hitting this means the graph is
-        # astronomically larger than max_rounds budgeted for.
+        # round budget exhausted with the edge set still moving: the
+        # relation is not yet a star forest, so emitting it as labels would
+        # yield duplicate node rows / non-minimal components and silently
+        # corrupt any downstream group-size aggregate (ADVICE r6). Fail
+        # loudly — star rounds scale ~log2(n), so hitting this means the
+        # graph is astronomically larger than the budget.
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} "
-            f"rounds (edge set still changing) — component labels would be "
-            "non-final; raise max_rounds (~log2(n_nodes) rounds needed)"
+            f"connected_components_star did not converge in "
+            f"{STAR_MAX_ROUNDS} rounds (edge set still changing) — "
+            "component labels would be non-final"
         )
     labels = e.select(F.col("a").alias("node"), F.col("b").alias("component"))
     roots = all_nodes.join(
@@ -417,7 +331,8 @@ def pagerank(
     iteration count, fully relational: the loop unrolls into one static
     lineage of join→aggregate rounds, so the whole computation is a single
     declarative plan (no driver-side convergence checks — the one
-    legitimate driver loop in this package stays `connected_components`).
+    legitimate driver loop in this package stays the star rounds of
+    `connected_components_star`).
 
     Determinism contract (hash-exact oracle): ranks are rounded to 1e-9
     after every iteration and EVERY float reduction — the out-weight sums
@@ -520,21 +435,6 @@ def pagerank(
     return pr
 
 
-def _lex_two_paths(e: DataFrame) -> DataFrame:
-    """Candidate two-paths under lexicographic orientation: pivot on the
-    shared MIDDLE vertex of x—y—z (load Σ deg²). ``e`` must be the
-    deduplicated (a < b) edge list, already checkpointed by the caller."""
-    return (
-        e.alias("e1")
-        .join(e.alias("e2"), F.col("e1.b") == F.col("e2.a"))
-        .select(
-            F.col("e1.a").alias("x"),
-            F.col("e1.b").alias("y"),
-            F.col("e2.b").alias("z"),
-        )
-    )
-
-
 def _degree_oriented_edges(und: DataFrame) -> DataFrame:
     """Direct each (a < b)-deduplicated edge from its lower-(degree, id)
     endpoint to the higher — the O(√m)-outdegree orientation the scale
@@ -618,28 +518,22 @@ def oriented_triangles(
     edges: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    orientation: str = "degree",
 ) -> DataFrame:
     """Enumerate every triangle of the undirected edge list exactly once
     as (x, y, z) — the classic two-path + closing-edge join (Suri &
     Vassilvitskii 2011's relational formulation, no graph library).
 
-    ``orientation="degree"`` (default, THE SCALE PATH): each edge is
-    directed from its lower-(degree, id) endpoint to the higher, then
-    two-paths pivot on the SOURCE vertex. Out-degree under this
-    orientation is O(√m) amortized, so the pivot self-join's load is
-    Σ outdeg² = O(m^1.5) REGARDLESS of skew — one corpus-scale
+    Each edge is directed from its lower-(degree, id) endpoint to the
+    higher, then two-paths pivot on the SOURCE vertex. Out-degree under
+    this orientation is O(√m) amortized, so the pivot self-join's load
+    is Σ outdeg² = O(m^1.5) REGARDLESS of skew — one corpus-scale
     boilerplate cluster (the common real-world near-dup shape: one node
     set where everyone matches everyone) stays bounded where
-    lexicographic orientation goes quadratic inside the cluster
-    (VERDICT r8 item 3). The ordering key is the exact pair
-    (degree, id): a deterministic total order computed from one exact
-    degree aggregate, so the oracle mirrors it verbatim.
-
-    ``orientation="lex"``: the pre-round-9 form (a < b, pivot on the
-    shared MIDDLE vertex y of x—y—z, load Σ deg²). Kept for the
-    skewed-cluster smoke that measures the fan-out gap; NOT the path to
-    run on real graphs.
+    lexicographic orientation (pivot on the middle id, load Σ deg²)
+    goes quadratic inside the cluster (VERDICT r8 item 3). The ordering
+    key is the exact pair (degree, id): a deterministic total order
+    computed from one exact degree aggregate, so the oracle mirrors it
+    verbatim.
 
     Each triangle {v1, v2, v3} with (deg, id)-ranks r1 < r2 < r3
     materializes exactly once: directed edges r1→r2, r1→r3, r2→r3 exist,
@@ -656,15 +550,6 @@ def oriented_triangles(
         F.least(F.col(a_col), F.col(b_col)).alias("a"),
         F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
     ).distinct()
-    if orientation == "lex":
-        e = und.localCheckpoint(eager=True)
-        return _lex_two_paths(e).join(
-            e.alias("e3"),
-            (F.col("e3.a") == F.col("x")) & (F.col("e3.b") == F.col("z")),
-            "left_semi",
-        )
-    if orientation != "degree":
-        raise ValueError(f"unknown orientation {orientation!r}")
     d = _degree_oriented_edges(und)
     return _degree_two_paths(d).join(
         d.alias("e3"),
@@ -677,15 +562,14 @@ def triangle_counts(
     edges: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    orientation: str = "degree",
 ) -> DataFrame:
     """Exact per-vertex triangle participation over an undirected edge
-    list — :func:`oriented_triangles` (degree-ordered by default; see its
-    docstring for the skew bound) exploded to vertices and counted.
+    list — :func:`oriented_triangles` (degree-ordered; see its docstring
+    for the skew bound) exploded to vertices and counted.
 
     Returns (vertex, n_triangles), vertices with ≥ 1 triangle only.
     """
-    tri = oriented_triangles(edges, a_col, b_col, orientation=orientation)
+    tri = oriented_triangles(edges, a_col, b_col)
     return (
         tri.select(F.explode(F.array("x", "y", "z")).alias("vertex"))
         .groupBy("vertex")

@@ -4486,12 +4486,16 @@ def recommend_ann_tier(
     return rec
 
 
+#: Measured cost of the interpreted HOF argmax per row at 512 cells
+#: (150 s for 128k rows assignment-only, round 8).
+INTERPRETED_ROW_COST_S = 1e-3
+
+
 def recommend_semantic_dedup_tier(
     n: int,
     n_cells: int,
     *,
     hierarchical_hint: bool = False,
-    interpreted_row_cost_s: float = 1e-3,
 ) -> dict:
     """Assignment-tier recommendation for SemDeDup, pinned to the
     round-8 MEASURED ladders (BASELINE_HISTORY.md §"SemDeDup assignment" and
@@ -4522,7 +4526,7 @@ def recommend_semantic_dedup_tier(
       at that point either supply real hierarchy or grow cells
       sub-linearly (the returned ``cells_advice``).
     """
-    interpreted_s = n * (n_cells / 512.0) * interpreted_row_cost_s
+    interpreted_s = n * (n_cells / 512.0) * INTERPRETED_ROW_COST_S
     rec = {"threshold_note": "dominance tail identical across tiers"}
     if interpreted_s <= 10.0:
         rec.update(

@@ -279,9 +279,10 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Dedup clustering: near-dup pairs (exact Jaccard >= 0.5, DF-capped)
 # collapsed into duplicate groups via connected components; one canonical
-# (min-id) doc per group. Spark side iterates min-label propagation; the
-# oracle computes the same fixpoint with a recursive-CTE transitive
-# closure — min-label components are a unique fixpoint, so both agree.
+# (min-id) doc per group. Spark side: connected_components (the numpy
+# driver tier for a graph this size, star rounds past it); the oracle
+# computes the same fixpoint with a recursive-CTE transitive closure —
+# min-label components are a unique fixpoint, so both agree.
 # --------------------------------------------------------------------------
 _COMPONENTS_ORACLE = """
     WITH RECURSIVE pos_toks AS (

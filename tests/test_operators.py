@@ -216,36 +216,27 @@ def test_connected_components_chain(spark):
 
 
 def test_connected_components_warns_on_non_convergence(spark, monkeypatch):
-    """If the iteration budget is below the graph diameter the labels are
-    not final — the operator must say so instead of silently returning.
-    The budget belongs to the distributed rounds (the driver tier always
-    converges), so the size bound is lowered to pin that tier."""
-    import warnings
-
+    """If the round budget runs out before the graph converges the labels
+    are not final — the operator must fail instead of returning them.
+    The budget belongs to the star rounds (the driver tier always
+    converges), so the size bound is lowered to pin that path."""
     from ppdb_parser_spark.operators import graph
     from ppdb_parser_spark.operators.graph import connected_components
 
     monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
+    monkeypatch.setattr(graph, "STAR_MAX_ROUNDS", 1)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "id_a long, id_b long"
     )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        connected_components(edges, max_iterations=1)
-    assert any(
-        issubclass(w.category, RuntimeWarning) and "did not converge" in str(w.message)
-        for w in caught
-    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges)
 
 
 def test_connected_components_driver_tier_one_collect(spark):
-    """A 64-node chain (diameter 63, past the distributed loop's default
-    20 rounds) is solved on the driver: exact labels, no convergence
-    warning, and at most 3 Spark jobs, collecting the labels included
-    (the decision scan and the Arrow collect; the distributed loop pays
-    ~3 jobs per round)."""
-    import warnings
-
+    """A 64-node chain (diameter 63) is solved on the driver: exact
+    labels and at most 3 Spark jobs, collecting the labels included (the
+    decision scan and the Arrow collect; the star rounds pay several
+    jobs per round)."""
     from ppdb_parser_spark.operators.graph import connected_components
 
     sc = spark.sparkContext
@@ -255,19 +246,16 @@ def test_connected_components_driver_tier_one_collect(spark):
     group = "test-cc-driver-tier"
     sc.setJobGroup(group, group)
     try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            got = {
-                r["node"]: r["component"]
-                for r in connected_components(edges).collect()
-            }
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(edges).collect()
+        }
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert got == dict.fromkeys(range(64), 0)
-    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
     assert n_jobs <= 3, f"driver tier ran {n_jobs} Spark jobs"
 
 
@@ -294,7 +282,9 @@ def test_connected_components_fallback_to_distributed(
     spark, monkeypatch, schema, rows, bound, want
 ):
     """Non-integral ids, a null id and an edge count over the driver
-    bound each take the distributed rounds, never the driver collect."""
+    bound each take the star rounds, never the driver collect."""
+    from unittest import mock
+
     from ppdb_parser_spark.operators import graph
 
     def no_driver(pairs):
@@ -304,12 +294,52 @@ def test_connected_components_fallback_to_distributed(
     if bound is not None:
         monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", bound)
     edges = spark.createDataFrame(rows, schema)
+    with mock.patch.object(
+        graph, "_star_rounds", wraps=graph._star_rounds
+    ) as star:
+        labels = graph.connected_components(edges)
+    assert star.call_count == 1
     got = {
         r["node"]: r["component"]
-        for r in graph.connected_components(edges).collect()
+        for r in labels.collect()
         if r["node"] is not None
     }
     assert got == want
+
+
+def test_components_read_input_once_and_cache_nothing(spark, monkeypatch):
+    """Both component operators cut their input once: a UDF upstream of
+    the edges runs once per edge row across building and collecting the
+    labels, and no cached relation is left behind — for the star rounds,
+    the driver tier, and the star fallback of connected_components."""
+    from pyspark.sql import functions as F
+
+    from ppdb_parser_spark.operators import graph
+
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    raw = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 3), (7, 8)], "id_a long, id_b long"
+    )
+
+    def labels(run):
+        calls = sc.accumulator(0)
+
+        def ident(x):
+            calls.add(1)
+            return x
+
+        edges = raw.withColumn("id_a", F.udf(ident, "long")("id_a"))
+        got = {(r["node"], r["component"]) for r in run(edges).collect()}
+        assert calls.value == 4, f"upstream evaluated {calls.value} times"
+        assert cache.isEmpty()
+        return got
+
+    want = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    assert labels(lambda e: graph.connected_components_star(e)[0]) == want
+    assert labels(graph.connected_components) == want
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", -1)
+    assert labels(graph.connected_components) == want
 
 
 def test_jaccard_variants_identical_pairs(spark, sf_dir):
@@ -535,13 +565,18 @@ def test_jaccard_prefix_positional_bound_sound(spark):
 
 
 def test_jaccard_prefix_kernel_equals_join(spark):
-    """Candidate-tier parity (round 16): the Arrow pair-partials kernel
-    and the fp-keyed self-join A/B twin emit IDENTICAL result sets —
-    full rows, not just pair ids — across plain, delta-restricted
-    (``delta_min_id``) and two-corpus (``cross_min_id``) modes, on a
-    fixture with repeated shared shingles, containment pairs, sub-n
-    docs and int32 ids (the kernel must emit the INPUT id dtype)."""
-    from ppdb_parser_spark.operators.dedup import jaccard_pairs_prefix
+    """The two candidate stages of the prefix join (round 16) emit the
+    exact pairs: the Arrow pair-partials kernel (full self-join) against
+    the fp-keyed self-join that ``delta_min_id`` selects — at cutoff 0
+    it restricts no pair, so rows AND schema must be equal (the kernel
+    must emit the INPUT id dtype, int32 here). The delta and two-corpus
+    (``cross_min_id``) modes match the shingle-stream ``jaccard_pairs``
+    filtered to the pairs each mode keeps. The fixture has repeated
+    shared shingles, containment pairs and sub-n docs."""
+    from ppdb_parser_spark.operators.dedup import (
+        jaccard_pairs,
+        jaccard_pairs_prefix,
+    )
 
     rows = []
     words = ["w%d" % i for i in range(12)]
@@ -557,25 +592,27 @@ def test_jaccard_prefix_kernel_equals_join(spark):
     docs = spark.createDataFrame(rows, "doc_id int, text string")
 
     def key(df):
-        return sorted(tuple(r) for r in df.collect())
+        return sorted(
+            (r["id_a"], r["id_b"], r["n_common"], r["n_a"], r["n_b"])
+            for r in df.collect()
+        )
 
-    for kw in (
-        {},
-        {"delta_min_id": 12},
-        {"cross_min_id": 12},
+    kernel = jaccard_pairs_prefix(docs, threshold=0.5, n=2)
+    join = jaccard_pairs_prefix(docs, threshold=0.5, n=2, delta_min_id=0)
+    assert kernel.schema == join.schema
+    assert sorted(map(tuple, kernel.collect())) == sorted(
+        map(tuple, join.collect())
+    )
+    full = key(jaccard_pairs(docs, threshold=0.5, n=2))
+    assert key(kernel) == full
+    for kw, keep in (
+        ({"delta_min_id": 12}, lambda a, b: b >= 12),
+        ({"cross_min_id": 12}, lambda a, b: a < 12 <= b),
     ):
-        j = key(
-            jaccard_pairs_prefix(
-                docs, threshold=0.5, n=2, pair_tier="join", **kw
-            )
-        )
-        k = key(
-            jaccard_pairs_prefix(
-                docs, threshold=0.5, n=2, pair_tier="kernel", **kw
-            )
-        )
-        assert k == j, f"tier mismatch for {kw}: {k} vs {j}"
-        assert j, f"degenerate fixture: no pairs for {kw}"
+        want = [p for p in full if keep(p[0], p[1])]
+        assert want, f"degenerate fixture: no pairs for {kw}"
+        got = key(jaccard_pairs_prefix(docs, threshold=0.5, n=2, **kw))
+        assert got == want, f"{kw}: {got} vs {want}"
 
 
 def test_selectexpr_twins_equal_column_forms(spark):
@@ -767,16 +804,14 @@ def test_span_scrub_rejects_helper_column_names(spark):
 def test_no_tier_selector_parameters():
     """One implementation per operator: no public operator takes an A/B
     implementation selector (``tier``, ``*_tier``, ``assign``,
-    ``encode``). ``pair_tier`` is the one allowed name — dedup's
-    candidate stage picks it from the candidate volume, an observable
-    property of the input rather than a user-facing A/B knob."""
+    ``encode``, ``orientation``). Where an operator has two paths, an
+    observable property of the input picks, not a parameter."""
     import importlib
     import inspect
     import pkgutil
 
     import ppdb_parser_spark.operators as ops
 
-    allowed = {"pair_tier"}
     bad = []
     for info in pkgutil.iter_modules(ops.__path__):
         mod = importlib.import_module(f"{ops.__name__}.{info.name}")
@@ -784,9 +819,9 @@ def test_no_tier_selector_parameters():
             if name.startswith("_") or fn.__module__ != mod.__name__:
                 continue
             for p in inspect.signature(fn).parameters:
-                if p in allowed:
-                    continue
-                if p in ("tier", "assign", "encode") or p.endswith("_tier"):
+                if p in (
+                    "tier", "assign", "encode", "orientation"
+                ) or p.endswith("_tier"):
                     bad.append(f"{mod.__name__}.{name}({p})")
     assert not bad, bad
 
@@ -1378,9 +1413,10 @@ def test_star_components_logn_rounds_on_path(spark):
 
 
 def test_star_components_match_min_label(spark):
-    """Star and min-label propagation share the unique fixpoint
-    (component = min reachable id) on a multi-component graph with
-    duplicate and reversed edges."""
+    """The star rounds and connected_components' driver tier (numpy
+    min-label propagation) share the unique fixpoint (component = min
+    reachable id) on a multi-component graph with duplicate and reversed
+    edges."""
     from ppdb_parser_spark.operators.graph import (
         connected_components,
         connected_components_star,
@@ -2388,12 +2424,12 @@ def test_semantic_dedup_gemm_matches_python_reimplementation(spark):
 
 
 def test_triangle_orientations_agree(spark):
-    """Degree-ordered orientation (round 9, VERDICT r8 item 3) must count
-    exactly the triangles the lexicographic form counts, on a graph with
-    hubs (skew), a clique, a chain, tie degrees, and isolated edges."""
+    """Degree-ordered orientation (round 9, VERDICT r8 item 3) counts
+    exactly the triangles a pure-Python enumeration finds, on a graph
+    with hubs (skew), a clique, a chain, tie degrees, and isolated
+    edges."""
     import random
-
-    from pyspark.sql import functions as F
+    from collections import Counter
 
     from ppdb_parser_spark.operators.graph import triangle_counts
 
@@ -2409,13 +2445,17 @@ def test_triangle_orientations_agree(spark):
     df = spark.createDataFrame(
         [(a, b) for a, b in edges], "id_a long, id_b long"
     )
-    lex = sorted(
-        map(tuple, triangle_counts(df, orientation="lex").collect())
-    )
-    deg = sorted(
-        map(tuple, triangle_counts(df, orientation="degree").collect())
-    )
-    assert lex == deg
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    want = Counter()
+    for u, v in edges:  # every edge is stored once with u < v
+        for w in adj[u] & adj[v]:
+            if w > v:
+                want.update((u, v, w))
+    deg = sorted(map(tuple, triangle_counts(df).collect()))
+    assert deg == sorted(want.items())
     # the 8-clique alone guarantees triangles exist
     got = dict(deg)
     for v in range(8):
@@ -3637,7 +3677,7 @@ def test_incremental_components_equals_from_scratch(spark, monkeypatch):
     delta_edges = spark.createDataFrame(
         [(3, 5), (6, 9)], "id_a int, id_b int"
     )
-    # the driver tier (default bound), then the distributed rounds
+    # the driver tier (default bound), then the star rounds
     for bound in (graph.DRIVER_MAX_EDGES, -1):
         monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", bound)
         want = {

@@ -121,9 +121,10 @@ _edges = st.lists(
 )
 @given(edges=_edges)
 def test_star_components_equal_min_label_random_graphs(spark, edges):
-    """large-star/small-star and min-label propagation share the unique
-    fixpoint (component = min reachable id) on arbitrary graphs — random
-    edge lists with self loops, duplicates, reversed pairs, and multiple
+    """large-star/small-star rounds and connected_components' driver
+    tier (numpy min-label propagation) share the unique fixpoint
+    (component = min reachable id) on arbitrary graphs — random edge
+    lists with self loops, duplicates, reversed pairs, and multiple
     components."""
     from ppdb_parser_spark.operators.graph import (
         connected_components,
@@ -135,10 +136,10 @@ def test_star_components_equal_min_label_random_graphs(spark, edges):
     s = {(r["node"], r["component"]) for r in star.collect()}
     p = {
         (r["node"], r["component"])
-        for r in connected_components(df, max_iterations=50).collect()
+        for r in connected_components(df).collect()
     }
-    # self-loop-only nodes: min-label keeps them (they appear in bidir);
-    # both operators must agree on the full node set and every label
+    # self-loop-only nodes keep a singleton label on both paths; both
+    # operators must agree on the full node set and every label
     assert s == p
 
 
@@ -187,7 +188,7 @@ def _bfs_components(edges):
 )
 @given(graph=_typed_graphs())
 def test_connected_components_tiers_equal_bfs(spark, graph):
-    """The driver tier (numpy) and the distributed min-label rounds of
+    """The driver tier (numpy) and the star rounds of
     connected_components both reach a pure-Python BFS's labels (component
     = min reachable id), with equal result schemas."""
     from unittest import mock

@@ -878,15 +878,12 @@ def main() -> None:
 
     if "starcc" in only:
         # Round-7 (VERDICT r6 item 4): star CC on a 64x-edges near-dup
-        # graph vs the min-label fallback. Universe-shifted copies of the
-        # sf0.1 exact-Jaccard edge set: component structure per universe
-        # is preserved, so rounds should stay ~flat (log of the LARGEST
-        # component, not of |E|) while wall grows with the edge volume.
+        # graph. Universe-shifted copies of the sf0.1 exact-Jaccard edge
+        # set: component structure per universe is preserved, so rounds
+        # should stay ~flat (log of the LARGEST component, not of |E|)
+        # while wall grows with the edge volume.
         from ppdb_parser_spark.operators.dedup import jaccard_pairs_prefix
-        from ppdb_parser_spark.operators.graph import (
-            connected_components,
-            connected_components_star,
-        )
+        from ppdb_parser_spark.operators.graph import connected_components_star
 
         edges1 = (
             jaccard_pairs_prefix(docs, 0.5, 2)
@@ -904,16 +901,7 @@ def main() -> None:
             print(f"{label}: {dt:.2f} s ({n} labels, {rounds} star rounds)")
             return dt
 
-        def minlabel_run(label, e):
-            t0 = time.perf_counter()
-            labels = connected_components(e, checkpoint_every=4)
-            n = labels.count()
-            dt = time.perf_counter() - t0
-            print(f"{label}: {dt:.2f} s ({n} labels)")
-            return dt
-
         s1 = star_run("star CC 1x", edges1)
-        m1 = minlabel_run("min-label CC 1x", edges1)
         e64 = edges1
         for i in range(1, 64):
             e64 = e64.unionByName(
@@ -925,10 +913,9 @@ def main() -> None:
         e64 = e64.localCheckpoint(eager=True)
         print(f"edge set 64x: {e64.count()} edges")
         s64 = star_run("star CC 64x", e64)
-        m64 = minlabel_run("min-label CC 64x", e64)
         print(
-            f"  -> star {s64 / s1:.1f}x vs min-label {m64 / m1:.1f}x wall "
-            "for 64x edges (rounds flat: per-universe diameter unchanged)"
+            f"  -> star {s64 / s1:.1f}x wall for 64x edges "
+            "(rounds flat: per-universe diameter unchanged)"
         )
 
     if "v3" in only:
@@ -1331,12 +1318,12 @@ def main() -> None:
         # dedup-maintenance story is a persisted labeling + per-batch
         # delta merges, so the honest comparison is incremental_components
         # (star-contracted base + delta edges) vs BOTH full-recompute
-        # strategies — min-label (O(diameter) rounds) and large/small-star
-        # (O(log n) rounds) — over the same edge set. Fixture: chains of
-        # 32 nodes (diameter 31 stresses min-label exactly the way long
-        # dup-chains do), 100-edge delta attaching new nodes and merging
-        # a few existing chains. The base labeling builds OUTSIDE the
-        # timed region (it is the persisted artifact).
+        # paths — connected_components (the driver tier at these sizes)
+        # and large/small-star (O(log n) rounds) — over the same edge
+        # set. Fixture: chains of 32 nodes (diameter 31, the shape of
+        # long dup-chains), 100-edge delta attaching new nodes and
+        # merging a few existing chains. The base labeling builds
+        # OUTSIDE the timed region (it is the persisted artifact).
         from ppdb_parser_spark.operators.graph import (
             connected_components,
             connected_components_star,
@@ -1370,9 +1357,9 @@ def main() -> None:
                 )
                 .localCheckpoint(eager=True)
             )
-            base_labels = connected_components(
-                base_edges, max_iterations=40
-            ).localCheckpoint(eager=True)
+            base_labels = connected_components(base_edges).localCheckpoint(
+                eager=True
+            )
             # fresh cut: unioning two checkpointed frames directly trips
             # a Spark attribute-id remap inside the star variant's own
             # checkpoint ("key not found: a#...") — materialize the
@@ -1383,9 +1370,9 @@ def main() -> None:
             )
 
             t0 = time.perf_counter()
-            connected_components(all_edges, max_iterations=40).count()
+            connected_components(all_edges).count()
             t_full = time.perf_counter() - t0
-            print(f"cc full min-label {k}x ({n_nodes} nodes): {t_full:.2f} s")
+            print(f"cc full driver tier {k}x ({n_nodes} nodes): {t_full:.2f} s")
 
             t0 = time.perf_counter()
             labels, rounds = connected_components_star(all_edges)
@@ -1400,7 +1387,7 @@ def main() -> None:
             t_inc = time.perf_counter() - t0
             print(
                 f"cc incremental {k}x (110-edge delta): {t_inc:.2f} s"
-                f" -> {t_full / t_inc:.1f}x vs min-label,"
+                f" -> {t_full / t_inc:.1f}x vs driver tier,"
                 f" {t_star / t_inc:.1f}x vs star"
             )
 
@@ -1542,19 +1529,18 @@ def main() -> None:
             print(f"  -> {tk / t1w:.1f}x time for {k}x fresh-vocab corpus")
 
     if "triskew" in only:
-        # Degree-ordered vs lexicographic orientation on a planted
-        # skewed cluster (VERDICT r8 item 3): H mid-id hub nodes each
-        # touching N leaves (half the leaf ids below the hubs, half
-        # above — a template/boilerplate doc matching thousands of
+        # Degree-ordered orientation on a planted skewed cluster
+        # (VERDICT r8 item 3): H mid-id hub nodes each touching N leaves
+        # (half the leaf ids below the hubs, half above — a
+        # template/boilerplate doc matching thousands of
         # near-singletons), plus a chain through the low leaves so the
-        # graph has real triangles. Lexicographic orientation pivots on
-        # the MIDDLE id of each path, so every hub generates
-        # (N/2 in-edges) x (N/2 out-edges) candidate two-paths that
-        # almost never close; degree ordering directs every hub edge
-        # INTO the hub (outdeg 0), so candidate paths collapse to the
-        # leaf-chain neighborhood. The fan-out gap is DETERMINISTIC
-        # (exact path counts, not walls) and both orientations must
-        # return identical triangle counts.
+        # graph has real triangles. Lexicographic orientation would
+        # pivot on the MIDDLE id of each path, so every hub would
+        # generate (N/2 in-edges) x (N/2 out-edges) = H*N^2/4 candidate
+        # two-paths that almost never close; degree ordering directs
+        # every hub edge INTO the hub (outdeg 0), so candidate paths
+        # collapse to the leaf-chain neighborhood. The count is exact,
+        # not a wall.
         from ppdb_parser_spark.operators.graph import (
             oriented_triangles,
             triangle_counts,
@@ -1576,47 +1562,25 @@ def main() -> None:
         )
         edges = spokes.unionByName(chain).localCheckpoint(eager=True)
 
-        def two_path_count(orientation):
-            # the PRODUCTION orientation/pivot helpers (graph.py) — the
-            # smoke counts their candidate relations so the measured
-            # fan-out cannot drift from the operator (ADVICE r9)
-            from ppdb_parser_spark.operators.graph import (
-                _degree_oriented_edges,
-                _degree_two_paths,
-                _lex_two_paths,
-            )
+        # the PRODUCTION orientation/pivot helpers (graph.py) — the smoke
+        # counts their candidate relation so the measured fan-out cannot
+        # drift from the operator (ADVICE r9)
+        from ppdb_parser_spark.operators.graph import (
+            _degree_oriented_edges,
+            _degree_two_paths,
+        )
 
-            und = edges.select(
-                F.least("id_a", "id_b").alias("a"),
-                F.greatest("id_a", "id_b").alias("b"),
-            ).distinct()
-            if orientation == "lex":
-                return _lex_two_paths(und.localCheckpoint(eager=True)).count()
-            return _degree_two_paths(_degree_oriented_edges(und)).count()
-
-        n_lex = two_path_count("lex")
-        n_deg = two_path_count("degree")
-        t_lex = timed(
-            "triangles lex  ",
-            triangle_counts(edges, orientation="lex"),
-        )
-        t_deg = timed(
-            "triangles degree",
-            triangle_counts(edges, orientation="degree"),
-        )
-        r_lex = sorted(
-            map(tuple, triangle_counts(edges, orientation="lex").collect())
-        )
-        r_deg = sorted(
-            map(tuple, triangle_counts(edges, orientation="degree").collect())
-        )
-        assert r_lex == r_deg, "orientations disagree on triangle counts"
+        und = edges.select(
+            F.least("id_a", "id_b").alias("a"),
+            F.greatest("id_a", "id_b").alias("b"),
+        ).distinct()
+        n_deg = _degree_two_paths(_degree_oriented_edges(und)).count()
+        t_deg = timed("triangles degree", triangle_counts(edges))
         n_tri = oriented_triangles(edges, a_col="id_a", b_col="id_b").count()
         print(
-            f"  -> candidate two-paths: lex {n_lex:,} vs degree {n_deg:,} "
-            f"({n_lex / max(n_deg, 1):.0f}x fan-out cut) for {n_tri:,} "
-            f"triangles; walls {t_lex:.2f}s -> {t_deg:.2f}s; outputs "
-            f"identical over {len(r_deg)} vertices"
+            f"  -> candidate two-paths: degree {n_deg:,} for {n_tri:,} "
+            f"triangles (lex pivot would be ~{H * N * N // 4:,}); "
+            f"wall {t_deg:.2f}s"
         )
 
     if "bloomscale" in only:
