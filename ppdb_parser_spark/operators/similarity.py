@@ -128,7 +128,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """IVF-style ANN top-k, fully relational — zero driver-side jobs.
 
@@ -202,7 +201,6 @@ def ivf_topk(
         nrm_col="__nrm",
         dot="float",
         extra_cols=tuple(keep_cols),
-        n_blocks=n_blocks,
     ).crossJoin(F.broadcast(ctx.select("probe_emb", "probe_nrm", "probe_cells")))
     cand = assigned.filter(
         F.array_contains(F.col("probe_cells"), F.col("cell_id"))
@@ -228,7 +226,6 @@ def ivf_batch_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """Batched IVF ANN: top-``k`` for EVERY probe selected by
     ``probe_pred`` in one plan — the realistic serving shape (queries
@@ -301,7 +298,6 @@ def ivf_batch_topk(
         nrm_col="__nrm",
         dot="grid",
         extra_cols=tuple(keep_cols),
-        n_blocks=n_blocks,
     )
 
     probes = (
@@ -448,13 +444,33 @@ def _np_round6(v):
     return out
 
 
+#: Row blocks of :func:`brute_cosine_pairs_blocked`'s A side. A fixed
+#: count, not the byte rule of :func:`kernel_block_count`: each block
+#: meets the whole B side, so the block count trades task count against
+#: per-task GEMM size, and it shapes ``dedup_embedding``'s plan.
+BRUTE_ROW_BLOCKS = 32
+
+#: Budget for ONE broadcast row of :func:`brute_cosine_pairs_blocked`'s
+#: B side — the engine session's ``autoBroadcastJoinThreshold`` (64 MB).
+BROADCAST_ROW_BYTES = 64 << 20
+
+
+def _b_shard_count(df: DataFrame, id_col: str, vec_col: str) -> int:
+    """B-side shard count of :func:`brute_cosine_pairs_blocked`:
+    ``ceil(est / BROADCAST_ROW_BYTES)`` over the :func:`_plan_bytes`
+    estimate of the ``(id, vector as array<double>)`` rows one shard
+    collects, and 1 when stats are absent."""
+    est = _plan_bytes(
+        df.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+    )
+    return 1 if est is None else max(1, -(-est // BROADCAST_ROW_BYTES))
+
+
 def brute_cosine_pairs_blocked(
     df: DataFrame,
     threshold: float = 0.8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_blocks: int = 32,
-    n_b_shards: int = 1,
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold as a BLOCKED GEMM: Spark does
     the blocking, numpy does the arithmetic.
@@ -468,29 +484,29 @@ def brute_cosine_pairs_blocked(
     of magnitude, so this tier ships each row-block × full-matrix product
     to BLAS via Arrow (measured: 1.5s same fixture, ~27×).
 
-    Plan shape — a BLOCK-PAIR GRID: rows hash into ``n_blocks``
-    row-blocks via ``pmod(xxhash64(id), n_blocks)`` (works, and stays
-    uniform, for ANY id type; blocking on ``pmod(id, n)`` silently
-    produced NULL blocks for non-numeric ids, vanishing their rows —
-    ADVICE r7), and the B side hashes into ``n_b_shards`` column-shards
-    on an independent hash stream. The shards broadcast-cross-join onto
-    every row-block (the seeds_row pattern — NO driver-side collect, the
-    plan stays lazy end to end), giving ``n_blocks × n_b_shards`` grid
-    cells, each a task-sized GEMM; ``mapInArrow`` emits the qualifying
-    (id_a, id_b, cosine) triples per cell. Each (a, b) pair lands in
-    EXACTLY one cell (a's row-block × b's shard), so no dedup pass is
-    needed. The id column keeps its input type in the output, like the
-    declarative tier.
+    Plan shape — a BLOCK-PAIR GRID: rows hash into
+    :data:`BRUTE_ROW_BLOCKS` row-blocks via ``pmod(xxhash64(id), 32)``
+    (works, and stays uniform, for ANY id type; blocking on
+    ``pmod(id, n)`` silently produced NULL blocks for non-numeric ids,
+    vanishing their rows — ADVICE r7), and the B side hashes into
+    column-shards on an independent hash stream. The shards
+    broadcast-cross-join onto every row-block (the seeds_row pattern —
+    NO driver-side collect, the plan stays lazy end to end), giving
+    row-blocks × shards grid cells, each a task-sized GEMM;
+    ``mapInArrow`` emits the qualifying (id_a, id_b, cosine) triples per
+    cell. Each (a, b) pair lands in EXACTLY one cell (a's row-block ×
+    b's shard), so no dedup pass is needed. The id column keeps its
+    input type in the output, like the declarative tier.
 
-    ``n_b_shards=1`` (default, local scale) keeps the whole matrix in
-    one broadcast row. At cluster scale a single Spark row holding the
-    full matrix is the binding limit (row sizes are capped well before
-    executor memory is), so callers size ``n_b_shards`` to hold each
-    shard under the practical broadcast-row budget (e.g. 64 MB:
-    ``n_b_shards = ceil(n·dim·8 / 64e6)``) — the blocked-GEMM
-    decomposition is exactly how distributed dense linear algebra is
-    always laid out (VERDICT r7 item 6; pair-identity vs the sharded
-    and declarative tiers asserted in
+    The shard count is derived, not passed (:func:`_b_shard_count`):
+    at cluster scale a single Spark row holding the full matrix is the
+    binding limit (row sizes are capped well before executor memory
+    is), so the B side's plan bytes are split into shards of at most
+    :data:`BROADCAST_ROW_BYTES`. Fixture scales (0.8 MB at sf0.1)
+    derive one shard — the whole matrix in one broadcast row. The
+    blocked-GEMM decomposition is exactly how distributed dense linear
+    algebra is always laid out (VERDICT r7 item 6; pair-identity of the
+    sharded grid vs one shard asserted in
     test_brute_blocked_b_shards_pair_identical).
 
     Determinism: the float64 GEMM only SELECTS candidates (with the same
@@ -515,7 +531,10 @@ def brute_cosine_pairs_blocked(
             # A DIFFERENT hash stream than the row-blocking (seeded
             # xxhash64) so grid cells stay decorrelated from row blocks.
             "__bsh",
-            F.pmod(F.xxhash64(F.col(id_col), F.lit(7)), F.lit(n_b_shards)),
+            F.pmod(
+                F.xxhash64(F.col(id_col), F.lit(7)),
+                F.lit(_b_shard_count(df, id_col, vec_col)),
+            ),
         )
         .groupBy("__bsh")
         .agg(
@@ -529,7 +548,8 @@ def brute_cosine_pairs_blocked(
     )
     blocks = (
         df.withColumn(
-            "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
+            "__blk",
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(BRUTE_ROW_BLOCKS)),
         )
         .groupBy("__blk")
         .agg(
@@ -726,7 +746,6 @@ def ivf_build_centroids(
     n_cells: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """The TRAINING half of :func:`ivf_kmeans_topk`: one relational Lloyd
     step producing the refined centroid relation ``(cell_id int,
@@ -767,7 +786,6 @@ def ivf_build_centroids(
         vec_col=vec_col,
         nrm_col="__nrm",
         dot="float",
-        n_blocks=n_blocks,
     ).withColumnRenamed("cell_id", "cell1")
 
     exploded = a1.select(
@@ -862,7 +880,6 @@ def ivf_search_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """The SEARCH half of :func:`ivf_kmeans_topk`: given a centroid
     relation ``(cell_id, semb)`` — freshly built or loaded from a
@@ -886,7 +903,6 @@ def ivf_search_centroids(
         nrm_col="__nrm",
         dot="float",
         extra_cols=tuple(keep_cols),
-        n_blocks=n_blocks,
     ).withColumnRenamed("cell_id", "cell2").crossJoin(
         F.broadcast(
             ctx.select("probe_emb", "probe_nrm", "probe_cells")
@@ -914,7 +930,6 @@ def ivf_assignments(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """The PERSISTABLE inverted-list relation of an IVF index:
     ``(cell_id, id, vec, *keep_cols)`` — every vector stored WITH its
@@ -937,7 +952,6 @@ def ivf_assignments(
         nrm_col="__nrm",
         dot="float",
         extra_cols=tuple(keep_cols),
-        n_blocks=n_blocks,
     ).select("cell_id", id_col, vec_col, *keep_cols)
 
 
@@ -1001,7 +1015,6 @@ def ivf_kmeans_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """IVF top-k with one relational Lloyd (k-means) refinement step —
     the "trained centroids" upgrade over :func:`ivf_topk`'s raw seeds.
@@ -1024,7 +1037,6 @@ def ivf_kmeans_topk(
         n_cells=n_cells,
         id_col=id_col,
         vec_col=vec_col,
-        n_blocks=n_blocks,
     )
     return ivf_search_centroids(
         df,
@@ -1035,7 +1047,6 @@ def ivf_kmeans_topk(
         id_col=id_col,
         vec_col=vec_col,
         keep_cols=keep_cols,
-        n_blocks=n_blocks,
     )
 
 
@@ -1198,45 +1209,62 @@ def _np_round_half_away_consume(v):
 KERNEL_BLOCK_BYTES = 128 << 20
 
 
-def kernel_block_count(
-    df: DataFrame,
-    n_blocks: int | None = None,
-    *,
-    target_block_bytes: int = KERNEL_BLOCK_BYTES,
-) -> int:
-    """Derive an Arrow-kernel block count from PLAN BYTES, floored by
-    parallelism: ``max(2 × defaultParallelism, ceil(est / 128 MB))``.
-
-    Why bytes and not cores (VERDICT r10 weak #1): each kernel block
-    materializes as ONE ``collect_list`` array value inside a single
-    executor task, so a parallelism-only default lets per-block bytes
-    grow linearly with the corpus — the classic executor-OOM shape at
-    100×. Catalyst's own size estimate for the projected plan
-    (``optimizedPlan().stats().sizeInBytes`` — the same number the
-    planner prices broadcast decisions with, column-pruning-aware) sizes
-    the block count instead: at 100 TB the identical code derives
-    ~800k partition-sized blocks with no caller involvement, while
-    fixture scales keep the interactive 2×parallelism floor. Blocking
-    never affects values — only Arrow batch granularity — so the
-    equivalence tests and every DuckDB oracle are untouched by where
-    this lands.
-
-    A caller-supplied ``n_blocks`` always wins. Stats that are absent
-    (no classic-JVM plan handle) or absurd (> 1 PiB — Catalyst's
-    "unknown" defaults, e.g. unresolved streaming leaves) fall back to
-    the parallelism floor rather than exploding the block count."""
-    if n_blocks is not None:
-        return n_blocks
-    floor = df.sparkSession.sparkContext.defaultParallelism * 2
+def _plan_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of ``df``'s optimized plan
+    (``optimizedPlan().stats().sizeInBytes`` — the number the planner
+    prices broadcast decisions with, column-pruning-aware), or ``None``
+    when stats are absent (no classic-JVM plan handle) or absurd
+    (> 1 PiB — Catalyst's "unknown" defaults, e.g. unresolved streaming
+    leaves). Runs no Spark job."""
     try:
         est = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
     except Exception:
-        return floor
+        return None
     if est <= 0 or est > (1 << 50):
+        return None
+    return est
+
+
+def kernel_block_count(df: DataFrame) -> int:
+    """Derive an Arrow-kernel block count from PLAN BYTES, floored by
+    parallelism: ``max(2 × defaultParallelism, ceil(est /
+    KERNEL_BLOCK_BYTES))``.
+
+    Why bytes and not cores (VERDICT r10 weak #1): each kernel block
+    materializes as ONE ``collect_list`` array value inside a single
+    executor task, so a parallelism-only default lets per-block bytes
+    grow linearly with the corpus — the classic executor-OOM shape at
+    100×. :func:`_plan_bytes` of the projected plan sizes the block
+    count instead: at 100 TB the identical code derives ~800k
+    partition-sized blocks, while fixture scales keep the interactive
+    2×parallelism floor. Blocking never affects values — only Arrow
+    batch granularity — so the block count is the engine's decision,
+    not a parameter, and every DuckDB oracle is untouched by where it
+    lands. Absent or absurd stats fall back to the floor rather than
+    exploding the block count."""
+    floor = df.sparkSession.sparkContext.defaultParallelism * 2
+    est = _plan_bytes(df)
+    if est is None:
         return floor
-    return max(floor, -(-est // target_block_bytes))
+    return max(floor, -(-est // KERNEL_BLOCK_BYTES))
+
+
+def _kernel_blocks(proj: DataFrame, id_col: str) -> DataFrame:
+    """The Arrow kernels' block layout: ``proj``'s rows hash on
+    ``id_col`` into :func:`kernel_block_count` blocks, one row per
+    block with every column of ``proj`` collected as
+    ``ablock: array<struct<…>>`` (one ``groupBy`` exchange). The kernels
+    decompose ``ablock`` zero-copy with ``linalg.block_layout``."""
+    n_blocks = kernel_block_count(proj)
+    return (
+        proj.withColumn(
+            "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
+        )
+        .groupBy("__blk")
+        .agg(F.collect_list(F.struct(*proj.columns)).alias("ablock"))
+    )
 
 
 def gemm_assign_cells(
@@ -1248,7 +1276,6 @@ def gemm_assign_cells(
     nrm_col: str,
     dot: str = "grid",
     extra_cols: tuple[str, ...] = (),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """Coarse-cell ASSIGNMENT as an Arrow/numpy block kernel — the
     :func:`semantic_dedup_gemm` layout generalized to the IVF family's
@@ -1292,13 +1319,12 @@ def gemm_assign_cells(
     shipped through, never recomputed) and ``seeds_row`` must be a 1-row
     relation with ``seeds: array<struct<cell_id int, semb, snorm>>``.
     Returns ``df``'s (id, vec, nrm, *extra_cols) columns plus
-    ``cell_id int``; values pass through the kernel verbatim.
-    ``n_blocks`` bounds kernel batch size; the default is
-    :func:`kernel_block_count` on the projected input — block BYTES
-    (~128 MB per block, since one block materializes as a single
-    collected array in one executor task), floored by 2×parallelism at
-    fixture scales. Blocking never affects values, only batch
-    granularity.
+    ``cell_id int``; values pass through the kernel verbatim. Rows
+    ship in :func:`_kernel_blocks` — block count from the projected
+    input's BYTES (~128 MB per block, since one block materializes as a
+    single collected array in one executor task), floored by
+    2×parallelism at fixture scales. Blocking never affects values,
+    only batch granularity.
 
     Zero-norm mirror (ADVICE r10 medium): a zero-norm row or seed makes
     the cosine denominator 0. The engine session runs Spark 4's default
@@ -1313,16 +1339,7 @@ def gemm_assign_cells(
     out_schema = ", ".join(
         [f"`{c}` {dtypes[c]}" for c in cols] + ["cell_id int"]
     )
-    proj = df.select(*cols)
-    n_blocks = kernel_block_count(proj, n_blocks)
-    blocks = (
-        proj
-        .withColumn(
-            "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
-        )
-        .groupBy("__blk")
-        .agg(F.collect_list(F.struct(*cols)).alias("ablock"))
-    )
+    blocks = _kernel_blocks(df.select(*cols), id_col)
     ctx = blocks.crossJoin(F.broadcast(seeds_row))
     use_grid = dot == "grid"
     if dot not in ("grid", "float"):
@@ -1504,7 +1521,6 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """Product-quantization encoder (Jégou, Douze & Schmid, TPAMI 2011
     "Product Quantization for Nearest Neighbor Search" — public paper).
@@ -1554,22 +1570,9 @@ def pq_encode(
         [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols)]
         + ["codes array<int>", "vnorm double"]
     )
-    proj = df.select(*cols).withColumn(
-        "__vnorm", _grid_norm6(F.col(vec_col))
-    )
-    n_blocks = kernel_block_count(proj, n_blocks)
-    blocks = (
-        proj
-        .withColumn(
-            "__blk",
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)),
-        )
-        .groupBy("__blk")
-        .agg(
-            F.collect_list(
-                F.struct(*cols, "__vnorm")
-            ).alias("ablock")
-        )
+    blocks = _kernel_blocks(
+        df.select(*cols).withColumn("__vnorm", _grid_norm6(F.col(vec_col))),
+        id_col,
     )
     ctx = blocks.crossJoin(F.broadcast(seeds_row))
 
@@ -1655,7 +1658,6 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """PQ asymmetric-distance top-k (TPAMI'11 ADC) with exact rerank —
     the textbook PQ serving shape:
@@ -1685,7 +1687,6 @@ def pq_topk(
         id_col=id_col,
         vec_col=vec_col,
         keep_cols=keep_cols,
-        n_blocks=n_blocks,
     )
     seeds_row = df.filter(F.col(id_col) < n_centroids).agg(
         F.array_sort(
@@ -1766,7 +1767,6 @@ def pq_build_codebook(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """The TRAINING half of :func:`pq_kmeans_topk`: seed-assign codes
     exactly as :func:`pq_encode`, then refine every per-subspace centroid
@@ -1782,7 +1782,7 @@ def pq_build_codebook(
     sub = dim // m
     codes0 = pq_encode(
         df, n_centroids, m, dim=dim, id_col=id_col, vec_col=vec_col,
-        keep_cols=(), n_blocks=n_blocks,
+        keep_cols=(),
     ).select(id_col, F.posexplode("codes").alias("s", "c0"))
 
     el = df.select(
@@ -1851,7 +1851,6 @@ def pq_search_codebook(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """The SEARCH half of :func:`pq_kmeans_topk`: given a codebook
     relation ``(s, c, cvec)`` — freshly trained or loaded from a
@@ -1883,17 +1882,7 @@ def pq_search_codebook(
         [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols, "vnorm")]
         + ["adc_dot_grid long"]
     )
-    proj = base.select(*cols)
-    n_blocks = kernel_block_count(proj, n_blocks)
-    blocks = (
-        proj
-        .withColumn(
-            "__blk",
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)),
-        )
-        .groupBy("__blk")
-        .agg(F.collect_list(F.struct(*cols)).alias("ablock"))
-    )
+    blocks = _kernel_blocks(base.select(*cols), id_col)
     kctx = blocks.crossJoin(F.broadcast(ctx))
     sub_l, m_l, vc = sub, m, vec_col
 
@@ -2010,7 +1999,6 @@ def pq_codes_from_codebook(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """The PERSISTABLE codes relation of a trained PQ index:
     ``(id, *keep_cols, codes array<int>, vnorm)`` — each vector's
@@ -2046,16 +2034,9 @@ def pq_codes_from_codebook(
         [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols)]
         + ["codes array<int>", "vnorm double"]
     )
-    proj = df.select(*cols).withColumn(
-        "__vnorm", _grid_norm6(F.col(vec_col))
-    )
-    n_blocks = kernel_block_count(proj, n_blocks)
-    blocks = (
-        proj.withColumn(
-            "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
-        )
-        .groupBy("__blk")
-        .agg(F.collect_list(F.struct(*cols, "__vnorm")).alias("ablock"))
+    blocks = _kernel_blocks(
+        df.select(*cols).withColumn("__vnorm", _grid_norm6(F.col(vec_col))),
+        id_col,
     )
     kctx = blocks.crossJoin(F.broadcast(cents_row))
     sub_l, m_l, vc = sub, m, vec_col
@@ -2164,18 +2145,7 @@ def pq_topk_from_codes(
         [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols, "vnorm")]
         + ["adc_dot_grid long"]
     )
-    proj = codes_rel.select(*cols)
-    blocks = (
-        proj.withColumn(
-            "__blk",
-            F.pmod(
-                F.xxhash64(F.col(id_col)),
-                F.lit(kernel_block_count(proj, None)),
-            ),
-        )
-        .groupBy("__blk")
-        .agg(F.collect_list(F.struct(*cols)).alias("ablock"))
-    )
+    blocks = _kernel_blocks(codes_rel.select(*cols), id_col)
     kctx = blocks.crossJoin(F.broadcast(ctx))
     sub_l, m_l = sub, m
 
@@ -2275,7 +2245,6 @@ def pq_kmeans_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """:func:`pq_topk` with one relational Lloyd refinement of every
     per-subspace codebook — the PQ counterpart of
@@ -2309,7 +2278,6 @@ def pq_kmeans_topk(
         dim=dim,
         id_col=id_col,
         vec_col=vec_col,
-        n_blocks=n_blocks,
     )
     return pq_search_codebook(
         df,
@@ -2322,7 +2290,6 @@ def pq_kmeans_topk(
         id_col=id_col,
         vec_col=vec_col,
         keep_cols=keep_cols,
-        n_blocks=n_blocks,
     )
 
 
@@ -2877,17 +2844,24 @@ def lsh_similarity_join_exact(
     )
 
 
-def jl_screen_bound(
-    threshold: float, jl_dim: int, slack_num: int = 2, slack_den: int = 1
-) -> int:
+#: Sketch width of :func:`lsh_jl_screened_pairs`' JL screen.
+JL_SCREEN_DIM = 16
+
+#: Slack over the expected projected distance in :func:`jl_screen_bound`
+#: (2: covers the measured p95 distortion ratio 1.652 at 16 dims).
+JL_SCREEN_SLACK = 2
+
+
+def jl_screen_bound(threshold: float) -> int:
     """The exact integer JL-screen bound: keep a candidate pair iff its
-    projected squared distance Σⱼ(paⱼ−pbⱼ)² ≤ slack·jl_dim·2(1−τ)·Q²
-    (Q = linalg.JL_QSCALE). Derivation: on unit vectors cosine ≥ τ ⟺
+    projected squared distance Σⱼ(paⱼ−pbⱼ)² ≤ slack·dim·2(1−τ)·Q²
+    (dim = :data:`JL_SCREEN_DIM`, slack = :data:`JL_SCREEN_SLACK`,
+    Q = linalg.JL_QSCALE). Derivation: on unit vectors cosine ≥ τ ⟺
     ‖x−y‖² ≤ 2(1−τ); the projection is unbiased with
-    E[‖P(x−y)‖²] = jl_dim·‖x−y‖²·Q², and the measured p95 distortion
-    ratio at jl_dim=16 is 1.652 (tests/test_operators.py::
-    test_jl_projection_distortion_and_recall), so the default slack 2
-    covers the 95%+ tail. Computed in exact rational arithmetic from the
+    E[‖P(x−y)‖²] = dim·‖x−y‖²·Q², and the measured p95 distortion
+    ratio at 16 dims is 1.652 (tests/test_operators.py::
+    test_jl_projection_distortion_and_recall), so slack 2 covers the
+    95%+ tail. Computed in exact rational arithmetic from the
     threshold's DECIMAL string (never float multiplication), so both
     engines compare against the identical integer literal."""
     from fractions import Fraction
@@ -2896,8 +2870,8 @@ def jl_screen_bound(
 
     tau = Fraction(str(threshold))
     return int(
-        Fraction(slack_num, slack_den)
-        * jl_dim
+        JL_SCREEN_SLACK
+        * JL_SCREEN_DIM
         * 2
         * (1 - tau)
         * JL_QSCALE
@@ -2915,9 +2889,6 @@ def lsh_jl_screened_pairs(
     vec_col: str = "embedding",
     *,
     dim: int,
-    jl_dim: int = 16,
-    slack_num: int = 2,
-    slack_den: int = 1,
 ) -> DataFrame:
     """:func:`lsh_similarity_join_exact` with a 16-dim integer JL screen
     between banding and the exact refine — the three-tier ladder the JL
@@ -2958,9 +2929,9 @@ def lsh_jl_screened_pairs(
         df.select(F.col(id_col), F.col(vec_col)),
         vec_col,
         dim_in=dim,
-        dim_out=jl_dim,
+        dim_out=JL_SCREEN_DIM,
     ).select(F.col(id_col), F.col("jl"))
-    bound = jl_screen_bound(threshold, jl_dim, slack_num, slack_den)
+    bound = jl_screen_bound(threshold)
     withjl = cand.join(
         jl.select(F.col(id_col).alias("id_a"), F.col("jl").alias("jla")),
         "id_a",
@@ -2995,7 +2966,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """IVF-PQ serving composition (Jégou et al. TPAMI'11 §V: coarse
     inverted lists + product codes — the FAISS IVFPQ architecture): route
@@ -3053,7 +3023,7 @@ def ivfpq_topk(
 
     codes = pq_encode(
         df, n_centroids, m, dim=dim, id_col=id_col, vec_col=vec_col,
-        keep_cols=keep_cols, n_blocks=n_blocks,
+        keep_cols=keep_cols,
     )
     sub = dim // m
     cb_row = df.filter(F.col(id_col) < n_centroids).agg(
@@ -3125,7 +3095,6 @@ def ivfpq_topk(
             nrm_col="vnorm",
             dot="grid",
             extra_cols=("codes",),
-            n_blocks=n_blocks,
         )
         .crossJoin(
             F.broadcast(ctx.select("q", "qnorm", "probe_cells", "ptab"))
@@ -3455,7 +3424,6 @@ def semantic_decontaminate(
     threshold: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """Embedding-space decontamination: every TRAIN vector whose cosine
     to ANY EVAL vector reaches ``threshold`` is flagged contaminated —
@@ -3520,18 +3488,8 @@ def semantic_decontaminate(
     )
 
     id_type = dict(df.dtypes)[id_col]
-    proj = q.filter(~F.col("__ev")).select(id_col, "__qv", "__nrm")
-    n_blocks = kernel_block_count(proj, n_blocks)
-    blocks = (
-        proj.withColumn(
-            "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
-        )
-        .groupBy("__blk")
-        .agg(
-            F.collect_list(F.struct(id_col, "__qv", "__nrm")).alias(
-                "ablock"
-            )
-        )
+    blocks = _kernel_blocks(
+        q.filter(~F.col("__ev")).select(id_col, "__qv", "__nrm"), id_col
     )
     ctx = blocks.crossJoin(F.broadcast(ev_row))
     out_schema = f"`{id_col}` {id_type}, contaminated boolean"
@@ -3775,7 +3733,6 @@ def semantic_dedup_gemm(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seeds_from: DataFrame | None = None,
-    n_blocks: int | None = None,
     two_level: bool = False,
     n_super: int | None = None,
 ) -> DataFrame:
@@ -3845,23 +3802,9 @@ def semantic_dedup_gemm(
         )
     )
     q = df.select(
-        F.col(id_col), _sem_quant(F.col(vec_col)).alias("__qv")
+        F.col(id_col).alias("id"), _sem_quant(F.col(vec_col)).alias("__qv")
     ).withColumn("__nrm", _sem_qnorm6(F.col("__qv")))
-    # family default (round 11): block count derived from the projected
-    # plan's BYTES (128 MB per collected block), floored by parallelism;
-    # blocking never affects values, only Arrow batch granularity
-    n_blocks = kernel_block_count(q, n_blocks)
-    blocks = (
-        q.withColumn(
-            "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
-        )
-        .groupBy("__blk")
-        .agg(
-            F.collect_list(
-                F.struct(F.col(id_col).alias("id"), "__qv", "__nrm")
-            ).alias("ablock")
-        )
-    )
+    blocks = _kernel_blocks(q, "id")
     ctx = blocks.crossJoin(F.broadcast(seeds_row))
 
     # round 16 (guide §4.2, VERDICT r15 #3): raw Arrow batches — the
@@ -3978,7 +3921,6 @@ def ivfpq_residual_topk(
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
     train_codebook: bool = False,
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """Paper-faithful IVFADC (Jégou, Douze & Schmid TPAMI'11 §V): codes
     quantize the RESIDUAL v − c(v) against the vector's coarse cell — the
@@ -4258,7 +4200,6 @@ def ivfpq_residual_topk(
             vec_col=vec_col,
             nrm_col="vnorm",
             dot="grid",
-            n_blocks=n_blocks,
         )
         .crossJoin(F.broadcast(ctx))
         .filter(

@@ -642,7 +642,9 @@ def bm25_topk(
 #: term-hash bucket count of the persisted postings index — the partition
 #: key a query's term filter prunes on (crc32 is computable engine-side
 #: AND driver-side via zlib.crc32, so the query planner knows its buckets
-#: without a Spark job).
+#: without a Spark job). One constant for the write side
+#: (:func:`inverted_postings`) and every read side: a read that hashed
+#: terms into a different count would prune the wrong partitions.
 BM25_BUCKETS = 16
 
 
@@ -650,7 +652,6 @@ def inverted_postings(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = BM25_BUCKETS,
 ) -> DataFrame:
     """The PERSISTABLE POSITIONAL inverted-index postings relation: one
     ``(term, id, tf, positions, bucket)`` row per distinct (document,
@@ -658,9 +659,9 @@ def inverted_postings(
     term/tf and lets parquet column pruning skip the positions) and
     positional queries (phrase adjacency reads the sorted positions
     arrays; tf ≡ size(positions) by construction). ``bucket`` =
-    crc32(term) % ``n_buckets`` is the artifact's partition column: a
-    q-term search prunes the scan to ≤ q of the ``n_buckets`` partition
-    directories before parquet row-group stats prune further on
+    crc32(term) % :data:`BM25_BUCKETS` is the artifact's partition
+    column: a q-term search prunes the scan to ≤ q of the bucket
+    partition directories before parquet row-group stats prune further on
     ``term`` — at 100 TB the postings scan is sized by the queried
     terms' document frequency, not the corpus."""
     toks = F.split(F.col(text_col), " ")
@@ -675,7 +676,7 @@ def inverted_postings(
             F.sort_array(F.collect_list("pos")).alias("positions"),
         )
         .withColumn(
-            "bucket", F.pmod(F.crc32(F.col("term")), F.lit(n_buckets))
+            "bucket", F.pmod(F.crc32(F.col("term")), F.lit(BM25_BUCKETS))
         )
     )
 
@@ -685,7 +686,6 @@ def bm25_batch_from_index(
     docstats: DataFrame,
     queries: dict,
     k: int = 10,
-    n_buckets: int = BM25_BUCKETS,
     id_col: str = "doc_id",
     keep_cols: tuple[str, ...] = ("lang",),
 ) -> DataFrame:
@@ -712,7 +712,7 @@ def bm25_batch_from_index(
     m = arities.pop()
     all_terms = sorted({t for ts in queries.values() for t in ts})
     buckets = sorted(
-        {zlib.crc32(t.encode()) % n_buckets for t in all_terms}
+        {zlib.crc32(t.encode()) % BM25_BUCKETS for t in all_terms}
     )
     hits = postings.filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(all_terms)
@@ -796,7 +796,6 @@ def bm25_batch_from_index(
 def phrase_hits_from_index(
     postings: DataFrame,
     phrases: tuple[tuple[str, str], ...],
-    n_buckets: int = BM25_BUCKETS,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Two-word phrase search served from the positional postings index:
@@ -812,7 +811,7 @@ def phrase_hits_from_index(
     import zlib
 
     words = sorted({w for p in phrases for w in p})
-    buckets = sorted({zlib.crc32(w.encode()) % n_buckets for w in words})
+    buckets = sorted({zlib.crc32(w.encode()) % BM25_BUCKETS for w in words})
     hits = postings.filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(words)
     ).select(id_col, "term", "positions")
@@ -882,7 +881,6 @@ def bm25_topk_from_index(
     docstats: DataFrame,
     terms: tuple[str, ...],
     k: int = 10,
-    n_buckets: int = BM25_BUCKETS,
     id_col: str = "doc_id",
     keep_cols: tuple[str, ...] = ("lang",),
 ) -> DataFrame:
@@ -906,7 +904,7 @@ def bm25_topk_from_index(
     """
     import zlib
 
-    buckets = sorted({zlib.crc32(t.encode()) % n_buckets for t in terms})
+    buckets = sorted({zlib.crc32(t.encode()) % BM25_BUCKETS for t in terms})
     hits = postings.filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(list(terms))
     )

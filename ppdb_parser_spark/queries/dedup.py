@@ -2273,8 +2273,8 @@ def dedup_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Dedup cluster-quality report — the composed graph-QA lineage: simhash
-# near-pair edges → star-CC clusters → per-cluster size, edge count,
-# triangle support, and integer edge density. This is the audit a
+# near-pair edges → connected-component clusters → per-cluster size, edge
+# count, triangle support, and integer edge density. This is the audit a
 # CC-based dedup pass needs before collapsing: a cluster whose density
 # and triangle support are high is a true dup clique (safe to collapse
 # to one canonical doc); a large sparse cluster is chained false merges
@@ -2333,7 +2333,7 @@ _CLUSTER_REPORT_ORACLE = f"""
     tags=("O6", "J2", "J6", "A1"),
 )
 def dedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import connected_components_star, oriented_triangles
+    from ..operators.graph import connected_components, oriented_triangles
 
     pairs = DD.simhash_near_pairs(
         load_table(spark, sf_dir, "documents"), max_hamming=3, n_bands=4
@@ -2346,7 +2346,7 @@ def dedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels, _rounds = connected_components_star(e, src="a", dst="b")
+    labels = connected_components(e, src="a", dst="b")
     sizes = labels.groupBy("component").agg(F.count(F.lit(1)).alias("n_docs"))
     edge_counts = (
         e.join(labels.withColumnRenamed("node", "a"), "a")

@@ -1183,7 +1183,7 @@ def _jl_screened_oracle() -> str:
     from ..operators.linalg import jl_project_sql
     from ..operators.similarity import jl_screen_bound
 
-    bound = jl_screen_bound(0.35, 16)
+    bound = jl_screen_bound(0.35)
     return f"""
     WITH el AS (
       SELECT vec_id, CAST(x AS DOUBLE) AS x, i

@@ -476,7 +476,7 @@ def govern_documents(
 #                    enters a pair join);
 #   prefix-exact   → AllPairs/PPJoin exact 2-gram Jaccard >= 0.5, run ONLY
 #   Jaccard          on the screened subset;
-#   star-CC        → large-star/small-star components over the dup edges;
+#   components     → connected components over the dup edges;
 #   election         the component-minimum doc survives (canonical copy),
 #                    every other member is dropped — transitive-chain
 #                    semantics the per-pair dominance rule can't give;
@@ -718,7 +718,7 @@ def govern_documents_v3(
     """The eight-stage marquee lineage on arbitrary (documents,
     embeddings) frames — the registered query binds the fixture tables;
     scale smokes feed key-shifted unions through the identical plan."""
-    from ..operators.graph import connected_components_star
+    from ..operators.graph import connected_components
     from ..operators.similarity import semantic_dedup
 
     from pyspark.sql import Window
@@ -773,8 +773,9 @@ def govern_documents_v3(
         sub, threshold=0.5, n=2, min_partitions=min_partitions
     ).select("id_a", "id_b")
 
-    # 3. star-CC canonical election: component minimum survives
-    labels, _rounds = connected_components_star(edges)
+    # 3. connected-components canonical election: component minimum
+    #    survives
+    labels = connected_components(edges)
     drop1 = labels.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )
@@ -792,8 +793,9 @@ def govern_documents_v3(
     # Materialize the post-dedup survivor relation: four downstream
     # branches (eval shingles, contamination probe, train filter, final
     # shard export) all consume it, and without a cut each branch would
-    # re-run the semantic cell self-join. The star-CC stage above already
-    # truncates lineage per round, so this is the one additional
+    # re-run the semantic cell self-join. The components stage above
+    # already cuts its edge input (and on the driver tier returns its
+    # labels as a local relation), so this is the one additional
     # materialization point — at cluster scale it is the natural
     # "curated corpus" checkpoint a real build persists anyway.
     surv2 = surv1.join(drop2, "doc_id", "left_anti").localCheckpoint(eager=True)

@@ -805,7 +805,11 @@ def test_no_tier_selector_parameters():
     """One implementation per operator: no public operator takes an A/B
     implementation selector (``tier``, ``*_tier``, ``assign``,
     ``encode``, ``orientation``). Where an operator has two paths, an
-    observable property of the input picks, not a parameter."""
+    observable property of the input picks, not a parameter. Physical
+    layout is the engine's decision too: no public operator takes a
+    block, shard or bucket count or a JL screen shape (``n_blocks``,
+    ``n_b_shards``, ``target_block_bytes``, ``n_buckets``, ``jl_dim``,
+    ``slack_num``, ``slack_den``)."""
     import importlib
     import inspect
     import pkgutil
@@ -820,7 +824,9 @@ def test_no_tier_selector_parameters():
                 continue
             for p in inspect.signature(fn).parameters:
                 if p in (
-                    "tier", "assign", "encode", "orientation"
+                    "tier", "assign", "encode", "orientation",
+                    "n_blocks", "n_b_shards", "target_block_bytes",
+                    "n_buckets", "jl_dim", "slack_num", "slack_den",
                 ) or p.endswith("_tier"):
                     bad.append(f"{mod.__name__}.{name}({p})")
     assert not bad, bad
@@ -1754,15 +1760,16 @@ def test_corpus_curation_v3_absorbs_exact_duplication(spark, sf_dir):
     assert out1 == out4 and len(out1) > 0
 
 
-def test_brute_cosine_blocked_matches_declarative(spark, sf_dir):
+def test_brute_cosine_blocked_matches_declarative(spark, sf_dir, monkeypatch):
     """The blocked-GEMM kernel must emit EXACTLY the declarative
     baseline's pairs — same ids, same 1e-6-rounded cosines — across the
     whole fixture (the vectorized tier is a physical rewrite, not a
     semantic variant), and block boundaries must not lose cross-block
-    pairs (n_blocks=5 doesn't divide the id space evenly)."""
+    pairs (5 row blocks don't divide the id space evenly)."""
     from ppdb_parser_spark.operators import similarity as SIM
     from ppdb_parser_spark.sources.tables import load_table
 
+    monkeypatch.setattr(SIM, "BRUTE_ROW_BLOCKS", 5)
     e = load_table(spark, sf_dir, "embeddings")
     want = {
         (r["id_a"], r["id_b"], r["cosine"])
@@ -1770,9 +1777,7 @@ def test_brute_cosine_blocked_matches_declarative(spark, sf_dir):
     }
     got = {
         (r["id_a"], r["id_b"], r["cosine"])
-        for r in SIM.brute_cosine_pairs_blocked(
-            e, threshold=0.35, n_blocks=5
-        ).collect()
+        for r in SIM.brute_cosine_pairs_blocked(e, threshold=0.35).collect()
     }
     assert got == want and len(got) > 0
 
@@ -1817,27 +1822,33 @@ def test_recommend_ann_tier_pinned_to_recall_md():
     assert over["residual_requires"] == {"train_codebook": True}
 
 
-def test_brute_blocked_b_shards_pair_identical(spark, sf_dir):
+def test_brute_blocked_b_shards_pair_identical(spark, sf_dir, monkeypatch):
     """The block-pair GRID (B sharded into column blocks, VERDICT r7
     item 6) must emit EXACTLY the single-broadcast tier's pairs — each
     (a, b) lands in exactly one (row-block × B-shard) cell, so sharding
-    is a pure physical decomposition. n_blocks=5 / n_b_shards=3 are
-    coprime to the id space so both boundaries are exercised."""
+    is a pure physical decomposition. The shard count derives from the
+    B side's plan bytes: the fixture fits one broadcast row, and a
+    shrunken budget derives >= 3 shards. 5 row blocks and the derived
+    shard count are coprime to the id space, so both boundaries are
+    exercised."""
     from ppdb_parser_spark.operators import similarity as SIM
     from ppdb_parser_spark.sources.tables import load_table
 
+    monkeypatch.setattr(SIM, "BRUTE_ROW_BLOCKS", 5)
     e = load_table(spark, sf_dir, "embeddings")
+    assert SIM._b_shard_count(e, "vec_id", "embedding") == 1
     want = {
         (r["id_a"], r["id_b"], r["cosine"])
-        for r in SIM.brute_cosine_pairs_blocked(
-            e, threshold=0.35, n_blocks=5
-        ).collect()
+        for r in SIM.brute_cosine_pairs_blocked(e, threshold=0.35).collect()
     }
+    budget = SIM.BROADCAST_ROW_BYTES
+    while SIM._b_shard_count(e, "vec_id", "embedding") < 3:
+        budget //= 2
+        monkeypatch.setattr(SIM, "BROADCAST_ROW_BYTES", budget)
+    assert 3 <= SIM._b_shard_count(e, "vec_id", "embedding") < 6
     got = {
         (r["id_a"], r["id_b"], r["cosine"])
-        for r in SIM.brute_cosine_pairs_blocked(
-            e, threshold=0.35, n_blocks=5, n_b_shards=3
-        ).collect()
+        for r in SIM.brute_cosine_pairs_blocked(e, threshold=0.35).collect()
     }
     assert got == want and len(got) > 0
 
@@ -2211,7 +2222,7 @@ def test_jl_screened_lsh_pairs(spark):
             jl.select(F.col("vec_id").alias("id_b"), F.col("jl").alias("jlb")),
             "id_b",
         )
-        .filter(d2 <= F.lit(jl_screen_bound(0.9, 16)).cast("decimal(38,0)"))
+        .filter(d2 <= F.lit(jl_screen_bound(0.9)).cast("decimal(38,0)"))
         .count()
     )
     assert n_cand > 100_000, n_cand
@@ -2813,14 +2824,15 @@ def test_gemm_assign_nan_mirror(spark, sf_dir):
         SIM.semantic_dedup_gemm(salted_seed, n_cells=8).collect()
 
 
-def test_kernel_block_count_bytes_aware(spark):
+def test_kernel_block_count_bytes_aware(spark, monkeypatch):
     """The kernel family's block count derives from Catalyst's plan-size
     estimate, floored by 2x parallelism (VERDICT r10 weak #1): one block
     materializes as a single collect_list array in one executor task, so
     at scale the count must grow with BYTES, not stay pinned to cores.
-    Checked by shrinking target_block_bytes until the estimate dominates
+    Checked by shrinking KERNEL_BLOCK_BYTES until the estimate dominates
     the floor — the same arithmetic a 100 TB corpus triggers at the
     128 MB default."""
+    from ppdb_parser_spark.operators import similarity as SIM
     from ppdb_parser_spark.operators.similarity import (
         KERNEL_BLOCK_BYTES,
         kernel_block_count,
@@ -2834,8 +2846,6 @@ def test_kernel_block_count_bytes_aware(spark):
 
     # fixture scale: estimate << 128 MB, the parallelism floor holds
     assert kernel_block_count(emb) == floor
-    # explicit override always wins
-    assert kernel_block_count(emb, 7) == 7
     # when bytes dominate, the count scales with ceil(est / target):
     # halving the target doubles the block count
     est = int(
@@ -2845,9 +2855,11 @@ def test_kernel_block_count_bytes_aware(spark):
     )
     assert est > 0
     tgt = max(1, est // (4 * floor))  # force the bytes regime
-    got = kernel_block_count(emb, target_block_bytes=tgt)
+    monkeypatch.setattr(SIM, "KERNEL_BLOCK_BYTES", tgt)
+    got = kernel_block_count(emb)
     assert got == -(-est // tgt) and got > floor
-    got2 = kernel_block_count(emb, target_block_bytes=max(1, tgt // 2))
+    monkeypatch.setattr(SIM, "KERNEL_BLOCK_BYTES", max(1, tgt // 2))
+    got2 = kernel_block_count(emb)
     assert got2 >= got * 2 - 2  # ceil granularity
     assert KERNEL_BLOCK_BYTES == 128 << 20
 
@@ -3216,7 +3228,7 @@ def test_jl_screen_gemm_matches_decimal_at_bound(spark):
     fallback), plus far-side values decided by the fast path."""
     from ppdb_parser_spark.operators.similarity import gemm_jl_screen
 
-    bound = 4_160_000_000_000_000  # jl_screen_bound(0.35, 16)
+    bound = 4_160_000_000_000_000  # jl_screen_bound(0.35)
     import math
 
     base = int(math.isqrt(bound // 16))

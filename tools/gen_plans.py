@@ -28,7 +28,7 @@ def main() -> None:
         "`BroadcastHashJoin` on dictionary/dimension sides, `PushedFilters`",
         "and pruned `ReadSchema` on parquet scans, `TakeOrderedAndProject`",
         "for top-k, and no `BroadcastNestedLoopJoin`/`CartesianProduct`",
-        "EXCEPT the guarded 1-row/`n_b_shards`-row broadcast-context",
+        "EXCEPT the guarded 1-row (or 1-row-per-B-shard) broadcast-context",
         "pattern (a probe vector, seed set, or GEMM B-shard riding in as a",
         "tiny broadcast relation cross-joined onto every row/block — the",
         "seeds_row idiom; every such BNLJ in this file has a bounded",

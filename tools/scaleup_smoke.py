@@ -956,58 +956,54 @@ def main() -> None:
         # sharded into a block-pair grid, at 16x embeddings (32k x 64-dim
         # = ~17.5 MB serialized as ONE collect_list row — past Spark's
         # own 10 MB default broadcast threshold, the realistic budget for
-        # a single broadcast row). n_b_shards = ceil(B_bytes / 10 MB)
-        # with the struct overhead measured in, and the grid must emit
-        # EXACTLY the single-broadcast tier's pairs (asserted).
-        import math
-
-        from ppdb_parser_spark.operators.similarity import (
-            brute_cosine_pairs_blocked,
-        )
+        # a single broadcast row). The shard count derives from the B
+        # side's plan bytes against BROADCAST_ROW_BYTES; patched to 10 MB
+        # it must yield > 1 shard, and the grid must emit EXACTLY the
+        # single-broadcast tier's pairs (asserted).
+        from ppdb_parser_spark.operators import similarity as SIM
 
         emb = load_table(spark, sf, "embeddings")
-        n1 = emb.count()
         e16 = _shifted_union(emb, "vec_id", 16)
-        n16 = n1 * 16
-        # ~550 B per (long, array<double>[64]) struct entry, measured
-        b_bytes = n16 * 550
-        budget = 10 * 1024 * 1024
-        shards = math.ceil(b_bytes / budget)
-        print(
-            f"gemm16: n={n16} vectors, single-row B ≈ "
-            f"{b_bytes / 1e6:.1f} MB > {budget / 1e6:.1f} MB default "
-            f"broadcast threshold -> n_b_shards={shards}"
-        )
+        n16 = emb.count() * 16
+        one = SIM._b_shard_count(e16, "vec_id", "embedding")
         t0 = time.perf_counter()
         single = sorted(
             map(
                 tuple,
-                brute_cosine_pairs_blocked(
-                    e16, threshold=0.35, n_blocks=32
-                ).collect(),
+                SIM.brute_cosine_pairs_blocked(e16, threshold=0.35).collect(),
             )
         )
         ts = time.perf_counter() - t0
-        print(f"gemm16 single-broadcast: {ts:.2f} s ({len(single)} pairs)")
-        t0 = time.perf_counter()
-        grid = sorted(
-            map(
-                tuple,
-                brute_cosine_pairs_blocked(
-                    e16, threshold=0.35, n_blocks=32, n_b_shards=shards
-                ).collect(),
-            )
-        )
-        tg = time.perf_counter() - t0
         print(
-            f"gemm16 block-pair grid ({shards} B-shards): {tg:.2f} s "
-            f"({len(grid)} pairs)"
+            f"gemm16 n={n16} vectors, {one} B-shard(s) at the "
+            f"{SIM.BROADCAST_ROW_BYTES / 1e6:.1f} MB budget: {ts:.2f} s "
+            f"({len(single)} pairs)"
         )
+        default_budget = SIM.BROADCAST_ROW_BYTES
+        SIM.BROADCAST_ROW_BYTES = 10 * 1024 * 1024
+        try:
+            shards = SIM._b_shard_count(e16, "vec_id", "embedding")
+            t0 = time.perf_counter()
+            grid = sorted(
+                map(
+                    tuple,
+                    SIM.brute_cosine_pairs_blocked(
+                        e16, threshold=0.35
+                    ).collect(),
+                )
+            )
+            tg = time.perf_counter() - t0
+        finally:
+            SIM.BROADCAST_ROW_BYTES = default_budget
+        print(
+            f"gemm16 block-pair grid ({shards} B-shards at 10 MB): "
+            f"{tg:.2f} s ({len(grid)} pairs)"
+        )
+        assert shards > one, "10 MB budget derived no extra B-shard"
         assert grid == single, "sharded grid pairs differ from single-B"
         print(
-            f"  -> {tg / ts:.2f}x wall vs single-broadcast; pair sets "
-            "identical (asserted); max per-row B payload now "
-            f"~{b_bytes / shards / 1e6:.1f} MB"
+            f"  -> {tg / ts:.2f}x wall vs {one} B-shard(s); pair sets "
+            "identical (asserted)"
         )
 
     if not only or "ppl" in only:
