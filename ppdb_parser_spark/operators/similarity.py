@@ -129,91 +129,26 @@ def ivf_topk(
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
 ) -> DataFrame:
-    """IVF-style ANN top-k, fully relational — zero driver-side jobs.
+    """IVF-style ANN top-k over a SEED index, fully relational — zero
+    driver-side jobs.
 
-    Coarse cells are seeded by the vectors with ``id < n_cells``
-    (deterministic, no k-means iteration). The whole index state — the
-    seeds array (with precomputed norms), the probe embedding, and the
-    probe's top-``n_probe`` cells — is computed IN-PLAN as one broadcast
-    context row (two 1-row aggregates cross-joined).
-
-    The corpus cell assignment runs on :func:`gemm_assign_cells`
-    (``dot="float"`` flavor: the kernel replays :func:`_dot`'s left-fold
-    sum dimension-by-dimension, so the cosines — and therefore the
-    oracle — are bit-identical). The probe's own cell ranking stays
-    in-plan — it is one row. Then candidate filter, then
+    The coarse cells are the vectors with ``id < n_cells`` (deterministic,
+    no k-means iteration), and the search is :func:`ivf_search_centroids`
+    over that seed centroid relation: corpus assignment on
+    :func:`gemm_assign_cells` (``dot="float"``, bit-identical to the
+    in-plan left-fold cosine), the probe routed to its top-``n_probe``
+    cells in the 1-row broadcast context, then candidate filter and
     TakeOrderedAndProject.
     """
-    seeds = df.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).cast("int").alias("cell_id"),
-        F.col(vec_col).alias("semb"),
-    )
-    # one row: all seeds as an array of (cell_id, embedding, norm) structs.
-    # collect_list order is nondeterministic, but every consumer below is
-    # an order-independent argmax/sort with a full tie-break.
-    seeds_row = seeds.agg(
-        F.collect_list(
-            F.struct(
-                F.col("cell_id"), F.col("semb"), _norm(F.col("semb")).alias("snorm")
-            )
-        ).alias("seeds")
-    )
-    probe_row = df.filter(F.col(id_col) == probe_id).select(
-        F.col(vec_col).alias("probe_emb"), _norm(F.col(vec_col)).alias("probe_nrm")
-    ).limit(1)  # provably 1-row broadcast context (see cosine_topk_by_id)
-
-    def _seed_cos(emb: Column, nrm: Column):
-        """array<struct<negcos,cell_id>> sorted asc = cosine desc, id asc."""
-        return F.array_sort(
-            F.transform(
-                F.col("seeds"),
-                lambda s: F.struct(
-                    (-F.round(_dot(emb, s["semb"]) / (nrm * s["snorm"]), 6)).alias(
-                        "negcos"
-                    ),
-                    s["cell_id"].alias("cell_id"),
-                ),
-            )
-        )
-
-    ctx = (
-        probe_row.crossJoin(seeds_row)
-        .withColumn(
-            "probe_cells",
-            F.slice(
-                F.transform(
-                    _seed_cos(F.col("probe_emb"), F.col("probe_nrm")),
-                    lambda s: s["cell_id"],
-                ),
-                1,
-                n_probe,
-            ),
-        )
-        .select("probe_emb", "probe_nrm", "seeds", "probe_cells")
-    )
-
-    base = df.withColumn("__nrm", _norm(F.col(vec_col)))
-    assigned = gemm_assign_cells(
-        base,
-        seeds_row,
+    return ivf_search_centroids(
+        df,
+        _seed_cells(df, n_cells, id_col, vec_col),
+        probe_id=probe_id,
+        n_probe=n_probe,
+        k=k,
         id_col=id_col,
         vec_col=vec_col,
-        nrm_col="__nrm",
-        dot="float",
-        extra_cols=tuple(keep_cols),
-    ).crossJoin(F.broadcast(ctx.select("probe_emb", "probe_nrm", "probe_cells")))
-    cand = assigned.filter(
-        F.array_contains(F.col("probe_cells"), F.col("cell_id"))
-        & (F.col(id_col) != probe_id)
-    )
-    cosine = F.round(
-        _dot(F.col(vec_col), F.col("probe_emb")) / (F.col("__nrm") * F.col("probe_nrm")),
-        6,
-    )
-    return (
-        cand.select(id_col, *keep_cols, cosine.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+        keep_cols=keep_cols,
     )
 
 
@@ -258,37 +193,9 @@ def ivf_batch_topk(
     map."""
     from pyspark.sql import Window
 
-    seeds = df.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).cast("int").alias("cell_id"),
-        F.col(vec_col).alias("semb"),
+    seeds_row = _seeds_row(
+        _seed_cells(df, n_cells, id_col, vec_col), _grid_norm6
     )
-    seeds_row = seeds.agg(
-        F.collect_list(
-            F.struct(
-                F.col("cell_id"),
-                F.col("semb"),
-                _grid_norm6(F.col("semb")).alias("snorm"),
-            )
-        ).alias("seeds")
-    )
-
-    def _seed_cos(emb: Column, nrm: Column) -> Column:
-        return F.array_sort(
-            F.transform(
-                F.col("seeds"),
-                lambda s: F.struct(
-                    (
-                        -F.round(
-                            (_grid_dot(emb, s["semb"]) / float(PQ_GRID))
-                            / (nrm * s["snorm"]),
-                            6,
-                        )
-                    ).alias("negcos"),
-                    s["cell_id"].alias("cell_id"),
-                ),
-            )
-        )
-
     base = df.withColumn("__nrm", _grid_norm6(F.col(vec_col)))
     assigned = gemm_assign_cells(
         base,
@@ -314,9 +221,11 @@ def ivf_batch_topk(
             "probe_nrm",
             F.explode(
                 F.slice(
-                    F.transform(
-                        _seed_cos(F.col("probe_emb"), F.col("probe_nrm")),
-                        lambda s: s["cell_id"],
+                    _ranked_cells(
+                        F.col("seeds"),
+                        F.col("probe_emb"),
+                        F.col("probe_nrm"),
+                        "grid",
                     ),
                     1,
                     n_probe,
@@ -767,17 +676,7 @@ def ivf_build_centroids(
     """
     GRID = 100_000_000  # embeddings are rounded to 8 decimals
 
-    seeds = df.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).cast("int").alias("cell_id"),
-        F.col(vec_col).alias("semb"),
-    )
-    seeds_row = seeds.agg(
-        F.collect_list(
-            F.struct(
-                F.col("cell_id"), F.col("semb"), _norm(F.col("semb")).alias("snorm")
-            )
-        ).alias("seeds")
-    )
+    seeds_row = _seeds_row(_seed_cells(df, n_cells, id_col, vec_col))
     base = df.withColumn("__nrm", _norm(F.col(vec_col)))
     a1 = gemm_assign_cells(
         base,
@@ -815,14 +714,69 @@ def ivf_build_centroids(
     )
 
 
-def _ivf_seeds_row(centroids: DataFrame) -> DataFrame:
+def _seed_cells(
+    df: DataFrame, n: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The SEED index of the IVF and PQ families: the vectors with
+    ``id < n`` as a centroid relation ``(cell_id int, semb)`` — the same
+    shape :func:`ivf_build_centroids` trains, so a seeded search is the
+    trained search over this relation (deterministic, no RNG)."""
+    return df.filter(F.col(id_col) < n).select(
+        F.col(id_col).cast("int").alias("cell_id"),
+        F.col(vec_col).alias("semb"),
+    )
+
+
+def _seeds_row(centroids: DataFrame, norm=_norm) -> DataFrame:
     """Collapse a centroid relation ``(cell_id, semb)`` to the 1-row
-    ``seeds`` broadcast context (norms recomputed — derived data never
-    persists). Shared by the search, assignment-build, and
-    inverted-list serving paths so the seed layout can't drift."""
+    ``seeds: array<struct<cell_id, semb, snorm>>`` broadcast context that
+    :func:`gemm_assign_cells` and :func:`_ranked_cells` read. ``norm`` is
+    the flavour's norm expression (:func:`_norm` for float cosines,
+    :func:`_grid_norm6` for grid ones); norms are recomputed here, never
+    persisted. ``collect_list`` order is nondeterministic, but every
+    consumer is an order-independent argmax or sort with a full
+    tie-break."""
     return centroids.select(
-        "cell_id", "semb", _norm(F.col("semb")).alias("snorm")
+        "cell_id", "semb", norm(F.col("semb")).alias("snorm")
     ).agg(F.collect_list(F.struct("cell_id", "semb", "snorm")).alias("seeds"))
+
+
+def _ranked_cells(seeds: Column, vec: Column, nrm: Column, dot: str) -> Column:
+    """Cell ids of a ``seeds`` context array ranked by round-6 cosine to
+    ``vec`` (norm ``nrm``), descending, ties to the smaller cell id — the
+    in-plan routing decision for one probe row. ``dot`` picks the
+    flavour, as in :func:`gemm_assign_cells`: ``"float"`` is the
+    :func:`_dot` left fold, ``"grid"`` the int64 :func:`_grid_dot`."""
+
+    def cos(s: Column) -> Column:
+        if dot == "grid":
+            return (_grid_dot(vec, s["semb"]) / float(PQ_GRID)) / (nrm * s["snorm"])
+        return _dot(vec, s["semb"]) / (nrm * s["snorm"])
+
+    return F.transform(
+        F.array_sort(
+            F.transform(
+                seeds,
+                lambda s: F.struct(
+                    (-F.round(cos(s), 6)).alias("negcos"),
+                    s["cell_id"].alias("cell_id"),
+                ),
+            )
+        ),
+        lambda s: s["cell_id"],
+    )
+
+
+def _probe_row(
+    df: DataFrame, probe_id: int, id_col: str, vec_col: str, norm
+) -> DataFrame:
+    """The 1-row probe context ``(q, qnorm)`` of every single-probe
+    search; ``norm`` is the flavour's norm expression. ``limit(1)`` makes
+    the id filter PROVABLY 1-row (see :func:`cosine_topk_by_id`), so the
+    context registers as a bounded broadcast side."""
+    return df.filter(F.col(id_col) == probe_id).select(
+        F.col(vec_col).alias("q"), norm(F.col(vec_col)).alias("qnorm")
+    ).limit(1)
 
 
 def _ivf_probe_ctx(
@@ -833,41 +787,41 @@ def _ivf_probe_ctx(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """The 1-row probe context (probe vector + norm, seeds, and the
-    probe's top-``n_probe`` cells by round-6 cosine, ties to the smaller
-    cell id) — the routing decision every IVF serving path shares."""
-    cent_row = _ivf_seeds_row(centroids)
-    probe_row = df.filter(F.col(id_col) == probe_id).select(
-        F.col(vec_col).alias("probe_emb"), _norm(F.col(vec_col)).alias("probe_nrm")
-    ).limit(1)  # provably 1-row broadcast context (see cosine_topk_by_id)
+    """The 1-row IVF probe context: probe vector and norm plus its
+    top-``n_probe`` cells (``probe_cells``) by float round-6 cosine — the
+    routing decision every IVF serving path shares."""
     return (
-        probe_row.crossJoin(cent_row)
-        .withColumn(
-            "probe_cells",
+        _probe_row(df, probe_id, id_col, vec_col, _norm)
+        .crossJoin(_seeds_row(centroids))
+        .select(
+            "q",
+            "qnorm",
             F.slice(
-                F.transform(
-                    F.array_sort(
-                        F.transform(
-                            F.col("seeds"),
-                            lambda s: F.struct(
-                                (
-                                    -F.round(
-                                        _dot(F.col("probe_emb"), s["semb"])
-                                        / (F.col("probe_nrm") * s["snorm"]),
-                                        6,
-                                    )
-                                ).alias("negcos"),
-                                s["cell_id"].alias("cell_id"),
-                            ),
-                        )
-                    ),
-                    lambda s: s["cell_id"],
-                ),
+                _ranked_cells(F.col("seeds"), F.col("q"), F.col("qnorm"), "float"),
                 1,
                 n_probe,
-            ),
+            ).alias("probe_cells"),
         )
-        .select("probe_emb", "probe_nrm", "seeds", "probe_cells")
+    )
+
+
+def _ivf_exact_topk(
+    cand: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    keep_cols: tuple[str, ...],
+) -> DataFrame:
+    """Exact float round-6 cosine top-k of routed IVF candidates carrying
+    ``__nrm`` and the probe context's ``q``/``qnorm``."""
+    cosine = F.round(
+        _dot(F.col(vec_col), F.col("q")) / (F.col("__nrm") * F.col("qnorm")),
+        6,
+    )
+    return (
+        cand.select(id_col, *keep_cols, cosine.alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .limit(k)
     )
 
 
@@ -881,47 +835,34 @@ def ivf_search_centroids(
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
 ) -> DataFrame:
-    """The SEARCH half of :func:`ivf_kmeans_topk`: given a centroid
-    relation ``(cell_id, semb)`` — freshly built or loaded from a
-    persisted parquet index — assign every corpus vector to its nearest
-    centroid, route the probe to its top ``n_probe`` centroid cells, and
-    take the exact top-k inside the probed cells.
+    """The SEARCH half of every IVF top-k: given a centroid relation
+    ``(cell_id, semb)`` — the seed index of :func:`ivf_topk`, freshly
+    trained by :func:`ivf_build_centroids`, or loaded from a persisted
+    parquet index — assign every corpus vector to its nearest centroid,
+    route the probe to its top ``n_probe`` centroid cells, and take the
+    exact top-k inside the probed cells.
 
     Centroid norms are recomputed here from ``semb`` (derived data never
     persists), then the whole ≤``n_cells``-row index collapses to a
-    1-row broadcast context exactly as in :func:`ivf_kmeans_topk` — the
-    search never shuffles the corpus; its one wide stage is the
-    narrow assignment map over the scan.
+    1-row broadcast context — the search never shuffles the corpus; its
+    one wide stage is the Arrow-block exchange of the assignment kernel.
     """
     base = df.withColumn("__nrm", _norm(F.col(vec_col)))
     ctx = _ivf_probe_ctx(df, centroids, probe_id, n_probe, id_col, vec_col)
-    a2 = gemm_assign_cells(
+    assigned = gemm_assign_cells(
         base,
-        _ivf_seeds_row(centroids),
+        _seeds_row(centroids),
         id_col=id_col,
         vec_col=vec_col,
         nrm_col="__nrm",
         dot="float",
         extra_cols=tuple(keep_cols),
-    ).withColumnRenamed("cell_id", "cell2").crossJoin(
-        F.broadcast(
-            ctx.select("probe_emb", "probe_nrm", "probe_cells")
-        )
-    )
-    cand = a2.filter(
-        F.array_contains(F.col("probe_cells"), F.col("cell2"))
+    ).crossJoin(F.broadcast(ctx))
+    cand = assigned.filter(
+        F.array_contains(F.col("probe_cells"), F.col("cell_id"))
         & (F.col(id_col) != probe_id)
     )
-    cosine = F.round(
-        _dot(F.col(vec_col), F.col("probe_emb"))
-        / (F.col("__nrm") * F.col("probe_nrm")),
-        6,
-    )
-    return (
-        cand.select(id_col, *keep_cols, cosine.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _ivf_exact_topk(cand, k, id_col, vec_col, keep_cols)
 
 
 def ivf_assignments(
@@ -946,7 +887,7 @@ def ivf_assignments(
     base = df.withColumn("__nrm", _norm(F.col(vec_col)))
     return gemm_assign_cells(
         base,
-        _ivf_seeds_row(centroids),
+        _seeds_row(centroids),
         id_col=id_col,
         vec_col=vec_col,
         nrm_col="__nrm",
@@ -991,18 +932,12 @@ def ivf_topk_from_assignments(
     cand = assignments.filter(
         F.col("cell_id").isin(cells) & (F.col(id_col) != probe_id)
     ).withColumn("__nrm", _norm(F.col(vec_col)))
-    scored = cand.crossJoin(
-        F.broadcast(ctx.select("probe_emb", "probe_nrm"))
-    )
-    cosine = F.round(
-        _dot(F.col(vec_col), F.col("probe_emb"))
-        / (F.col("__nrm") * F.col("probe_nrm")),
-        6,
-    )
-    return (
-        scored.select(id_col, *keep_cols, cosine.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+    return _ivf_exact_topk(
+        cand.crossJoin(F.broadcast(ctx.select("q", "qnorm"))),
+        k,
+        id_col,
+        vec_col,
+        keep_cols,
     )
 
 
@@ -1454,7 +1389,7 @@ def gemm_lsh_bits(
 ) -> DataFrame:
     """Hyperplane sign bits as an Arrow/numpy map — the third member of
     the round-10 kernel family (:func:`gemm_assign_cells`,
-    :func:`pq_encode`), and the CHEAPEST: the planes are compile-time
+    :func:`_pq_scan`), and the CHEAPEST: the planes are compile-time
     literals (``lsh_planes`` output), so unlike the cell/code kernels no
     broadcast seeds context and NO SHUFFLE is needed — rows stream
     through ``mapInArrow`` in scan order, a pure narrow map with no
@@ -1512,6 +1447,324 @@ def gemm_lsh_bits(
     return df.select(*cols).mapInArrow(sig_batches, out_schema)
 
 
+#: Elements of the (rows × centroids × sub) squared-distance tensor one
+#: step of the PQ nearest-centroid argmin materializes (~32 MB of
+#: float64): it bounds a kernel task's scratch memory however many rows
+#: its block holds. Read at plan-build time, so a patched value reaches
+#: the Python workers through the kernel closure.
+PQ_ARGMIN_CHUNK = 4_000_000
+
+
+def _np_pq_argmin(Qs, C, chunk: int):
+    """Row-wise position of the nearest row of ``C`` to each row of
+    ``Qs`` on the exact int64 grid (``Σ round((x−y)²·1e9)`` via
+    :func:`_np_round_half_away`, bit-identical to :func:`_grid_sum`), so
+    ties resolve by integer equality + first index = the smallest
+    centroid id of a sorted codebook — no float rounding near the
+    decision. Rows go ``chunk // C.size`` at a time, so the distance
+    tensor never exceeds ``chunk`` elements."""
+    import numpy as np
+
+    step = max(1, chunk // max(1, C.size))
+    pos = np.empty(len(Qs), dtype=np.intp)
+    for lo in range(0, len(Qs), step):
+        diff = Qs[lo : lo + step, None, :] - C[None, :, :]
+        pos[lo : lo + step] = np.argmin(
+            _np_round_half_away_consume((diff * diff) * 1e9).sum(axis=2),
+            axis=1,
+        )
+    return pos
+
+
+def _np_codebook(cents, m: int, sub: int, q=None):
+    """Per-subspace split of a ``cents`` context array: for each
+    subspace ``s`` a tuple (cc-sorted centroid ids as int32, their
+    (n_s, sub) float64 matrix, and — given the probe vector ``q`` — the
+    probe's exact int64 grid dot with each centroid, the ADC lookup
+    table, else ``None``). Trained codebooks may drop empty clusters, so
+    ids are sorted, never assumed contiguous."""
+    import numpy as np
+
+    from .linalg import arrow_list_to_2d
+
+    cs = cents.field("cs").to_numpy()
+    cc = cents.field("cc").to_numpy()
+    Cfull = arrow_list_to_2d(cents.field("cvec"), np.float64)
+    book = []
+    for s in range(m):
+        rows = np.nonzero(cs == s)[0]
+        rows = rows[np.argsort(cc[rows], kind="stable")]
+        C = Cfull[rows]
+        tdots = None
+        if q is not None:
+            qs = q[s * sub : (s + 1) * sub]
+            tdots = _np_round_half_away((qs[None, :] * C) * 1e9).sum(axis=1)
+        book.append((cc[rows].astype(np.int32), C, tdots))
+    return book
+
+
+def _pq_cents_row(codebook: DataFrame) -> DataFrame:
+    """Collapse a codebook relation ``(s, c, cvec)`` to the 1-row
+    ``cents: array<struct<cs, cc, cvec>>`` broadcast context that
+    :func:`_pq_scan` reads."""
+    return codebook.agg(
+        F.collect_list(
+            F.struct(
+                F.col("s").alias("cs"),
+                F.col("c").alias("cc"),
+                F.col("cvec").alias("cvec"),
+            )
+        ).alias("cents")
+    )
+
+
+def _pq_seed_cents(
+    df: DataFrame,
+    n_centroids: int,
+    m: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    what: str,
+) -> DataFrame:
+    """The SEED codebook as the same 1-row ``cents`` context
+    :func:`_pq_cents_row` builds from a trained one: centroid ``c`` of
+    subspace ``s`` is slice ``s`` of the vector with id ``c <
+    n_centroids`` (:func:`_seed_cells`). The ids are asserted 0-based
+    contiguous (:func:`_assert_contiguous_ids`), so seed codes equal
+    codebook positions — the contract the positional ADC lookups of
+    :func:`ivfpq_topk` rely on."""
+    sub = dim // m
+    seeds = _assert_contiguous_ids(
+        F.col("seeds"), "cell_id", n_centroids, what
+    )
+    return (
+        _seed_cells(df, n_centroids, id_col, vec_col)
+        .agg(F.array_sort(F.collect_list(F.struct("cell_id", "semb"))).alias("seeds"))
+        .select(
+            F.flatten(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(m - 1)),
+                    lambda s: F.transform(
+                        seeds,
+                        lambda c: F.struct(
+                            s.alias("cs"),
+                            c["cell_id"].alias("cc"),
+                            F.slice(c["semb"], s * sub + 1, sub).alias("cvec"),
+                        ),
+                    ),
+                )
+            ).alias("cents")
+        )
+    )
+
+
+def _pq_scan(
+    rel: DataFrame,
+    ctx: DataFrame,
+    *,
+    src_col: str,
+    out_col: str,
+    out_cols: list[str],
+    m: int,
+    sub: int,
+    id_col: str,
+) -> DataFrame:
+    """The one PQ Arrow kernel. ``rel``'s rows ship in
+    :func:`_kernel_blocks` against the broadcast 1-row ``ctx`` (``cents``,
+    plus the probe ``q`` when scoring). Per subspace, each row's centroid
+    is either FOUND — the exact-grid argmin (:func:`_np_pq_argmin`) of
+    its ``src_col`` vector slice — or, when ``src_col`` is ``"codes"``,
+    READ from its persisted codes (an integer gather). ``out_col`` is
+    then ``"codes"`` (the centroid ids, ``array<int>``) or
+    ``"adc_dot_grid"`` (Σ_s of the probe's grid dot with that centroid,
+    ``long``). Emits ``out_cols``: ``rel``'s columns passed through plus
+    ``out_col``. Raw Arrow batches: blocks decompose zero-copy and the
+    per-row arithmetic runs over the whole batch (blocking never affects
+    values)."""
+    dtypes = dict(rel.dtypes)
+    adc = out_col == "adc_dot_grid"
+    gather = src_col == "codes"
+    dtypes[out_col] = "bigint" if adc else "array<int>"
+    out_schema = ", ".join(f"`{c}` {dtypes[c]}" for c in out_cols)
+    kctx = _kernel_blocks(rel, id_col).crossJoin(F.broadcast(ctx))
+    chunk = PQ_ARGMIN_CHUNK
+
+    def pq_batches(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        from .linalg import (
+            arrow_list_to_2d,
+            block_layout,
+            context_entries,
+            uniform_list_offsets,
+        )
+
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            entries, offs = block_layout(rb.column("ablock"))
+            q = None
+            if adc:
+                q = np.asarray(rb.column("q")[0].as_py(), dtype=np.float64)
+            book = _np_codebook(context_entries(rb.column("cents")), m, sub, q)
+            base = int(offs[0])
+            total = int(offs[-1]) - base
+            src = arrow_list_to_2d(
+                entries.field(src_col), np.int32 if gather else np.float64
+            )[base : base + total]
+            vals = np.empty((total, m), dtype=np.int64 if adc else np.int32)
+            for s, (ids, C, tdots) in enumerate(book):
+                if gather:
+                    pos = np.searchsorted(ids, src[:, s])
+                else:
+                    pos = _np_pq_argmin(
+                        src[:, s * sub : (s + 1) * sub], C, chunk
+                    )
+                vals[:, s] = (tdots if adc else ids)[pos]
+            if adc:
+                out = pa.array(vals.sum(axis=1))
+            else:
+                out = pa.ListArray.from_arrays(
+                    uniform_list_offsets(total, m), pa.array(vals.ravel())
+                )
+            rows = entries.slice(base, total)
+            yield pa.RecordBatch.from_arrays(
+                [out if c == out_col else rows.field(c) for c in out_cols],
+                out_cols,
+            )
+
+    return kctx.mapInArrow(pq_batches, out_schema)
+
+
+def _pq_rows(
+    df: DataFrame, id_col: str, vec_col: str, keep_cols: tuple[str, ...]
+) -> DataFrame:
+    """The vector rows a PQ scan encodes: ``(id, *keep_cols, vec,
+    vnorm)`` with the in-plan grid norm."""
+    return df.select(
+        id_col,
+        *keep_cols,
+        vec_col,
+        _grid_norm6(F.col(vec_col)).alias("vnorm"),
+    )
+
+
+def _pq_codes(
+    df: DataFrame,
+    cents_row: DataFrame,
+    *,
+    dim: int,
+    m: int,
+    id_col: str,
+    vec_col: str,
+    keep_cols: tuple[str, ...],
+) -> DataFrame:
+    """Encode ``df`` against a 1-row ``cents`` context: ``(id,
+    *keep_cols, codes array<int>, vnorm)``."""
+    return _pq_scan(
+        _pq_rows(df, id_col, vec_col, keep_cols),
+        cents_row,
+        src_col=vec_col,
+        out_col="codes",
+        out_cols=[id_col, *keep_cols, "codes", "vnorm"],
+        m=m,
+        sub=dim // m,
+        id_col=id_col,
+    )
+
+
+def _adc_rerank(
+    scored: DataFrame,
+    vec_src: DataFrame,
+    probe_id: int,
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+    keep_cols: tuple[str, ...],
+) -> DataFrame:
+    """The exact-rerank tail of every PQ search. ``scored`` carries
+    ``(id, *keep_cols, adc_dot_grid, vnorm, q, qnorm)``: round-6
+    ``adc_cosine``, drop the probe itself, keep the top ``rerank`` by
+    ADC (TakeOrderedAndProject), join those ≤ ``rerank`` rows back to
+    ``vec_src``'s vectors as a broadcast for the exact grid cosine, and
+    rank the final top-``k`` on it. Returns (id, *keep_cols,
+    adc_cosine, cosine)."""
+
+    def cos6(dot: Column) -> Column:
+        return F.round(
+            (dot / float(PQ_GRID)) / (F.col("vnorm") * F.col("qnorm")), 6
+        )
+
+    cands = (
+        scored.filter(F.col(id_col) != probe_id)
+        .select(
+            id_col,
+            *keep_cols,
+            cos6(F.col("adc_dot_grid")).alias("adc_cosine"),
+            "q",
+            "qnorm",
+            "vnorm",
+        )
+        .orderBy(F.desc("adc_cosine"), F.asc(id_col))
+        .limit(rerank)
+    )
+    return (
+        vec_src.select(id_col, vec_col)
+        .join(F.broadcast(cands), id_col)
+        .select(
+            id_col,
+            *keep_cols,
+            "adc_cosine",
+            cos6(_grid_dot(F.col(vec_col), F.col("q"))).alias("cosine"),
+        )
+        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .limit(k)
+    )
+
+
+def _pq_search(
+    df: DataFrame,
+    cents_row: DataFrame,
+    probe_id: int,
+    k: int,
+    rerank: int,
+    *,
+    dim: int,
+    m: int,
+    id_col: str,
+    vec_col: str,
+    keep_cols: tuple[str, ...],
+    codes_rel: DataFrame | None = None,
+) -> DataFrame:
+    """PQ ADC top-k with exact rerank over a 1-row ``cents`` context.
+    The probe and the rerank vectors come from ``df``; the scan is
+    ``df``'s vectors (fused encode + ADC) or, given ``codes_rel``, its
+    persisted ``(id, *keep_cols, codes, vnorm)`` rows (integer gather)."""
+    probe = _probe_row(df, probe_id, id_col, vec_col, _grid_norm6)
+    if codes_rel is None:
+        rel = _pq_rows(df, id_col, vec_col, keep_cols)
+        src_col = vec_col
+    else:
+        rel = codes_rel.select(id_col, *keep_cols, "codes", "vnorm")
+        src_col = "codes"
+    scored = _pq_scan(
+        rel,
+        probe.crossJoin(cents_row),
+        src_col=src_col,
+        out_col="adc_dot_grid",
+        out_cols=[id_col, *keep_cols, "vnorm", "adc_dot_grid"],
+        m=m,
+        sub=dim // m,
+        id_col=id_col,
+    ).crossJoin(F.broadcast(probe))
+    return _adc_rerank(
+        scored, df, probe_id, k, rerank, id_col, vec_col, keep_cols
+    )
+
+
 def pq_encode(
     df: DataFrame,
     n_centroids: int = 16,
@@ -1530,120 +1783,25 @@ def pq_encode(
     scan reads this codes table (~9 bytes/vector here) instead of the
     256-byte float embedding, which is the entire point of PQ.
 
-    Centroids are seeded deterministically from the vectors with
-    ``id < n_centroids`` (the ivf_topk convention — no RNG, oracle-exact;
-    `sim_ivf_kmeans_topk` shows how a relational Lloyd step sharpens seeded
-    cells when needed). Distances are argmin'd on the int64 PQ_GRID, ties
+    This is :func:`pq_codes_from_codebook` over the SEED codebook: the
+    vectors with ``id < n_centroids`` (the ivf_topk convention — no RNG,
+    oracle-exact; ``sim_pq_kmeans_topk`` shows how a relational Lloyd
+    step sharpens it). Distances are argmin'd on the int64 PQ_GRID, ties
     broken on centroid id, so codes are bit-reproducible cross-engine.
-
-    Plan: the per-row code assignment — O(n · centroids · dim) grid
-    distances — runs as Arrow/numpy blocks against a 1-row broadcast
-    codebook, the :func:`gemm_assign_cells` layout applied to
-    squared-distance argmin. The argmin compares exact int64 grid
-    distances (``Σ round((x−y)²·1e9)`` via :func:`_np_round_half_away`,
-    bit-identical to :func:`_grid_sum`), so ties resolve by integer
-    equality + first-index = smallest centroid id — no float rounding
-    anywhere near the decision. The one shuffle is the corpus block
-    exchange.
 
     Returns (id_col, *keep_cols, codes array<int>, vnorm).
     """
-    sub = dim // m
-    seeds_row = df.filter(F.col(id_col) < n_centroids).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).cast("int").alias("cell_id"),
-                    F.col(vec_col).alias("semb"),
-                )
-            )
-        ).alias("seeds")
-    ).select(
-        _assert_contiguous_ids(
-            F.col("seeds"), "cell_id", n_centroids, "pq_encode codebook"
-        ).alias("seeds")
+    return _pq_codes(
+        df,
+        _pq_seed_cents(
+            df, n_centroids, m, dim, id_col, vec_col, "pq_encode codebook"
+        ),
+        dim=dim,
+        m=m,
+        id_col=id_col,
+        vec_col=vec_col,
+        keep_cols=keep_cols,
     )
-
-    dtypes = dict(df.dtypes)
-    cols = [id_col, *keep_cols, vec_col]
-    out_schema = ", ".join(
-        [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols)]
-        + ["codes array<int>", "vnorm double"]
-    )
-    blocks = _kernel_blocks(
-        df.select(*cols).withColumn("__vnorm", _grid_norm6(F.col(vec_col))),
-        id_col,
-    )
-    ctx = blocks.crossJoin(F.broadcast(seeds_row))
-
-    # round 16 (guide §4.2, VERDICT r15 #3): raw Arrow batches —
-    # zero-copy block decomposition in, offsets-built codes column
-    # out; per-subspace int64 grid argmin unchanged.
-    def encode_batches(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from .linalg import (
-            arrow_list_to_2d,
-            block_layout,
-            context_entries,
-            uniform_list_offsets,
-        )
-
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            entries, offs = block_layout(rb.column("ablock"))
-            seeds = context_entries(rb.column("seeds"))
-            order = np.argsort(
-                seeds.field("cell_id").to_numpy(), kind="stable"
-            )
-            S = arrow_list_to_2d(seeds.field("semb"), np.float64)[
-                order
-            ]
-            Qall = arrow_list_to_2d(
-                entries.field(vec_col), np.float64
-            )
-            base = int(offs[0])
-            total = int(offs[-1]) - base
-            codes_all = np.empty((total, m), dtype=np.int32)
-            nc = S.shape[0]
-            step = max(1, 4_000_000 // max(1, nc * sub))
-            for bi in range(len(offs) - 1):
-                lo_g, hi_g = int(offs[bi]), int(offs[bi + 1])
-                Q = Qall[lo_g:hi_g]
-                n = hi_g - lo_g
-                out = codes_all[lo_g - base : hi_g - base]
-                for s in range(m):
-                    Qs = Q[:, s * sub : (s + 1) * sub]
-                    Ss = S[:, s * sub : (s + 1) * sub]
-                    for lo in range(0, n, step):
-                        diff = (
-                            Qs[lo : lo + step, None, :]
-                            - Ss[None, :, :]
-                        )
-                        t = _np_round_half_away((diff * diff) * 1e9)
-                        # exact int64 distances: argmin's first-min
-                        # = smallest centroid id (seeds sorted, ids
-                        # contiguous)
-                        out[lo : lo + step, s] = np.argmin(
-                            t.sum(axis=2), axis=1
-                        )
-            out_rows = entries.slice(base, total)
-            codes_col = pa.ListArray.from_arrays(
-                uniform_list_offsets(total, m),
-                pa.array(codes_all.ravel()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    out_rows.field(c)
-                    for c in (id_col, *keep_cols)
-                ]
-                + [codes_col, out_rows.field("__vnorm")],
-                [id_col, *keep_cols, "codes", "vnorm"],
-            )
-
-    return ctx.mapInArrow(encode_batches, out_schema)
 
 
 def pq_topk(
@@ -1660,12 +1818,12 @@ def pq_topk(
     keep_cols: tuple[str, ...] = ("label",),
 ) -> DataFrame:
     """PQ asymmetric-distance top-k (TPAMI'11 ADC) with exact rerank —
-    the textbook PQ serving shape:
+    the textbook PQ serving shape, as :func:`pq_search_codebook` over the
+    SEED codebook (:func:`pq_encode`'s):
 
-    1. codes scan: per row, adc_dot = Σ_s table[s][code_s] where ``table``
-       is the broadcast (m × n_centroids) grid of probe-subvector ·
-       centroid-subvector dots — O(m) int64 lookups per row, no float
-       math in the hot loop;
+    1. codes scan: per row, adc_dot = Σ_s table[s][code_s], where
+       ``table`` holds the probe-subvector · centroid-subvector grid dots
+       — exact int64 lookups, computed once per block;
     2. top-``rerank`` candidates by adc_cosine (TakeOrderedAndProject);
     3. the ≤ ``rerank`` survivors join back to the embeddings relation
        (a broadcast semi-lookup at scale) for the exact cosine, and the
@@ -1678,84 +1836,19 @@ def pq_topk(
 
     Returns (id_col, *keep_cols, adc_cosine, cosine) — ``cosine`` exact.
     """
-    sub = dim // m
-    codes = pq_encode(
+    return _pq_search(
         df,
-        n_centroids,
-        m,
+        _pq_seed_cents(
+            df, n_centroids, m, dim, id_col, vec_col, "pq_topk ADC table"
+        ),
+        probe_id,
+        k,
+        rerank,
         dim=dim,
+        m=m,
         id_col=id_col,
         vec_col=vec_col,
         keep_cols=keep_cols,
-    )
-    seeds_row = df.filter(F.col(id_col) < n_centroids).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).cast("int").alias("cell_id"),
-                    F.col(vec_col).alias("semb"),
-                )
-            )
-        ).alias("seeds")
-    ).select(
-        _assert_contiguous_ids(
-            F.col("seeds"), "cell_id", n_centroids, "pq_topk ADC table"
-        ).alias("seeds")
-    )
-    probe_row = df.filter(F.col(id_col) == probe_id).select(
-        F.col(vec_col).alias("q"), _grid_norm6(F.col(vec_col)).alias("qnorm")
-    ).limit(1)  # provably 1-row broadcast context (see cosine_topk_by_id)
-    ctx = probe_row.crossJoin(seeds_row).select(
-        "q",
-        "qnorm",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.transform(
-                F.col("seeds"),
-                lambda c: _grid_dot(
-                    F.slice(F.col("q"), s * sub + 1, sub),
-                    F.slice(c["semb"], s * sub + 1, sub),
-                ),
-            ),
-        ).alias("ptab"),
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(ctx))
-        .withColumn(
-            "adc_dot_grid",
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                F.lit(0).cast("long"),
-                lambda acc, s: acc
-                + F.get(F.get(F.col("ptab"), s), F.get(F.col("codes"), s)),
-            ),
-        )
-        .withColumn(
-            "adc_cosine",
-            F.round(
-                (F.col("adc_dot_grid") / float(PQ_GRID))
-                / (F.col("vnorm") * F.col("qnorm")),
-                6,
-            ),
-        )
-        .filter(F.col(id_col) != probe_id)
-    )
-    cands = scored.select(
-        id_col, *keep_cols, "adc_cosine", "q", "qnorm", "vnorm"
-    ).orderBy(F.desc("adc_cosine"), F.asc(id_col)).limit(rerank)
-    reranked = df.select(id_col, vec_col).join(F.broadcast(cands), id_col)
-    return (
-        reranked.withColumn(
-            "cosine",
-            F.round(
-                (_grid_dot(F.col(vec_col), F.col("q")) / float(PQ_GRID))
-                / (F.col("vnorm") * F.col("qnorm")),
-                6,
-            ),
-        )
-        .select(id_col, *keep_cols, "adc_cosine", "cosine")
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
     )
 
 
@@ -1852,142 +1945,27 @@ def pq_search_codebook(
     vec_col: str = "embedding",
     keep_cols: tuple[str, ...] = ("label",),
 ) -> DataFrame:
-    """The SEARCH half of :func:`pq_kmeans_topk`: given a codebook
-    relation ``(s, c, cvec)`` — freshly trained or loaded from a
-    persisted parquet index — re-encode the corpus against it, ADC-score
-    the probe, and exact-rerank the top ``rerank`` candidates to the
-    final top-k. The whole ≤ m·n_centroids-row codebook collapses to a
-    1-row broadcast context; the corpus is never shuffled — the one wide
-    stage is the narrow encode/ADC map over the scan (an Arrow kernel).
+    """The SEARCH half of every PQ top-k: given a codebook relation
+    ``(s, c, cvec)`` — freshly trained or loaded from a persisted
+    parquet index — re-encode the corpus against it, ADC-score the
+    probe, and exact-rerank the top ``rerank`` candidates to the final
+    top-k (:func:`pq_topk` is this search over the seed codebook). The
+    whole ≤ m·n_centroids-row codebook collapses to a 1-row broadcast
+    context; the one wide stage is the block exchange of the fused
+    encode + ADC Arrow kernel.
     """
-    sub = dim // m
-    cents_row = codebook.agg(
-        F.collect_list(
-            F.struct(
-                F.col("s").alias("cs"),
-                F.col("c").alias("cc"),
-                F.col("cvec").alias("cvec"),
-            )
-        ).alias("cents")
+    return _pq_search(
+        df,
+        _pq_cents_row(codebook),
+        probe_id,
+        k,
+        rerank,
+        dim=dim,
+        m=m,
+        id_col=id_col,
+        vec_col=vec_col,
+        keep_cols=keep_cols,
     )
-    probe_row = df.filter(F.col(id_col) == probe_id).select(
-        F.col(vec_col).alias("q"), _grid_norm6(F.col(vec_col)).alias("qnorm")
-    ).limit(1)  # provably 1-row broadcast context (see cosine_topk_by_id)
-    ctx = probe_row.crossJoin(cents_row)
-
-    base = df.withColumn("vnorm", _grid_norm6(F.col(vec_col)))
-    dtypes = dict(base.dtypes)
-    cols = [id_col, *keep_cols, vec_col, "vnorm"]
-    out_schema = ", ".join(
-        [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols, "vnorm")]
-        + ["adc_dot_grid long"]
-    )
-    blocks = _kernel_blocks(base.select(*cols), id_col)
-    kctx = blocks.crossJoin(F.broadcast(ctx))
-    sub_l, m_l, vc = sub, m, vec_col
-
-    # round 16 (guide §4.2, VERDICT r15 #3): raw Arrow batches; the
-    # codebook context also parses ONCE per batch (the pandas form
-    # rebuilt the by-subspace dict per block row). Same int64 grid
-    # distances, same tdots, same adc sums.
-    def adc_batches(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from .linalg import (
-            arrow_list_to_2d,
-            block_layout,
-            context_entries,
-        )
-
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            entries, offs = block_layout(rb.column("ablock"))
-            cents = context_entries(rb.column("cents"))
-            qv = np.asarray(
-                rb.column("q")[0].as_py(), dtype=np.float64
-            )
-            cs = cents.field("cs").to_numpy()
-            cc = cents.field("cc").to_numpy()
-            Cfull = arrow_list_to_2d(
-                cents.field("cvec"), np.float64
-            )
-            # per-subspace cc-sorted centroid matrices + the probe's
-            # per-(subspace, centroid) dot table — pure context,
-            # hoisted out of the block loop
-            C_by_s, tdots_by_s = [], []
-            for s in range(m_l):
-                rows = np.nonzero(cs == s)[0]
-                rows = rows[np.argsort(cc[rows], kind="stable")]
-                C = Cfull[rows]
-                qs = qv[s * sub_l : (s + 1) * sub_l]
-                C_by_s.append(C)
-                tdots_by_s.append(
-                    _np_round_half_away((qs[None, :] * C) * 1e9).sum(
-                        axis=1
-                    )
-                )
-            Qall = arrow_list_to_2d(entries.field(vc), np.float64)
-            base_o = int(offs[0])
-            total = int(offs[-1]) - base_o
-            adc_all = np.zeros(total, dtype=np.int64)
-            for bi in range(len(offs) - 1):
-                lo_g, hi_g = int(offs[bi]), int(offs[bi + 1])
-                Q = Qall[lo_g:hi_g]
-                out = adc_all[lo_g - base_o : hi_g - base_o]
-                for s in range(m_l):
-                    C = C_by_s[s]
-                    Qs = Q[:, s * sub_l : (s + 1) * sub_l]
-                    diff = Qs[:, None, :] - C[None, :, :]
-                    D = _np_round_half_away(
-                        (diff * diff) * 1e9
-                    ).sum(axis=2)
-                    out += tdots_by_s[s][np.argmin(D, axis=1)]
-            out_rows = entries.slice(base_o, total)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    out_rows.field(c)
-                    for c in (id_col, *keep_cols, "vnorm")
-                ]
-                + [pa.array(adc_all)],
-                [id_col, *keep_cols, "vnorm", "adc_dot_grid"],
-            )
-
-    scored = (
-        kctx.mapInArrow(adc_batches, out_schema)
-        .crossJoin(
-            F.broadcast(ctx.select("q", "qnorm"))
-        )
-        .withColumn(
-            "adc_cosine",
-            F.round(
-                (F.col("adc_dot_grid") / float(PQ_GRID))
-                / (F.col("vnorm") * F.col("qnorm")),
-                6,
-            ),
-        )
-        .filter(F.col(id_col) != probe_id)
-    )
-    cands = scored.select(
-        id_col, *keep_cols, "adc_cosine", "q", "qnorm", "vnorm"
-    ).orderBy(F.desc("adc_cosine"), F.asc(id_col)).limit(rerank)
-    reranked = df.select(id_col, vec_col).join(F.broadcast(cands), id_col)
-    return (
-        reranked.withColumn(
-            "cosine",
-            F.round(
-                (_grid_dot(F.col(vec_col), F.col("q")) / float(PQ_GRID))
-                / (F.col("vnorm") * F.col("qnorm")),
-                6,
-            ),
-        )
-        .select(id_col, *keep_cols, "adc_cosine", "cosine")
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 
 
 def pq_codes_from_codebook(
@@ -2018,85 +1996,15 @@ def pq_codes_from_codebook(
     Exactness: exact int64 grid distances, argmin first-min = smallest
     ``cc`` over the cc-sorted codebook — byte-identical to the per-query
     encode, so serving from persisted codes equals re-encoding."""
-    sub = dim // m
-    cents_row = codebook.agg(
-        F.collect_list(
-            F.struct(
-                F.col("s").alias("cs"),
-                F.col("c").alias("cc"),
-                F.col("cvec").alias("cvec"),
-            )
-        ).alias("cents")
+    return _pq_codes(
+        df,
+        _pq_cents_row(codebook),
+        dim=dim,
+        m=m,
+        id_col=id_col,
+        vec_col=vec_col,
+        keep_cols=keep_cols,
     )
-    dtypes = dict(df.dtypes)
-    cols = [id_col, *keep_cols, vec_col]
-    out_schema = ", ".join(
-        [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols)]
-        + ["codes array<int>", "vnorm double"]
-    )
-    blocks = _kernel_blocks(
-        df.select(*cols).withColumn("__vnorm", _grid_norm6(F.col(vec_col))),
-        id_col,
-    )
-    kctx = blocks.crossJoin(F.broadcast(cents_row))
-    sub_l, m_l, vc = sub, m, vec_col
-
-    # round 16 (guide §4.2, VERDICT r15 #3): raw Arrow batches; codebook
-    # parsed once per batch; identical argmin-over-cc-sorted codes.
-    def code_batches(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from .linalg import (
-            arrow_list_to_2d,
-            block_layout,
-            context_entries,
-            uniform_list_offsets,
-        )
-
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            entries, offs = block_layout(rb.column("ablock"))
-            cents = context_entries(rb.column("cents"))
-            cs = cents.field("cs").to_numpy()
-            cc = cents.field("cc").to_numpy()
-            Cfull = arrow_list_to_2d(cents.field("cvec"), np.float64)
-            C_by_s, cc_by_s = [], []
-            for s in range(m_l):
-                rows = np.nonzero(cs == s)[0]
-                rows = rows[np.argsort(cc[rows], kind="stable")]
-                C_by_s.append(Cfull[rows])
-                cc_by_s.append(cc[rows].astype(np.int32))
-            Qall = arrow_list_to_2d(entries.field(vc), np.float64)
-            base_o = int(offs[0])
-            total = int(offs[-1]) - base_o
-            codes_all = np.empty((total, m_l), dtype=np.int32)
-            for bi in range(len(offs) - 1):
-                lo_g, hi_g = int(offs[bi]), int(offs[bi + 1])
-                Q = Qall[lo_g:hi_g]
-                out = codes_all[lo_g - base_o : hi_g - base_o]
-                for s in range(m_l):
-                    C = C_by_s[s]
-                    Qs = Q[:, s * sub_l : (s + 1) * sub_l]
-                    diff = Qs[:, None, :] - C[None, :, :]
-                    D = _np_round_half_away((diff * diff) * 1e9).sum(
-                        axis=2
-                    )
-                    # first-min over cc-sorted entries = smallest cc
-                    out[:, s] = cc_by_s[s][np.argmin(D, axis=1)]
-            out_rows = entries.slice(base_o, total)
-            codes_col = pa.ListArray.from_arrays(
-                uniform_list_offsets(total, m_l),
-                pa.array(codes_all.ravel()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [out_rows.field(c) for c in (id_col, *keep_cols)]
-                + [codes_col, out_rows.field("__vnorm")],
-                [id_col, *keep_cols, "codes", "vnorm"],
-            )
-
-    return kctx.mapInArrow(code_batches, out_schema)
 
 
 def pq_topk_from_codes(
@@ -2118,118 +2026,24 @@ def pq_topk_from_codes(
     table, NEVER the float embeddings (except the probe lookup and the
     ``rerank``-row exact tail). ADC per row is an integer GATHER: the
     probe's per-(subspace, centroid) dot table is computed once per
-    block from the broadcast codebook context, and each row sums its m
+    batch from the broadcast codebook context, and each row sums its m
     looked-up entries — no per-row distance argmin, that was paid at
     encode/commit. Values are byte-identical to
     :func:`pq_search_codebook` over the live corpus (same tdots ints,
     same codes, same round-6 cosine), so the kmeans oracle applies
     unchanged."""
-    sub = dim // m
-    cents_row = codebook.agg(
-        F.collect_list(
-            F.struct(
-                F.col("s").alias("cs"),
-                F.col("c").alias("cc"),
-                F.col("cvec").alias("cvec"),
-            )
-        ).alias("cents")
-    )
-    probe_row = probe_src.filter(F.col(id_col) == probe_id).select(
-        F.col(vec_col).alias("q"), _grid_norm6(F.col(vec_col)).alias("qnorm")
-    ).limit(1)  # provably 1-row broadcast context (see cosine_topk_by_id)
-    ctx = probe_row.crossJoin(cents_row)
-
-    cols = [id_col, *keep_cols, "codes", "vnorm"]
-    dtypes = dict(codes_rel.dtypes)
-    out_schema = ", ".join(
-        [f"`{c}` {dtypes[c]}" for c in (id_col, *keep_cols, "vnorm")]
-        + ["adc_dot_grid long"]
-    )
-    blocks = _kernel_blocks(codes_rel.select(*cols), id_col)
-    kctx = blocks.crossJoin(F.broadcast(ctx))
-    sub_l, m_l = sub, m
-
-    # round 16 (guide §4.2, VERDICT r15 #3): raw Arrow batches — the
-    # ~9-byte/row codes column reshapes zero-copy and the integer gather
-    # vectorizes over the WHOLE batch (blocks only delimited the pandas
-    # loop; the gather needs no per-block state). Same tdots ints.
-    def adc_gather_batches(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from .linalg import (
-            arrow_list_to_2d,
-            block_layout,
-            context_entries,
-        )
-
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            entries, offs = block_layout(rb.column("ablock"))
-            cents = context_entries(rb.column("cents"))
-            qv = np.asarray(rb.column("q")[0].as_py(), dtype=np.float64)
-            cs = cents.field("cs").to_numpy()
-            cc = cents.field("cc").to_numpy()
-            Cfull = arrow_list_to_2d(cents.field("cvec"), np.float64)
-            base_o = int(offs[0])
-            total = int(offs[-1]) - base_o
-            codes = arrow_list_to_2d(entries.field("codes"), np.int32)[
-                base_o : base_o + total
-            ]
-            adc = np.zeros(total, dtype=np.int64)
-            for s in range(m_l):
-                rows = np.nonzero(cs == s)[0]
-                rows = rows[np.argsort(cc[rows], kind="stable")]
-                cc_ids = cc[rows].astype(np.int32)
-                C = Cfull[rows]
-                qs = qv[s * sub_l : (s + 1) * sub_l]
-                tdots = _np_round_half_away(
-                    (qs[None, :] * C) * 1e9
-                ).sum(axis=1)
-                pos = np.searchsorted(cc_ids, codes[:, s])
-                adc += tdots[pos]
-            out_rows = entries.slice(base_o, total)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    out_rows.field(c)
-                    for c in (id_col, *keep_cols, "vnorm")
-                ]
-                + [pa.array(adc)],
-                [id_col, *keep_cols, "vnorm", "adc_dot_grid"],
-            )
-
-    scored = (
-        kctx.mapInArrow(adc_gather_batches, out_schema)
-        .crossJoin(F.broadcast(ctx.select("q", "qnorm")))
-        .withColumn(
-            "adc_cosine",
-            F.round(
-                (F.col("adc_dot_grid") / float(PQ_GRID))
-                / (F.col("vnorm") * F.col("qnorm")),
-                6,
-            ),
-        )
-        .filter(F.col(id_col) != probe_id)
-    )
-    cands = scored.select(
-        id_col, *keep_cols, "adc_cosine", "q", "qnorm", "vnorm"
-    ).orderBy(F.desc("adc_cosine"), F.asc(id_col)).limit(rerank)
-    reranked = probe_src.select(id_col, vec_col).join(
-        F.broadcast(cands), id_col
-    )
-    return (
-        reranked.withColumn(
-            "cosine",
-            F.round(
-                (_grid_dot(F.col(vec_col), F.col("q")) / float(PQ_GRID))
-                / (F.col("vnorm") * F.col("qnorm")),
-                6,
-            ),
-        )
-        .select(id_col, *keep_cols, "adc_cosine", "cosine")
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+    return _pq_search(
+        probe_src,
+        _pq_cents_row(codebook),
+        probe_id,
+        k,
+        rerank,
+        dim=dim,
+        m=m,
+        id_col=id_col,
+        vec_col=vec_col,
+        keep_cols=keep_cols,
+        codes_rel=codes_rel,
     )
 
 
@@ -2262,14 +2076,14 @@ def pq_kmeans_topk(
     as a 1-row broadcast context. No driver loops — more Lloyd steps
     would unroll the same stage pattern.
 
-    The corpus RE-ENCODE + ADC scan against the trained codebook runs as
-    one Arrow block kernel that emits ``adc_dot_grid`` directly (exact
-    int64 distances for the argmin, first-min = smallest centroid id
-    over the cc-sorted codebook — trained codebooks may drop empty
-    clusters, so ids are sorted, not assumed contiguous; exact int64
-    q·centroid grid dots for the ADC terms). The stage-1 seed encode
-    rides :func:`pq_encode`'s kernel. Values bit-identical — oracle
-    unchanged.
+    Literally ``pq_search_codebook(df, pq_build_codebook(df, ...))``:
+    the stage-1 seed encode and the stage-3 re-encode + ADC scan are the
+    same Arrow kernel (:func:`_pq_scan`) over the seed and the trained
+    codebook — exact int64 distances for the argmin, first-min =
+    smallest centroid id over the cc-sorted codebook (trained codebooks
+    may drop empty clusters, so ids are sorted, not assumed
+    contiguous), exact int64 q·centroid grid dots for the ADC terms.
+    Values bit-identical — oracle unchanged.
     """
     codebook = pq_build_codebook(
         df,
@@ -2985,124 +2799,61 @@ def ivfpq_topk(
     Zero driver jobs: coarse seeds, codebook, probe, and the probe's cell
     list are all in-plan 1-row broadcast contexts.
 
-    The corpus coarse-cell assignment runs on :func:`gemm_assign_cells`
-    with the seed norms hoisted into the 1-row context (values
-    bit-identical, oracle unchanged). The post-route ADC/encode stages
-    only touch the probed n_probe/n_cells fraction, so they stay
-    in-plan.
+    The codes are :func:`pq_encode`'s (the seed-codebook encode kernel)
+    and the corpus coarse-cell assignment runs on
+    :func:`gemm_assign_cells` with the seed norms hoisted into the 1-row
+    context (values bit-identical, oracle unchanged). The post-route ADC
+    lookups only touch the probed n_probe/n_cells fraction, so they stay
+    in-plan; the tail is the shared :func:`_adc_rerank`.
     """
-    seeds_row = df.filter(F.col(id_col) < n_cells).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).cast("int").alias("cell_id"),
-                    F.col(vec_col).alias("semb"),
-                )
-            )
-        ).alias("cells")
+    sub = dim // m
+    seeds_row = _seeds_row(
+        _seed_cells(df, n_cells, id_col, vec_col), _grid_norm6
     )
-
-    def _cell_ranked(vec: Column, vnorm6: Column) -> Column:
-        """array<struct<negcos, cell_id>> sorted: cosine desc, id asc —
-        grid-exact cosine so the ranking is engine-independent."""
-        return F.array_sort(
-            F.transform(
-                F.col("cells"),
-                lambda c: F.struct(
-                    (
-                        -F.round(
-                            (_grid_dot(vec, c["semb"]) / float(PQ_GRID))
-                            / (vnorm6 * _grid_norm6(c["semb"])),
-                            6,
-                        )
-                    ).alias("negcos"),
-                    c["cell_id"].alias("cell_id"),
-                ),
-            )
-        )
-
     codes = pq_encode(
         df, n_centroids, m, dim=dim, id_col=id_col, vec_col=vec_col,
         keep_cols=keep_cols,
     )
-    sub = dim // m
-    cb_row = df.filter(F.col(id_col) < n_centroids).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).cast("int").alias("cid"),
-                    F.col(vec_col).alias("cemb"),
-                )
-            )
-        ).alias("cb")
-    ).select(
-        _assert_contiguous_ids(
-            F.col("cb"), "cid", n_centroids, "ivfpq_topk ADC table"
-        ).alias("cb")
-    )
-    probe_row = df.filter(F.col(id_col) == probe_id).select(
-        F.col(vec_col).alias("q"), _grid_norm6(F.col(vec_col)).alias("qnorm")
-    ).limit(1)  # provably 1-row broadcast context (see cosine_topk_by_id)
+    # the seed codebook context is s-major and id-sorted with asserted
+    # 0-based contiguous ids, so the flat probe table is indexed
+    # positionally by s · n_centroids + code
     ctx = (
-        probe_row.crossJoin(seeds_row)
-        .crossJoin(cb_row)
-        .withColumn(
-            "probe_cells",
+        _probe_row(df, probe_id, id_col, vec_col, _grid_norm6)
+        .crossJoin(seeds_row)
+        .crossJoin(
+            _pq_seed_cents(
+                df, n_centroids, m, dim, id_col, vec_col,
+                "ivfpq_topk ADC table",
+            )
+        )
+        .select(
+            "q",
+            "qnorm",
             F.slice(
-                F.transform(
-                    _cell_ranked(F.col("q"), F.col("qnorm")),
-                    lambda s: s["cell_id"],
-                ),
+                _ranked_cells(F.col("seeds"), F.col("q"), F.col("qnorm"), "grid"),
                 1,
                 n_probe,
-            ),
-        )
-        .withColumn(
-            "ptab",
+            ).alias("probe_cells"),
             F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.transform(
-                    F.col("cb"),
-                    lambda c: _grid_dot(
-                        F.slice(F.col("q"), s * sub + 1, sub),
-                        F.slice(c["cemb"], s * sub + 1, sub),
-                    ),
+                F.col("cents"),
+                lambda c: _grid_dot(
+                    F.slice(F.col("q"), c["cs"] * sub + 1, sub), c["cvec"]
                 ),
-            ),
-        )
-        .select("q", "qnorm", "cells", "probe_cells", "ptab")
-    )
-    base = df.select(id_col, vec_col).join(codes.select(id_col, "codes", "vnorm"), id_col)
-    seedsn_row = (
-        df.filter(F.col(id_col) < n_cells)
-        .select(
-            F.col(id_col).cast("int").alias("cell_id"),
-            F.col(vec_col).alias("semb"),
-        )
-        .withColumn("snorm", _grid_norm6(F.col("semb")))
-        .agg(
-            F.collect_list(
-                F.struct("cell_id", "semb", "snorm")
-            ).alias("seeds")
+            ).alias("ptab"),
         )
     )
     routed = (
         gemm_assign_cells(
-            base,
-            seedsn_row,
+            df.select(id_col, vec_col).join(codes, id_col),
+            seeds_row,
             id_col=id_col,
             vec_col=vec_col,
             nrm_col="vnorm",
             dot="grid",
-            extra_cols=("codes",),
+            extra_cols=("codes", *keep_cols),
         )
-        .crossJoin(
-            F.broadcast(ctx.select("q", "qnorm", "probe_cells", "ptab"))
-        )
-        .filter(
-            F.array_contains(F.col("probe_cells"), F.col("cell_id"))
-            & (F.col(id_col) != probe_id)
-        )
+        .crossJoin(F.broadcast(ctx))
+        .filter(F.array_contains(F.col("probe_cells"), F.col("cell_id")))
     )
     scored = routed.withColumn(
         "adc_dot_grid",
@@ -3110,34 +2861,13 @@ def ivfpq_topk(
             F.sequence(F.lit(0), F.lit(m - 1)),
             F.lit(0).cast("long"),
             lambda acc, s: acc
-            + F.get(F.get(F.col("ptab"), s), F.get(F.col("codes"), s)),
-        ),
-    ).withColumn(
-        "adc_cosine",
-        F.round(
-            (F.col("adc_dot_grid") / float(PQ_GRID))
-            / (F.col("vnorm") * F.col("qnorm")),
-            6,
-        ),
-    )
-    cands = scored.select(
-        id_col, "adc_cosine", "q", "qnorm", "vnorm"
-    ).orderBy(F.desc("adc_cosine"), F.asc(id_col)).limit(rerank)
-    reranked = df.select(id_col, *keep_cols, vec_col).join(
-        F.broadcast(cands), id_col
-    )
-    return (
-        reranked.withColumn(
-            "cosine",
-            F.round(
-                (_grid_dot(F.col(vec_col), F.col("q")) / float(PQ_GRID))
-                / (F.col("vnorm") * F.col("qnorm")),
-                6,
+            + F.get(
+                F.col("ptab"), s * n_centroids + F.get(F.col("codes"), s)
             ),
-        )
-        .select(id_col, *keep_cols, "adc_cosine", "cosine")
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+        ),
+    )
+    return _adc_rerank(
+        scored, df, probe_id, k, rerank, id_col, vec_col, keep_cols
     )
 
 
@@ -3954,55 +3684,48 @@ def ivfpq_residual_topk(
     query's oracle surface).
     """
     sub = dim // m
-    cells_row = df.filter(F.col(id_col) < n_cells).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).cast("int").alias("cell_id"),
-                    F.col(vec_col).alias("semb"),
-                )
-            )
-        ).alias("cells")
+    seeds_row = _seeds_row(
+        _seed_cells(df, n_cells, id_col, vec_col), _grid_norm6
     )
 
-    def _cell_ranked(vec: Column, vnorm6: Column) -> Column:
-        return F.array_sort(
-            F.transform(
-                F.col("cells"),
-                lambda c: F.struct(
-                    (
-                        -F.round(
-                            (_grid_dot(vec, c["semb"]) / float(PQ_GRID))
-                            / (vnorm6 * _grid_norm6(c["semb"])),
-                            6,
-                        )
-                    ).alias("negcos"),
-                    c["cell_id"].alias("cell_id"),
-                ),
-            )
+    def _cell_of(vec: Column) -> Column:
+        return F.element_at(
+            _ranked_cells(F.col("seeds"), vec, _grid_norm6(vec), "grid"), 1
         )
 
     def _residual(vec: Column, cell_id: Column) -> Column:
         cvec = F.element_at(
-            F.filter(F.col("cells"), lambda c: c["cell_id"] == cell_id), 1
+            F.filter(F.col("seeds"), lambda c: c["cell_id"] == cell_id), 1
         )["semb"]
         return F.zip_with(
             vec, cvec, lambda x, y: x.cast("double") - y.cast("double")
         )
 
+    def _code_at(rv: Column, s: Column) -> Column:
+        subr = F.slice(rv, s * sub + 1, sub)
+        ranked = F.array_sort(
+            F.transform(
+                F.col("rcb"),
+                lambda r: F.struct(
+                    _grid_sum(
+                        subr,
+                        F.slice(r["rv"], s * sub + 1, sub),
+                        lambda x, y: (x - y) * (x - y),
+                    ).alias("d2g"),
+                    r["cid"].alias("cid"),
+                ),
+            )
+        )
+        return F.element_at(ranked, 1)["cid"]
+
     # residual codebook: residuals of the first n_centroids vectors,
     # id-sorted and contiguity-asserted (positional ptab lookup below)
     rcb_row = (
         df.filter(F.col(id_col) < n_centroids)
-        .crossJoin(F.broadcast(cells_row))
+        .crossJoin(F.broadcast(seeds_row))
         .select(
             F.col(id_col).cast("int").alias("cid"),
-            _residual(
-                F.col(vec_col),
-                F.element_at(
-                    _cell_ranked(F.col(vec_col), _grid_norm6(F.col(vec_col))), 1
-                )["cell_id"],
-            ).alias("rv"),
+            _residual(F.col(vec_col), _cell_of(F.col(vec_col))).alias("rv"),
         )
         .agg(F.array_sort(F.collect_list(F.struct("cid", "rv"))).alias("rcb"))
         .select(
@@ -4022,42 +3745,16 @@ def ivfpq_residual_topk(
         #    1e-9 — deterministic); 3. reassemble full-dim codewords,
         #    seeded element as fallback where an (s, cid) cluster is
         #    empty. Two hash aggregates, same pattern as pq_kmeans_topk.
-        sub_l = sub
-
         allr = (
-            df.crossJoin(F.broadcast(cells_row.crossJoin(rcb_row)))
+            df.crossJoin(F.broadcast(seeds_row.crossJoin(rcb_row)))
             .withColumn(
-                "rv",
-                _residual(
-                    F.col(vec_col),
-                    F.element_at(
-                        _cell_ranked(
-                            F.col(vec_col), _grid_norm6(F.col(vec_col))
-                        ),
-                        1,
-                    )["cell_id"],
-                ),
+                "rv", _residual(F.col(vec_col), _cell_of(F.col(vec_col)))
             )
             .withColumn(
                 "codes0",
                 F.transform(
                     F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda s: F.element_at(
-                        F.array_sort(
-                            F.transform(
-                                F.col("rcb"),
-                                lambda r: F.struct(
-                                    _grid_sum(
-                                        F.slice(F.col("rv"), s * sub_l + 1, sub_l),
-                                        F.slice(r["rv"], s * sub_l + 1, sub_l),
-                                        lambda x, y: (x - y) * (x - y),
-                                    ).alias("d2g"),
-                                    r["cid"].alias("cid"),
-                                ),
-                            )
-                        ),
-                        1,
-                    )["cid"],
+                    lambda s: _code_at(F.col("rv"), s),
                 ),
             )
             .select(id_col, "rv", "codes0")
@@ -4066,10 +3763,10 @@ def ivfpq_residual_topk(
             F.posexplode("rv").alias("pos", "x"),
             F.col("codes0"),
         ).select(
-            (F.col("pos") / sub_l).cast("int").alias("s"),
+            (F.col("pos") / sub).cast("int").alias("s"),
             "pos",
             "x",
-            F.get(F.col("codes0"), (F.col("pos") / sub_l).cast("int")).alias(
+            F.get(F.col("codes0"), (F.col("pos") / sub).cast("int")).alias(
                 "cid"
             ),
         )
@@ -4088,7 +3785,7 @@ def ivfpq_residual_topk(
         ).select(
             F.col("r.cid").alias("cid"),
             F.posexplode("r.rv").alias("pos", "x0"),
-        ).withColumn("s", (F.col("pos") / sub_l).cast("int"))
+        ).withColumn("s", (F.col("pos") / sub).cast("int"))
         trained = (
             seeded_el.join(refined, ["s", "cid", "pos"], "left")
             .select(
@@ -4119,35 +3816,27 @@ def ivfpq_residual_topk(
                 ).alias("rcb")
             )
         )
-    probe_row = df.filter(F.col(id_col) == probe_id).select(
-        F.col(vec_col).alias("q"), _grid_norm6(F.col(vec_col)).alias("qnorm")
-    ).limit(1)
     ctx = (
-        probe_row.crossJoin(cells_row)
+        _probe_row(df, probe_id, id_col, vec_col, _grid_norm6)
+        .crossJoin(seeds_row)
         .crossJoin(rcb_row)
-        .withColumn(
-            "probe_cells",
+        .select(
+            "q",
+            "qnorm",
+            "seeds",
+            "rcb",
             F.slice(
-                F.transform(
-                    _cell_ranked(F.col("q"), F.col("qnorm")),
-                    lambda s: s["cell_id"],
-                ),
+                _ranked_cells(F.col("seeds"), F.col("q"), F.col("qnorm"), "grid"),
                 1,
                 n_probe,
-            ),
-        )
-        .withColumn(
-            "dqc",
+            ).alias("probe_cells"),
             F.transform(
-                F.col("cells"),
+                F.col("seeds"),
                 lambda c: F.struct(
                     c["cell_id"].alias("cell_id"),
                     _grid_dot(F.col("q"), c["semb"]).alias("dg"),
                 ),
-            ),
-        )
-        .withColumn(
-            "ptab",
+            ).alias("dqc"),
             F.transform(
                 F.sequence(F.lit(0), F.lit(m - 1)),
                 lambda s: F.transform(
@@ -4157,55 +3846,22 @@ def ivfpq_residual_topk(
                         F.slice(r["rv"], s * sub + 1, sub),
                     ),
                 ),
-            ),
-        )
-        .select("q", "qnorm", "cells", "rcb", "probe_cells", "dqc", "ptab")
-    )
-
-    def _code_at(rv: Column, s: Column) -> Column:
-        subr = F.slice(rv, s * sub + 1, sub)
-        ranked = F.array_sort(
-            F.transform(
-                F.col("rcb"),
-                lambda r: F.struct(
-                    _grid_sum(
-                        subr,
-                        F.slice(r["rv"], s * sub + 1, sub),
-                        lambda x, y: (x - y) * (x - y),
-                    ).alias("d2g"),
-                    r["cid"].alias("cid"),
-                ),
-            )
-        )
-        return F.element_at(ranked, 1)["cid"]
-
-    seedsn_row = (
-        df.filter(F.col(id_col) < n_cells)
-        .select(
-            F.col(id_col).cast("int").alias("cell_id"),
-            F.col(vec_col).alias("semb"),
-        )
-        .withColumn("snorm", _grid_norm6(F.col("semb")))
-        .agg(
-            F.collect_list(
-                F.struct("cell_id", "semb", "snorm")
-            ).alias("seeds")
+            ).alias("ptab"),
         )
     )
+
     routed = (
         gemm_assign_cells(
             df.withColumn("vnorm", _grid_norm6(F.col(vec_col))),
-            seedsn_row,
+            seeds_row,
             id_col=id_col,
             vec_col=vec_col,
             nrm_col="vnorm",
             dot="grid",
+            extra_cols=tuple(keep_cols),
         )
         .crossJoin(F.broadcast(ctx))
-        .filter(
-            F.array_contains(F.col("probe_cells"), F.col("cell_id"))
-            & (F.col(id_col) != probe_id)
-        )
+        .filter(F.array_contains(F.col("probe_cells"), F.col("cell_id")))
         .withColumn("rv", _residual(F.col(vec_col), F.col("cell_id")))
     )
     scored = routed.withColumn(
@@ -4220,32 +3876,9 @@ def ivfpq_residual_topk(
             lambda acc, s: acc
             + F.get(F.get(F.col("ptab"), s), _code_at(F.col("rv"), s)),
         ),
-    ).withColumn(
-        "adc_cosine",
-        F.round(
-            (F.col("adc_dot_grid") / float(PQ_GRID))
-            / (F.col("vnorm") * F.col("qnorm")),
-            6,
-        ),
     )
-    cands = scored.select(
-        id_col, "adc_cosine", "q", "qnorm", "vnorm"
-    ).orderBy(F.desc("adc_cosine"), F.asc(id_col)).limit(rerank)
-    reranked = df.select(id_col, *keep_cols, vec_col).join(
-        F.broadcast(cands), id_col
-    )
-    return (
-        reranked.withColumn(
-            "cosine",
-            F.round(
-                (_grid_dot(F.col(vec_col), F.col("q")) / float(PQ_GRID))
-                / (F.col("vnorm") * F.col("qnorm")),
-                6,
-            ),
-        )
-        .select(id_col, *keep_cols, "adc_cosine", "cosine")
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+    return _adc_rerank(
+        scored, df, probe_id, k, rerank, id_col, vec_col, keep_cols
     )
 
 

@@ -9,6 +9,7 @@ rounding grid both sides share.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 
@@ -326,6 +327,28 @@ def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
 _IVF_INDEX_NAME = "ivf_c8_lloyd1"
 
 
+@functools.cache
+def _engine_digest() -> str:
+    """sha256 over the engine's own source — the relative path and bytes
+    of every ``.py`` file of the ``ppdb_parser_spark`` package, computed
+    once per process. Both index loaders stamp it next to the artifact
+    and rebuild on a mismatch, so an index is never served by code other
+    than the code that built it (an edited builder invalidates every
+    persisted artifact — coarse, but never stale, and nothing to bump by
+    hand)."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    h = hashlib.sha256()
+    for dirpath, dirnames, filenames in os.walk(pkg):
+        dirnames.sort()
+        for fn in sorted(filenames):
+            if fn.endswith(".py"):
+                p = os.path.join(dirpath, fn)
+                h.update(os.path.relpath(p, pkg).encode() + b"\0")
+                with open(p, "rb") as fh:
+                    h.update(fh.read())
+    return h.hexdigest()
+
+
 def _read_meta(meta_path: str):
     """The 1-row meta stamp, read DRIVER-SIDE via pyarrow — control-plane
     work at plan-build time, exactly like the parquet-footer row counts
@@ -349,10 +372,11 @@ def _load_persisted_index(
     spark, corpus, path, build, force=False, fingerprint="", n_corpus=None
 ):
     """Load a persisted index relation, (re)building it when absent OR
-    STALE. Freshness contract: the corpus row count AND a source-file
+    STALE. Freshness contract: the corpus row count, a source-file
     content fingerprint (``_source_fingerprint`` — sizes + mtimes, no
-    data scan) are stamped next to the artifact at build time
-    (``<path>_meta``) and re-checked on every load. The count over
+    data scan) and the engine source digest (:func:`_engine_digest`)
+    are stamped next to the artifact at build time (``<path>_meta``)
+    and re-checked on every load. The count over
     parquet is answered from footer metadata, so the guard costs one
     metadata job at any corpus scale; the fingerprint catches a
     regenerated dataset whose row count happens to match (ADVICE r13).
@@ -379,6 +403,7 @@ def _load_persisted_index(
             # older stamps lack the column; treat them as stale once
             or ("fingerprint" not in meta)
             or meta["fingerprint"] != fingerprint
+            or meta.get("engine") != _engine_digest()
         )
     if stale:
         build().write.mode("overwrite").parquet(path)
@@ -386,6 +411,7 @@ def _load_persisted_index(
         spark.range(1).select(
             F.lit(n_corpus).cast("long").alias("n_corpus"),
             F.lit(fingerprint).alias("fingerprint"),
+            F.lit(_engine_digest()).alias("engine"),
         ).coalesce(1).write.mode("overwrite").parquet(meta_path)
     return spark.read.parquet(path)
 
@@ -427,8 +453,9 @@ def _load_appended_index(
 
     States on load: fresh (fingerprint match, mark == ``max_id``) →
     read-only load; behind (fingerprint match, mark < ``max_id``) →
-    ``build_delta(mark + 1)`` and advance; absent or foreign fingerprint
-    → ``build_base()`` then the delta. The fingerprint covers the whole
+    ``build_delta(mark + 1)`` and advance; absent, foreign fingerprint
+    or another engine digest (:func:`_engine_digest`) → ``build_base()``
+    then the delta. The fingerprint covers the whole
     source table here (static fixtures); on a real append-only lake it
     would cover only the base snapshot's files, which appends leave
     untouched.
@@ -451,6 +478,7 @@ def _load_appended_index(
             meta is not None
             and "fingerprint" in meta
             and meta["fingerprint"] == fingerprint
+            and meta.get("engine") == _engine_digest()
             and "max_id" in meta
         ):
             mark = meta["max_id"]
@@ -461,6 +489,7 @@ def _load_appended_index(
         # stamp (measured r14); the JVM-side literal row writes in ~0.3 s
         spark.range(1).select(
             F.lit(fingerprint).alias("fingerprint"),
+            F.lit(_engine_digest()).alias("engine"),
             F.lit(new_mark).cast("long").alias("max_id"),
         ).coalesce(1).write.mode("overwrite").parquet(meta_path)
 

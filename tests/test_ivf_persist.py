@@ -11,6 +11,7 @@ from ppdb_parser_spark.operators.similarity import (
     ivf_build_centroids,
     ivf_kmeans_topk,
     ivf_search_centroids,
+    ivf_topk,
 )
 from ppdb_parser_spark.sources.tables import load_table
 
@@ -37,6 +38,21 @@ def test_split_composition_equals_kmeans_topk(spark):
     )
     assert _rows(composed) == _rows(
         ivf_kmeans_topk(e, n_cells=8, probe_id=1, n_probe=2, k=5)
+    )
+
+
+def test_seeded_ivf_is_search_over_seed_centroids(spark):
+    """ivf_topk is ivf_search_centroids over the seed index: the vectors
+    with id < n_cells as the centroid relation."""
+    from pyspark.sql import functions as F
+
+    e = load_table(spark, SF, "embeddings")
+    seeds = e.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").cast("int").alias("cell_id"),
+        F.col("embedding").alias("semb"),
+    )
+    assert _rows(ivf_topk(e, n_cells=8, probe_id=3)) == _rows(
+        ivf_search_centroids(e, seeds, probe_id=3)
     )
 
 
@@ -110,6 +126,50 @@ def test_persisted_index_fingerprint_guard(spark, tmp_path):
     # same count, new fingerprint (dataset regenerated in place) -> rebuild
     _load_persisted_index(spark, e, path, build, fingerprint="fp-v2")
     assert len(builds) == 2
+
+
+def test_index_rebuilds_when_engine_source_changes(spark, tmp_path, monkeypatch):
+    """Same corpus, same fingerprint, different engine source → both
+    loaders must rebuild: an index built by older code is never served
+    by newer code (the engine digest is stamped beside the artifact)."""
+    from pyspark.sql import functions as F
+
+    import ppdb_parser_spark.queries.similarity as SQ
+
+    e = load_table(spark, SF, "embeddings")
+    n_max = e.agg(F.max("vec_id")).first()[0]
+    builds = []
+
+    def build():
+        builds.append("persisted")
+        return e.select("vec_id")
+
+    def build_base():
+        builds.append("base")
+        return e.filter(F.col("vec_id") < 400).select("vec_id")
+
+    def load_both():
+        SQ._load_persisted_index(
+            spark, e, os.path.join(str(tmp_path), "p"), build, fingerprint="fp"
+        )
+        return SQ._load_appended_index(
+            spark,
+            os.path.join(str(tmp_path), "a"),
+            "fp",
+            400,
+            n_max,
+            build_base,
+            lambda lo: e.filter(F.col("vec_id") >= lo).select("vec_id"),
+        )
+
+    load_both()
+    assert builds == ["persisted", "base"]
+    load_both()
+    assert builds == ["persisted", "base"]
+    monkeypatch.setattr(SQ, "_engine_digest", lambda: "edited-engine")
+    appended = load_both()
+    assert builds == ["persisted", "base"] * 2
+    assert appended.count() == e.count()
 
 
 def test_index_dir_distinguishes_same_basename():

@@ -1371,6 +1371,8 @@ def test_pq_codebook_contiguity_assert_fires(spark, sf_dir):
     with pytest.raises(Exception, match="0-based"):
         SIM.pq_encode(e, n_centroids=16, m=8, dim=64).collect()
     with pytest.raises(Exception, match="0-based"):
+        SIM.pq_topk(e, probe_id=1, dim=64).collect()
+    with pytest.raises(Exception, match="0-based"):
         SIM.ivfpq_topk(e, probe_id=1, dim=64).collect()
     with pytest.raises(Exception, match="0-based"):
         SIM.ivfpq_residual_topk(e, probe_id=1, dim=64).collect()
@@ -2624,6 +2626,56 @@ def test_pq_encode_gemm_equals_hof(spark, sf_dir, tmp_path):
     )
     salted = emb.select("vec_id", "label", "embedding").unionByName(dupes)
     _oracle_check_salted(spark, sf_dir, tmp_path, salted, ("sim_pq_encode",))
+
+
+def test_pq_argmin_chunk_invariant(spark, sf_dir, monkeypatch):
+    """The PQ nearest-centroid argmin bounds its distance tensor at
+    ``PQ_ARGMIN_CHUNK`` elements. A chunk of 1000 elements (7 rows of
+    16 centroids x 8 dims) splits every block mid-way; the codes and the
+    ADC ints must equal the default run's, and the chunked numpy argmin
+    must equal the unchunked one, integer ties included."""
+    import numpy as np
+
+    from ppdb_parser_spark.operators import similarity as SIM
+    from ppdb_parser_spark.sources.tables import load_table
+
+    rng = np.random.default_rng(7)
+    C = rng.integers(-3, 4, size=(16, 8)) / 4.0
+    Qs = np.vstack([C[[5, 5, 2]], rng.integers(-3, 4, size=(40, 8)) / 4.0])
+    full = np.argmin(
+        _round_half_away(((Qs[:, None, :] - C[None]) ** 2) * 1e9).sum(axis=2),
+        axis=1,
+    )
+    for chunk in (1, 129, 1000, SIM.PQ_ARGMIN_CHUNK):
+        assert (SIM._np_pq_argmin(Qs, C, chunk) == full).all()
+
+    e = load_table(spark, sf_dir, "embeddings")
+
+    def run():
+        codes = {
+            r.vec_id: list(r.codes)
+            for r in SIM.pq_encode(e, 16, 8, dim=64).collect()
+        }
+        ctx = SIM._probe_row(
+            e, 1, "vec_id", "embedding", SIM._grid_norm6
+        ).crossJoin(
+            SIM._pq_seed_cents(e, 16, 8, 64, "vec_id", "embedding", "chunk")
+        )
+        adc = SIM._pq_scan(
+            e.select("vec_id", "embedding"),
+            ctx,
+            src_col="embedding",
+            out_col="adc_dot_grid",
+            out_cols=["vec_id", "adc_dot_grid"],
+            m=8,
+            sub=8,
+            id_col="vec_id",
+        )
+        return codes, {r.vec_id: r.adc_dot_grid for r in adc.collect()}
+
+    want = run()
+    monkeypatch.setattr(SIM, "PQ_ARGMIN_CHUNK", 1000)
+    assert run() == want
 
 
 def test_lsh_sig_gemm_equals_hof(spark, sf_dir, tmp_path):

@@ -6,10 +6,15 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import functions as F
+
 from ppdb_parser_spark.operators.similarity import (
     pq_build_codebook,
+    pq_codes_from_codebook,
+    pq_encode,
     pq_kmeans_topk,
     pq_search_codebook,
+    pq_topk,
 )
 from ppdb_parser_spark.sources.tables import load_table
 
@@ -60,3 +65,24 @@ def test_persisted_search_equals_fresh(spark, tmp_path):
     )
     assert _rows(persisted) == _rows(fresh)
     assert len(persisted.collect()) == 10
+
+
+def test_seeded_pq_is_search_over_seed_codebook(spark):
+    """pq_encode and pq_topk are the codebook encode and search over the
+    SEED codebook: centroid c of subspace s is slice s of vector c."""
+    e = load_table(spark, SF, "embeddings")
+    seed_cb = (
+        e.filter(F.col("vec_id") < 16)
+        .crossJoin(spark.range(8).select(F.col("id").cast("int").alias("s")))
+        .select(
+            "s",
+            F.col("vec_id").cast("int").alias("c"),
+            F.slice("embedding", F.col("s") * 8 + 1, F.lit(8)).alias("cvec"),
+        )
+    )
+    assert _rows(pq_encode(e, 16, 8, dim=64)) == _rows(
+        pq_codes_from_codebook(e, seed_cb, dim=64, m=8)
+    )
+    assert _rows(pq_topk(e, probe_id=3, dim=64)) == _rows(
+        pq_search_codebook(e, seed_cb, probe_id=3, dim=64, m=8)
+    )
